@@ -8,12 +8,12 @@ split -> schedule -> post). Here:
   bucket boundary and a chunk boundary, so per-day processing is exact);
   at cluster scale the day filter is a partition-pruned scan of the
   Iceberg/parquet `date(ts)` layout.
-- "schedule" = Spark's scheduler; per unit the tier cascade runs over ONE
-  colocating shuffle on hash(conv_id) (every (conv_id, bucket) grouping is
-  then exchange-free — plans.partitioning.colocate_by_series), the chunk
-  encode keeps its own column-pruned arrange shuffle, and every write
-  action runs on a background thread so driver-serial segments (planning,
-  commit, stragglers) overlap the next stage's parallel compute.
+- "schedule" = Spark's scheduler; per batch ALL tiers come from one plan
+  over ONE colocating shuffle on hash(conv_id) (operators.rollup.rollup_tiers:
+  the 1m aggregate and the all-tier merge are then exchange-free —
+  plans.partitioning.colocate_by_series) and land in ONE partitionBy(tier,
+  date) write; the chunk encode keeps its own column-pruned arrange shuffle
+  and writes on a second thread, so the two write actions overlap.
 - "failover" = the manifest: a rerun skips 'done' units and rewrites only
   its own partitions (dynamic partition overwrite -> idempotent).
 - "metrics" = per-unit rows_read / chunks_encoded / bytes_raw /
@@ -23,19 +23,21 @@ split -> schedule -> post). Here:
 
 from __future__ import annotations
 
+import datetime as _dt
+import os
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .manifest import Manifest, UnitMetrics
-from .operators.rollup import rollup_cascade_step, rollup_from_raw
 from .operators.bucketize import TIER_ORDER
 from .operators.gorilla import encode_chunks
-
-from .plans.partitioning import colocate_by_series, partitions_for_bytes
+from .operators.rollup import rollup_tiers
+from .plans.partitioning import colocate_by_series
 
 #: writer-task fan-out per (tier, date) output cell (files per dir bound)
 _WRITE_SALT = 8
@@ -48,15 +50,6 @@ class RollupJobSpec:
     tiers: list[str] = field(default_factory=lambda: list(TIER_ORDER))
     chunk_tier: str = "1d"
     job_id: str = ""
-    # colocate=True pre-shuffles FULL raw rows once and CACHES them so every
-    # tier + the chunk encode read one shared exchange. Measured at 6M turns
-    # / local[8]: the raw-row cache materialization costs MORE (50s) than
-    # per-consumer pruned shuffles — and caching raw is impossible at 100 TB.
-    # Default False; the TIER CASCADE still gets an uncached conv_id
-    # repartition (cheap: replaces the 1m agg's own exchange and makes every
-    # cascade step exchange-free), while the chunk encode keeps its own
-    # column-pruned arrange shuffle. True remains for small hot slices.
-    colocate: bool = False
     n_partitions: int | None = None
     value_expr: str = "length(text)"
     order_cols: tuple[str, ...] = ("ts", "turn_idx")
@@ -68,10 +61,10 @@ class RollupJobSpec:
     # salted_writes=True restores the pre-r5 (date, conv-salt) repartition
     # before every partitionBy write: bounds files/dir at _WRITE_SALT and
     # keeps write tasks fine-grained, at the cost of a full extra shuffle
-    # per tier — for the 1m tier that shuffle carries last_text, i.e.
+    # per write — for the tier write that shuffle carries last_text, i.e.
     # ~raw-sized bytes. False writes straight from the conv_id-clustered
-    # cascade/arrange output (the dynamic-partition writer sorts by date
-    # per task): files/dir = n_parts per date.
+    # tier/arrange output (the dynamic-partition writer sorts by its
+    # partition columns per task): files/dir = n_parts per date.
     #
     # Default None = AUTO (r6, VERDICT r5 item 2): salted when scheduler
     # parallelism >= SPARK_GRAFT_SALTED_MIN_CORES (default 16). The r5
@@ -118,8 +111,8 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
     """Execute (or resume) a rollup job; returns the metrics summary.
 
     The summary carries a ``phases`` dict of accumulated per-phase driver
-    wall seconds (discover / tier counts / writer join / metrics / manifest)
-    — the reference's PerfRecord phase accounting (PerfRecord.java:162-180)
+    wall seconds (discover / manifest resume / writer join / metrics /
+    manifest summary) — the reference's PerfRecord phase accounting (PerfRecord.java:162-180)
     re-expressed, and the tool for attributing the per-job fixed term that
     caps N->4N scaling efficiency."""
     ph: dict[str, float] = {}
@@ -143,8 +136,6 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
     t_ph = time.time()
     part_days = list_date_partitions(spark, spec.input_path)
     if part_days is not None:
-        import datetime as _dt
-
         days = part_days
         # typed date literals: ANSI mode forbids implicit string<->date in
         # In(); typed literals also keep the predicate partition-prunable
@@ -169,142 +160,74 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
     batches = [
         pending[i : i + spec.unit_batch] for i in range(0, len(pending), spec.unit_batch)
     ]
+    # partitionOverwriteMode pinned PER WRITE: with a user-supplied session
+    # (default static) a batch overwrite would wipe ALL previously written
+    # partitions and a resume would delete completed days' output.
+    #
+    # No repartition before partitionBy by default: both writer inputs (the
+    # all-tier table, the arranged chunk table) are ALREADY
+    # hash(conv_id)-clustered, so the dynamic-partition writer's implicit
+    # per-task sort fans each (tier, date) cell across ALL n_parts tasks and
+    # no extra shuffle is paid (for the tiers it would carry last_text, i.e.
+    # ~raw-sized bytes). Cost: files/dir = n_parts per date; salted writes
+    # restore the bounded fan-in of _WRITE_SALT files per dir.
+    wsalt = F.pmod(F.xxhash64("conv_id"), F.lit(_WRITE_SALT))
+    if spec.salted_writes is None:
+        min_cores = int(os.environ.get("SPARK_GRAFT_SALTED_MIN_CORES", "16"))
+        salted = spark.sparkContext.defaultParallelism >= min_cores
+    else:
+        salted = spec.salted_writes
+
+    def _write_partitioned(df: DataFrame, ts_col: str, path: str, *parts: str) -> None:
+        out = df.withColumn("date", F.to_date(ts_col))
+        parts = (*parts, "date")
+        if salted:
+            out = out.repartition(*[F.col(c) for c in parts], wsalt)
+        out.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(*parts).parquet(path)
+
     for batch in batches:
         t0 = time.time()
         sl = raw.filter(day_filter(batch))
-        cached_raw = False
-        if spec.colocate:
-            sl = colocate_by_series(sl, n_parts).cache()
-            cached_raw = True
-
-        # Writer-thread pool: every write action runs on a background thread
-        # so its serial segments (driver planning, output commit, straggler
-        # tail) overlap the next stage's parallel compute. Measured at 6M
-        # turns (BENCH.md r3): batch wall 63 -> 35 s at local[8], and the
-        # fitted per-job fixed term drops ~20 -> ~11 s, which is what moves
-        # the N->4N scaling efficiency.
-        import threading
-
-        write_errors: list[BaseException] = []
-        writers: list[threading.Thread] = []
-
-        def _spawn(fn):
-            def g():
-                try:
-                    fn()
-                except BaseException as e:  # noqa: BLE001 — re-raised after join
-                    write_errors.append(e)
-
-            th = threading.Thread(target=g, daemon=True)
-            th.start()
-            writers.append(th)
-
-        # partitionOverwriteMode pinned PER WRITE: with a user-supplied
-        # session (default static) a batch overwrite would wipe ALL
-        # previously written partitions and a resume would delete completed
-        # days' output.
-        #
-        # No repartition before partitionBy: every writer input here (tier
-        # cascade output, arranged chunk table) is ALREADY hash(conv_id)-
-        # clustered, so the dynamic-partition writer's implicit per-task sort
-        # on `date` fans each (tier, date) cell across ALL n_parts tasks —
-        # strictly more write parallelism than the old (date, salt)
-        # repartition, and it deletes a full extra shuffle per tier (for the
-        # 1m tier that shuffle carried last_text, i.e. ~raw-sized bytes;
-        # measured the largest single scaling cost in the r5 phase profile).
-        # Cost: files/dir = n_parts per date instead of _WRITE_SALT; callers
-        # that need few-big-files (small coarse tiers at modest scale) can
-        # pass salted=True to restore the bounded fan-in.
-        wsalt = F.pmod(F.xxhash64("conv_id"), F.lit(_WRITE_SALT))
-        if spec.salted_writes is None:
-            import os as _os
-
-            min_cores = int(_os.environ.get("SPARK_GRAFT_SALTED_MIN_CORES", "16"))
-            salted = spark.sparkContext.defaultParallelism >= min_cores
-        else:
-            salted = spec.salted_writes
-
-        def _write_partitioned(df: DataFrame, part_col: str, path: str) -> None:
-            out = df.withColumn("date", F.to_date(part_col))
-            if salted:
-                out = out.repartition(F.col("date"), wsalt)
-            out.write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("date").parquet(path)
-
-        cached_tiers: list[DataFrame] = []
-        chunks: DataFrame | None = None
         try:
-            if cached_raw:
-                # materialize the shared colocated cache BEFORE the chunk
-                # write thread and the cascade race it (unmaterialized-cache
-                # race duplicates the colocating shuffle)
-                t_ph = time.time()
-                sl.count()
-                _ph("colocate_cache", t_ph)
-            # chunk pipeline first and on its own thread: the Python-worker
-            # encode overlaps the JVM-side tier aggregates. NOT cached — the
-            # write thread is its only consumer (per-day metrics are read
-            # back from the written files, a partition-pruned scan of a
-            # ~12x-compressed table), so the encode streams straight into
-            # the writer with no columnar-cache materialization.
+            # chunk pipeline: the Python-worker encode streams straight into
+            # its writer (per-day metrics are read back from the written
+            # files, a partition-pruned scan of a ~2x-compressed table)
             chunks = encode_chunks(
                 sl,
                 value=F.expr(spec.value_expr).cast("double"),
                 chunk_tier=spec.chunk_tier,
                 order_cols=list(spec.order_cols),
             )
-            _spawn(lambda: _write_partitioned(chunks, "chunk_start", f"{spec.output_root}/chunks"))
-
-            # Tier cascade over a conv-colocated input: ONE shuffle on
-            # hash(conv_id), after which the 1m aggregation AND every cascade
-            # step satisfy their (conv_id, bucket) clustered distribution
-            # without further exchanges (plans.partitioning.colocate_by_series;
-            # exchange-free plan asserted in tests/test_rollup_parity.py).
-            # Each tier is cached and MATERIALIZED (count) before the next
-            # derives from it and before its write thread starts — the cached
-            # subtree must be the exact plan both consumers reference, and
-            # racing an unmaterialized cache duplicates the upstream compute
-            # (measured +25% at local[2]).
-            from .operators.rollup import rollup_cascade_step, rollup_from_raw
-
-            slc = sl if spec.colocate else sl.repartition(n_parts, "conv_id")
-            cur: DataFrame | None = None
-            for i, t in enumerate(spec.tiers):
-                cur = (
-                    rollup_from_raw(slc, t, value=F.expr(spec.value_expr))
-                    if cur is None
-                    else rollup_cascade_step(cur, t)
-                )
-                if i + 1 < len(spec.tiers):
-                    # two consumers (write thread + next cascade step):
-                    # cache and MATERIALIZE before either touches it
-                    cur = cur.cache()
-                    t_ph = time.time()
-                    cur.count()
-                    _ph(f"tier_{t}_count", t_ph)
-                    cached_tiers.append(cur)
-                # LAST tier: the write thread is the only consumer — no
-                # cache/count driver action; the thread computes the (narrow,
-                # exchange-free) final cascade step from the cached parent
-                _spawn(
-                    lambda df=cur, t=t: _write_partitioned(
-                        df, "bucket_start", f"{spec.output_root}/tiers/tier={t}"
-                    )
-                )
-            t_ph = time.time()
-            for th in writers:
-                th.join()
+            # every tier from one plan over ONE shuffle on hash(conv_id): the
+            # 1m aggregate and the all-tier merge are exchange-free above it
+            # (plan-asserted in tests/test_rollup_parity.py), and coarser
+            # tiers merge 1m partials, never raw rows
+            tiers = rollup_tiers(
+                colocate_by_series(sl, n_parts), spec.tiers, value=F.expr(spec.value_expr)
+            )
+            # the two write actions run on writer threads so each one's
+            # serial segments (driver planning, output commit, straggler
+            # tail) overlap the other's parallel compute. Leaving the pool
+            # joins both, so a failed write never leaves the other one
+            # running to race a retry committing into the same directories.
+            with ThreadPoolExecutor(max_workers=2) as pool:
+                writes = [
+                    pool.submit(_write_partitioned, chunks, "chunk_start",
+                                f"{spec.output_root}/chunks"),
+                    pool.submit(_write_partitioned, tiers, "bucket_start",
+                                f"{spec.output_root}/tiers", "tier"),
+                ]
+                t_ph = time.time()
             _ph("writers_join", t_ph)
-            if write_errors:
-                raise write_errors[0]
+            for w in writes:
+                w.result()
             # per-day lineage metrics from the WRITTEN chunk table (tiny:
-            # ~12x-compressed blobs + stats columns), partition-pruned to
+            # ~2x-compressed blobs + stats columns), partition-pruned to
             # this batch's dates — avoids caching the encode output just to
             # re-aggregate it
             t_ph = time.time()
-            import datetime as _dt
-
             # explicit schema: an all-empty batch (zero chunks encoded)
             # leaves the chunks dir with no parquet files, and schema
             # inference would fail where an empty frame is the right answer
@@ -343,16 +266,6 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
             for day in batch:
                 man.mark_failed(day)
             raise
-        finally:
-            # ALWAYS drain the writer threads — on the failure path too:
-            # leaving daemon writers running would race a retry/resume run
-            # committing into the same output directories
-            for th in writers:
-                th.join()
-            for c in cached_tiers:
-                c.unpersist()
-            if cached_raw:
-                sl.unpersist()
 
     t_ph = time.time()
     summary = man.metrics_summary()

@@ -11,7 +11,9 @@ become explicit metric columns per work unit.
 
 Storage: an append-only parquet directory of manifest rows (atomic at the
 file level — each commit writes one new file; latest status per key wins by
-committed_at). On a cluster with an Iceberg catalog the same rows go to an
+committed_at), with the schema of schema.MANIFEST. Resume and summary
+reads go straight to those few small files with pyarrow, so they cost no
+Spark job. On a cluster with an Iceberg catalog the same rows go to an
 Iceberg table via MERGE; the protocol is identical.
 """
 
@@ -23,10 +25,17 @@ import uuid
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import SparkSession
 
-from .schema import MANIFEST
+_METRICS = ("rows_read", "chunks_encoded", "bytes_raw", "bytes_compressed")
+#: arrow rendering of schema.MANIFEST
+_SCHEMA = pa.schema(
+    [("job_id", pa.string()), ("partition_key", pa.string()), ("status", pa.string())]
+    + [(k, pa.int64()) for k in _METRICS]
+    + [("wall_s", pa.float64()), ("committed_at", pa.timestamp("us"))]
+)
 
 
 @dataclass
@@ -89,43 +98,22 @@ class Manifest:
     def mark_failed(self, partition_key: str) -> None:
         self._append([{"partition_key": partition_key, "status": "failed"}])
 
-    def read(self) -> DataFrame:
-        if not any(f.endswith(".parquet") for f in os.listdir(self.path)):
-            return self.spark.createDataFrame([], MANIFEST)
-        return self.spark.read.schema(MANIFEST).parquet(self.path)
+    def _latest(self) -> pd.DataFrame:
+        """This job's rows, latest status per partition_key (by committed_at;
+        ties go to the later commit file). The manifest is a handful of
+        small files, so it is read directly with pyarrow — no Spark job."""
+        # an explicit schema: a 'failed' commit's metric columns are
+        # all-null in its file and are read as the 'done' commits' types
+        df = pq.read_table(self.path, schema=_SCHEMA).to_pandas()
+        df = df[df["job_id"] == self.job_id].sort_values("committed_at", kind="stable")
+        return df.drop_duplicates("partition_key", keep="last")
 
     def done_keys(self) -> set[str]:
         """Latest-status-wins set of completed partition keys for this job."""
-        df = self.read().filter(F.col("job_id") == self.job_id)
-        rows = (
-            df.groupBy("partition_key")
-            .agg(F.max_by("status", "committed_at").alias("status"))
-            .filter(F.col("status") == "done")
-            .collect()
-        )
-        return {r.partition_key for r in rows}
-
-    def filter_pending(self, df: DataFrame, key_col) -> DataFrame:
-        """Resume filter: drop rows whose work unit already committed.
-
-        For small done-sets this is an IN-list (driver-side, broadcastable);
-        the general form is a left-anti join against the manifest — both
-        prune before any heavy compute (the anti-join side is tiny: one row
-        per work unit, always broadcast)."""
-        done = self.done_keys()
-        if not done:
-            return df
-        return df.filter(~key_col.isin(*done))
+        df = self._latest()
+        return set(df.loc[df["status"] == "done", "partition_key"])
 
     def metrics_summary(self) -> dict:
-        df = self.read().filter(
-            (F.col("job_id") == self.job_id) & (F.col("status") == "done")
-        )
-        row = df.agg(
-            F.count("*").alias("units"),
-            F.sum("rows_read").alias("rows_read"),
-            F.sum("chunks_encoded").alias("chunks_encoded"),
-            F.sum("bytes_raw").alias("bytes_raw"),
-            F.sum("bytes_compressed").alias("bytes_compressed"),
-        ).collect()[0]
-        return {k: (row[k] or 0) for k in row.asDict()}
+        df = self._latest()
+        done = df[df["status"] == "done"]
+        return {"units": len(done), **{k: int(done[k].sum()) for k in _METRICS}}

@@ -74,36 +74,79 @@ def rollup_from_raw(
             F.max_by(F.col("turn_idx"), ord_key).alias("last_turn_idx"),
             F.max_by(F.col("text"), ord_key).alias("last_text"),
         )
-        .withColumn("avg_len", F.col("sum_len").cast("double") / F.col("turn_count"))
     )
-    return out.select(*_cols(key))
+    return _with_avg(out).select(*_cols(key))
+
+
+def _merge_aggs() -> list[Column]:
+    """Partial/final merge of tier rows: count/sum -> sum of partials;
+    min/max -> min/max of partials; last -> max_by on (last_ts,
+    last_turn_idx). avg is rederived from the merged sums by the caller."""
+    ord_key = F.struct(F.col("last_ts"), F.col("last_turn_idx"))
+    return [
+        F.sum("turn_count").alias("turn_count"),
+        F.sum("sum_len").alias("sum_len"),
+        F.min("min_len").alias("min_len"),
+        F.max("max_len").alias("max_len"),
+        F.max_by(F.col("last_ts"), ord_key).alias("last_ts"),
+        F.max_by(F.col("last_turn_idx"), ord_key).alias("last_turn_idx"),
+        F.max_by(F.col("last_text"), ord_key).alias("last_text"),
+    ]
+
+
+def _with_avg(df: DataFrame) -> DataFrame:
+    return df.withColumn("avg_len", F.col("sum_len").cast("double") / F.col("turn_count"))
 
 
 def rollup_cascade_step(lower: DataFrame, tier: str, key: str = "conv_id") -> DataFrame:
     """Exact re-aggregation of a coarser tier from the next finer tier table.
 
-    count/sum -> sum of partials; min/max -> min/max of partials; last ->
-    max_by on (last_ts, last_turn_idx); avg rederived from merged sums.
-    This is the classic partial/final agg merge — at 100 TB the 5m/1h/1d
-    tiers never touch raw data again.
+    The classic partial/final agg merge (:func:`_merge_aggs`) — at 100 TB
+    the 5m/1h/1d tiers never touch raw data again.
     """
-    ord_key = F.struct(F.col("last_ts"), F.col("last_turn_idx"))
     out = (
         lower.withColumn("bucket_start2", bucket_start("bucket_start", tier))
         .groupBy(key, "bucket_start2")
-        .agg(
-            F.sum("turn_count").alias("turn_count"),
-            F.sum("sum_len").alias("sum_len"),
-            F.min("min_len").alias("min_len"),
-            F.max("max_len").alias("max_len"),
-            F.max_by(F.col("last_ts"), ord_key).alias("last_ts"),
-            F.max_by(F.col("last_turn_idx"), ord_key).alias("last_turn_idx"),
-            F.max_by(F.col("last_text"), ord_key).alias("last_text"),
-        )
+        .agg(*_merge_aggs())
         .withColumnRenamed("bucket_start2", "bucket_start")
-        .withColumn("avg_len", F.col("sum_len").cast("double") / F.col("turn_count"))
     )
-    return out.select(*_cols(key))
+    return _with_avg(out).select(*_cols(key))
+
+
+def rollup_tiers(
+    df: DataFrame,
+    tiers: list[str] | None = None,
+    value: Column | None = None,
+    key: str = "conv_id",
+) -> DataFrame:
+    """Every tier from ONE plan, as one long table: ``ROLLUP_COLS + tier``.
+
+    Raw rows are rolled up once into the finest tier; each finest-tier row
+    is then exploded once per tier with its ``bucket_start`` floored to that
+    tier, and a single merge aggregate keyed on (key, tier, bucket_start)
+    builds all tiers at once. Coarser tiers still read only finest-tier
+    partials, never raw rows. Over an input hash-partitioned on ``key``
+    both aggregates are exchange-free, so the whole plan has no exchange
+    above that one — no per-tier cache, no per-tier action.
+    """
+    tiers = tiers or TIER_ORDER
+    widths = [TIERS[t] for t in tiers]
+    assert all(b > a and b % a == 0 for a, b in zip(widths, widths[1:])), (
+        f"tiers must go finest-first, each width dividing the next: {tiers}"
+    )
+    fan = F.inline(
+        F.array(*[
+            F.struct(F.lit(t).alias("tier"), bucket_start("bucket_start", t).alias("bucket_start"))
+            for t in tiers
+        ])
+    )
+    out = (
+        rollup_from_raw(df, tiers[0], value, key)
+        .select(key, fan, *ROLLUP_COLS[2:])
+        .groupBy(key, "tier", "bucket_start")
+        .agg(*_merge_aggs())
+    )
+    return _with_avg(out).select(*_cols(key), "tier")
 
 
 def rollup_all_tiers(
@@ -171,18 +214,4 @@ def rollup_from_raw_salted(
             F.max_by(F.col("text"), ord_key).alias("last_text"),
         )
     )
-    merge_ord = F.struct(F.col("last_ts"), F.col("last_turn_idx"))
-    out = (
-        partial.groupBy(key, "bucket_start")
-        .agg(
-            F.sum("turn_count").alias("turn_count"),
-            F.sum("sum_len").alias("sum_len"),
-            F.min("min_len").alias("min_len"),
-            F.max("max_len").alias("max_len"),
-            F.max_by(F.col("last_ts"), merge_ord).alias("last_ts"),
-            F.max_by(F.col("last_turn_idx"), merge_ord).alias("last_turn_idx"),
-            F.max_by(F.col("last_text"), merge_ord).alias("last_text"),
-        )
-        .withColumn("avg_len", F.col("sum_len").cast("double") / F.col("turn_count"))
-    )
-    return out.select(*_cols(key))
+    return _with_avg(partial.groupBy(key, "bucket_start").agg(*_merge_aggs())).select(*_cols(key))

@@ -8,8 +8,6 @@ split points (lib/addax-rdbms/.../SingleTableSplitUtil.java:271-329 — its
 comment: arithmetic split "causes data skew when the split key is not
 uniform"). Spark-native equivalents:
 
-- partitions_for_bytes(): partition count = f(input bytes), the analog of
-  the channel-count planner; AQE coalesces the tail.
 - colocate_by_series(): ONE shuffle on hash(conv_id); every downstream
   groupBy whose key starts with conv_id (tier rollups on (conv_id, bucket),
   chunk encodes on (conv_id, chunk_start)) then satisfies its clustered
@@ -25,14 +23,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-TARGET_PARTITION_BYTES = 128 * 1024 * 1024
-
-
-def partitions_for_bytes(input_bytes: int, min_parts: int = 8, max_parts: int = 200_000) -> int:
-    """Partition count targeting ~128 MiB per partition (the reference's
-    channel planner recast: channels = budget/cap -> partitions = bytes/target)."""
-    return max(min_parts, min(max_parts, -(-input_bytes // TARGET_PARTITION_BYTES)))
 
 
 def colocate_by_series(df: DataFrame, n_partitions: int, key: str = "conv_id") -> DataFrame:

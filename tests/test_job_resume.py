@@ -68,10 +68,47 @@ def test_job_tiers_match_direct_rollup(spark, raw_path, tmp_path_factory):
     run(spark, RollupJobSpec(raw_path, out, job_id="direct"))
     raw = spark.read.parquet(raw_path)
     direct = rollup_all_tiers(raw)
-    for tier in ["1m", "1d"]:
+    for tier in ["1m", "5m", "1h", "1d"]:
         got = _table(spark, out, tier)
         exp = direct[tier]
         assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0, tier
+
+
+def test_job_tier_subset(spark, raw_path, tmp_path_factory):
+    """A job over a subset of tiers writes exactly those tiers, each equal
+    to the direct rollup."""
+    from addax_spark.operators.rollup import rollup_all_tiers
+
+    out = str(tmp_path_factory.mktemp("job_subset"))
+    run(spark, RollupJobSpec(raw_path, out, job_id="subset", tiers=["1m", "1h"]))
+    assert sorted(d for d in os.listdir(f"{out}/tiers") if d.startswith("tier=")) == [
+        "tier=1h", "tier=1m"
+    ]
+    direct = rollup_all_tiers(spark.read.parquet(raw_path))
+    for tier in ["1m", "1h"]:
+        got = _table(spark, out, tier)
+        exp = direct[tier]
+        assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0, tier
+
+
+def test_failed_write_marks_units_failed_and_resumes(spark, raw_path, tmp_path_factory):
+    """A write that fails mid-batch raises after the other writer has
+    finished, marks the batch's units failed (none done), and a rerun with
+    the same job_id redoes them."""
+    out = str(tmp_path_factory.mktemp("job_failwrite"))
+    with open(f"{out}/tiers", "w") as f:  # a file where the tier table goes
+        f.write("x")
+    with pytest.raises(Exception):
+        run(spark, RollupJobSpec(raw_path, out, job_id="fw"))
+    # the chunk writer ran to its commit before the failure surfaced
+    assert any(d.startswith("date=") for d in os.listdir(f"{out}/chunks"))
+    from addax_spark.manifest import Manifest
+
+    assert Manifest(spark, f"{out}/_manifest", "fw").done_keys() == set()
+    os.remove(f"{out}/tiers")
+    res = run(spark, RollupJobSpec(raw_path, out, job_id="fw"))
+    assert res["units"] == res["units_total"] and res["units_skipped_resume"] == 0
+    assert res["rows_read"] == spark.read.parquet(raw_path).count()
 
 
 def test_salted_writes_knob_identical_output(spark, raw_path, tmp_path_factory):

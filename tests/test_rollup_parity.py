@@ -118,6 +118,32 @@ def test_colocated_cascade_is_exchange_free(spark):
     assert coloc == base - 3, f"expected {base - 3} exchanges, got {coloc}"
 
 
+def test_rollup_tiers_one_plan_single_exchange(spark, fixture_data):
+    """rollup_tiers builds every tier in one plan: over an input hashed on
+    conv_id it plans exactly that one Exchange and caches nothing, and each
+    tier equals the step-by-step cascade."""
+    from addax_spark.operators.rollup import rollup_tiers
+
+    src = fixture_data.repartition(4, "conv_id")
+    tiers = rollup_tiers(src)
+    plan = tiers._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert "InMemoryRelation" not in plan, plan
+    direct = rollup_all_tiers(fixture_data)
+    for tier in ["1m", "5m", "1h", "1d"]:
+        got = tiers.filter(f"tier = '{tier}'").drop("tier")
+        assert got.exceptAll(direct[tier]).count() == 0, tier
+        assert direct[tier].exceptAll(got).count() == 0, tier
+
+
+@pytest.mark.parametrize("tiers", [["5m", "1m"], ["1m", "1m"], ["1d", "1h", "5m"]])
+def test_rollup_tiers_rejects_bad_order(fixture_data, tiers):
+    from addax_spark.operators.rollup import rollup_tiers
+
+    with pytest.raises(AssertionError, match="finest-first"):
+        rollup_tiers(fixture_data, tiers)
+
+
 def test_entry_cascade_single_exchange(spark):
     """The driver-entry path (api.rollup_tier over events) plans ONE exchange
     for the full 4-tier cascade: transcripts_view windows by conv_id (an
