@@ -32,12 +32,14 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .manifest import Manifest, UnitMetrics
 from .operators.bucketize import TIER_ORDER
 from .operators.gorilla import encode_chunks
 from .operators.rollup import rollup_tiers
 from .plans.partitioning import colocate_by_series
+from .schema import CHUNKS, ROLLUP
 
 #: writer-task fan-out per (tier, date) output cell (files per dir bound)
 _WRITE_SALT = 8
@@ -105,6 +107,32 @@ def list_date_partitions(spark: SparkSession, path: str) -> list[str] | None:
         if st.isDirectory() and st.getPath().getName().startswith("date=")
     ]
     return sorted(days) or None
+
+
+def read_dates(
+    spark: SparkSession,
+    base: str,
+    schema: T.StructType,
+    lo: str | None = None,
+    hi: str | None = None,
+) -> DataFrame:
+    """The ``date=`` partitions of ``base`` with ``lo <= date <= hi`` (ISO
+    dates; None = unbounded), read with ``schema`` plus the ``date`` column.
+
+    One metadata listing picks the partition dirs and only those leaves are
+    read, under the pinned schema: no listing of the rest of the table and
+    no footer-reading schema-inference job. No matching partition (expired,
+    never written, no table) gives an empty frame with the same columns."""
+    full = T.StructType([*schema.fields, T.StructField("date", T.DateType())])
+    paths = [
+        f"{base}/date={d}"
+        for d in list_date_partitions(spark, base) or []
+        if (lo is None or d >= lo) and (hi is None or d <= hi)
+    ]
+    if not paths:
+        # an RDD of zero partitions: a local list would run empty Python tasks
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), full)
+    return spark.read.schema(full).option("basePath", base).parquet(*paths)
 
 
 def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
@@ -207,6 +235,11 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
             tiers = rollup_tiers(
                 colocate_by_series(sl, n_parts), spec.tiers, value=F.expr(spec.value_expr)
             )
+            # schema.ROLLUP is the on-disk contract serving reads with; the
+            # casts are no-ops (optimized away) for TRANSCRIPTS-typed input
+            tiers = tiers.select(
+                *[F.col(f.name).cast(f.dataType).alias(f.name) for f in ROLLUP.fields], "tier"
+            )
             # the two write actions run on writer threads so each one's
             # serial segments (driver planning, output commit, straggler
             # tail) overlap the other's parallel compute. Leaving the pool
@@ -224,21 +257,17 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
             for w in writes:
                 w.result()
             # per-day lineage metrics from the WRITTEN chunk table (tiny:
-            # ~2x-compressed blobs + stats columns), partition-pruned to
-            # this batch's dates — avoids caching the encode output just to
-            # re-aggregate it
+            # ~2x-compressed blobs + stats columns), read from this batch's
+            # date partitions only (days in between that belong to other
+            # batches are ignored below) — avoids caching the encode output
+            # just to re-aggregate it. A zero-chunk batch writes no files:
+            # read_dates then yields an empty frame -> zero metrics.
             t_ph = time.time()
-            # explicit schema: an all-empty batch (zero chunks encoded)
-            # leaves the chunks dir with no parquet files, and schema
-            # inference would fail where an empty frame is the right answer
-            chunks_read_schema = chunks.withColumn(
-                "date", F.to_date("chunk_start")
-            ).schema
             day_metrics = {
                 r.d.isoformat(): r
-                for r in spark.read.schema(chunks_read_schema)
-                .parquet(f"{spec.output_root}/chunks")
-                .filter(F.col("date").isin([_dt.date.fromisoformat(d) for d in batch]))
+                for r in read_dates(
+                    spark, f"{spec.output_root}/chunks", CHUNKS, batch[0], batch[-1]
+                )
                 .groupBy(F.col("date").alias("d"))
                 .agg(
                     F.count("*").alias("nc"),

@@ -31,21 +31,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..schema import ROLLUP
 from .bucketize import TIER_ORDER, TIERS, bucket_start
 
-#: columns of a tier table (schema.ROLLUP)
-ROLLUP_COLS = [
-    "conv_id",
-    "bucket_start",
-    "turn_count",
-    "sum_len",
-    "min_len",
-    "max_len",
-    "avg_len",
-    "last_ts",
-    "last_turn_idx",
-    "last_text",
-]
+#: columns of a tier table
+ROLLUP_COLS = ROLLUP.fieldNames()
 
 
 def rollup_from_raw(

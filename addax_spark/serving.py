@@ -1,6 +1,7 @@
 """Query-time serving over the rollup outputs: tier selection via the
-retention ladder, partition-pruned range reads, optional gap-fill, and
-chunk decode for raw-resolution reads.
+retention ladder, range reads of exactly the date partitions a query
+covers (pinned schema, no inference job), optional gap-fill, and chunk
+decode for raw-resolution reads.
 
 This is the "user switches to your repo" surface: given a job's
 output_root, answer range queries without knowing the layout.
@@ -13,14 +14,19 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .job import read_dates
 from .operators.gapfill import gapfill
 from .operators.gorilla import decode_chunks
-from .retention import DEFAULT_POLICY, finest_available_tier
+from .retention import DEFAULT_POLICY, finest_available_tier, tier_root
+from .schema import CHUNKS, ROLLUP
 
 
 def read_tier(spark: SparkSession, output_root: str, tier: str) -> DataFrame:
-    """One tier of the unified tiers table (partition-pruned on tier=/date=)."""
-    return spark.read.parquet(f"{output_root}/tiers").filter(F.col("tier") == tier)
+    """Every retained date of one tier, with its ``tier`` and ``date``
+    partition columns."""
+    return read_dates(spark, tier_root(output_root, tier), ROLLUP).withColumn(
+        "tier", F.lit(tier)
+    )
 
 
 def query_range(
@@ -37,7 +43,7 @@ def query_range(
     """Rolled-up points for [t0, t1), served from the finest tier the
     retention ladder still holds for the range (or an explicit tier).
 
-    The date/tier predicates prune partitions before any file is read;
+    Only the tier's date partitions inside the range are read;
     conv_id predicates push into the parquet scan. Gap-fill, when asked,
     densifies exactly the requested window (aligned output across convs).
     """
@@ -48,14 +54,12 @@ def query_range(
         )
         if tier is None:
             raise ValueError(f"no tier retains data at {t0}")
-    df = (
-        read_tier(spark, output_root, tier)
-        .filter((F.col("bucket_start") >= t0) & (F.col("bucket_start") < t1))
-        .filter((F.col("date") >= t0[:10]) & (F.col("date") <= t1[:10]))
-    )
+    df = read_dates(
+        spark, tier_root(output_root, tier), ROLLUP, t0[:10], t1[:10]
+    ).filter((F.col("bucket_start") >= t0) & (F.col("bucket_start") < t1))
     if conv_ids:
         df = df.filter(F.col("conv_id").isin(conv_ids))
-    df = df.drop("tier", "date")
+    df = df.drop("date")
     if fill:
         # floor the spine bounds to the served tier's bucket grid: an
         # unaligned t0 (e.g. ...:00:30 against a 1m tier, or any sub-day t0
@@ -95,12 +99,10 @@ def read_points(
 ) -> DataFrame:
     """Raw-resolution point series decoded from Gorilla chunks for [t0, t1).
 
-    Chunk partitions are pruned by date; only chunks overlapping the range
+    Only the chunk date partitions inside the range are read; their chunks
     are decoded (chunk-parallel), then point-filtered to the exact bounds.
     """
-    ch = spark.read.parquet(f"{output_root}/chunks").filter(
-        (F.col("date") >= t0[:10]) & (F.col("date") <= t1[:10])
-    )
+    ch = read_dates(spark, f"{output_root}/chunks", CHUNKS, t0[:10], t1[:10])
     if conv_ids:
         ch = ch.filter(F.col("conv_id").isin(conv_ids))
     pts = decode_chunks(ch)

@@ -116,3 +116,100 @@ def test_query_range_gapfill_unaligned_bounds(spark, served):
     for cid, rs in per_conv.items():
         assert len(rs) == 120, cid
         assert any(r.fill_method == "observed" for r in rs), f"{cid}: all gaps"
+
+
+def _jobs_submitted(spark, build) -> int:
+    """Spark jobs submitted while ``build()`` runs (its own job group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "DataFrame build only")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_query_build_submits_no_spark_job(spark, served):
+    """Building a served DataFrame is pure planning: the pinned schema means
+    no footer-reading schema-inference job before the query's own action."""
+    _, out = served
+    t0, t1 = "2025-01-01 10:00:00", "2025-01-01 12:00:00"
+    builds = {
+        "range": lambda: serving.query_range(spark, out, t0, t1, tier="1m"),
+        "fill_linear": lambda: serving.query_range(spark, out, t0, t1, tier="1m", fill="linear"),
+        "points": lambda: serving.read_points(spark, out, t0, t1),
+    }
+    assert {k: _jobs_submitted(spark, b) for k, b in builds.items()} == dict.fromkeys(builds, 0)
+
+
+def test_query_range_reads_only_covered_date_dirs(spark, served):
+    import re
+
+    _, out = served
+    got = serving.query_range(spark, out, "2025-01-01 10:00:00", "2025-01-02 00:00:00", tier="1m")
+    files = got.inputFiles()
+    assert files
+    dirs = {re.search(r"/tiers/(tier=[^/]+/date=[^/]+)/", f).group(1) for f in files}
+    # t1 at midnight still lists the t1 day (inclusive date bound), no other
+    assert dirs <= {"tier=1m/date=2025-01-01", "tier=1m/date=2025-01-02"}
+    assert "tier=1m/date=2025-01-01" in dirs
+
+
+@pytest.mark.parametrize("fill", [None, "locf"])
+def test_query_range_absent_partitions_serve_empty(spark, served, tmp_path, fill):
+    """A range whose tier partitions are gone (expired 1m day) or were never
+    written (no tiers/ at all) is an empty answer with the served columns,
+    not an error."""
+    import datetime as dt
+    import shutil
+
+    from addax_spark import retention
+
+    _, out = served
+    t0, t1 = "2025-01-01 10:00:00", "2025-01-01 12:00:00"
+    cols = serving.query_range(spark, out, t0, t1, tier="1m", fill=fill).columns
+    expired = str(tmp_path / "expired")
+    shutil.copytree(out, expired)
+    dropped = retention.expire(expired, now=dt.date(2025, 1, 2), policy={"1m": 0})
+    assert "2025-01-01" in dropped["1m"]
+    bare = str(tmp_path / "bare")
+    (tmp_path / "bare").mkdir()
+    for root in (expired, bare):
+        got = serving.query_range(spark, root, t0, t1, tier="1m", fill=fill)
+        assert got.columns == cols
+        assert got.count() == 0
+
+
+def test_file_uri_root_serves_same_rows(spark, served):
+    _, out = served
+    t0, t1 = "2025-01-01 10:00:00", "2025-01-01 12:00:00"
+    for q in (
+        lambda root: serving.query_range(spark, root, t0, t1, tier="1m"),
+        lambda root: serving.read_points(spark, root, t0, t1),
+    ):
+        a, b = q(out), q(f"file://{out}")
+        assert a.count() == b.count() > 0
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_bigint_turn_idx_input_serves_pinned_schema(spark, tmp_path):
+    """The job projects its tier output onto schema.ROLLUP, so an input whose
+    turn_idx is bigint still serves under the pinned read schema."""
+    raw = str(tmp_path / "raw")
+    out = str(tmp_path / "out")
+    synth.transcripts(spark, n_convs=8, avg_turns=12).withColumn(
+        "turn_idx", F.col("turn_idx").cast("bigint")
+    ).write.parquet(raw)
+    run(spark, RollupJobSpec(raw, out, job_id="bigint"))
+    t0, t1 = "2025-01-01 00:00:00", "2025-01-02 00:00:00"
+    got = serving.query_range(spark, out, t0, t1, tier="1m")
+    exp = rollup_from_raw(spark.read.parquet(raw), "1m").filter(
+        (F.col("bucket_start") >= t0) & (F.col("bucket_start") < t1)
+    )
+    assert dict(got.dtypes)["last_turn_idx"] == "int"
+    assert got.count() == exp.count() > 0
+    assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
