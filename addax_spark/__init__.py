@@ -18,11 +18,12 @@ Modules
 - synth          deterministic (seeded, hash-based) transcript generator
 - operators/     bucketize, rollup (tier cascade), gapfill (LOCF/linear),
                  gorilla (delta-of-delta + XOR codec), dedup, similarity,
-                 text analysis, record transformers, multimodal plumbing
+                 text analysis, record transformers
 - sources/sinks  readers/writers re-expressing the reference's connector
                  inventory on Spark DataSource V2
-- plans/         partitioning policy (hash(conv_id) x bucket, salting), splits
+- plans/         partitioning policy (hash(conv_id) x bucket), splits
 - streaming/     Structured Streaming rollup
+- fs             the one filesystem layer for output paths (Hadoop FS API)
 - manifest       per-partition checkpoint + lineage/metrics table, resume
 - retention      tier aging / partition rewrite / compaction
 - job            RollupJobSpec driver (spark-submit entry)

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import fs
 from .manifest import Manifest, UnitMetrics
 from .operators.bucketize import TIER_ORDER
 from .operators.gorilla import encode_chunks
@@ -91,24 +92,6 @@ class RollupJobSpec:
             self.job_id = f"rollup-{uuid.uuid4().hex[:12]}"
 
 
-def list_date_partitions(spark: SparkSession, path: str) -> list[str] | None:
-    """Hive-style ``date=YYYY-MM-DD`` partition directories under ``path``,
-    via the Hadoop FileSystem API (works for file://, hdfs://, s3a://) —
-    a pure metadata listing, no data scan. None if the layout isn't
-    date-partitioned."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return None
-    days = [
-        st.getPath().getName()[5:]
-        for st in fs.listStatus(p)
-        if st.isDirectory() and st.getPath().getName().startswith("date=")
-    ]
-    return sorted(days) or None
-
-
 def read_dates(
     spark: SparkSession,
     base: str,
@@ -126,7 +109,7 @@ def read_dates(
     full = T.StructType([*schema.fields, T.StructField("date", T.DateType())])
     paths = [
         f"{base}/date={d}"
-        for d in list_date_partitions(spark, base) or []
+        for d in fs.list_dates(base)
         if (lo is None or d >= lo) and (hi is None or d <= hi)
     ]
     if not paths:
@@ -162,9 +145,8 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
     # of the whole input before any work; fine at test scale, a documented
     # cost at 100 TB (repartition the landing zone by date instead).
     t_ph = time.time()
-    part_days = list_date_partitions(spark, spec.input_path)
-    if part_days is not None:
-        days = part_days
+    days = fs.list_dates(spec.input_path)
+    if days:
         # typed date literals: ANSI mode forbids implicit string<->date in
         # In(); typed literals also keep the predicate partition-prunable
         day_filter = lambda batch: F.col("date").isin(  # noqa: E731

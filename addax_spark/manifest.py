@@ -11,15 +11,17 @@ become explicit metric columns per work unit.
 
 Storage: an append-only parquet directory of manifest rows (atomic at the
 file level — each commit writes one new file; latest status per key wins by
-committed_at), with the schema of schema.MANIFEST. Resume and summary
-reads go straight to those few small files with pyarrow, so they cost no
-Spark job. On a cluster with an Iceberg catalog the same rows go to an
-Iceberg table via MERGE; the protocol is identical.
+committed_at), with the schema of schema.MANIFEST. The files are put and
+got whole through the fs layer (any Hadoop FS root) and decoded with
+pyarrow, so resume and summary reads cost no Spark job. On a cluster with
+an Iceberg catalog the same rows go to an Iceberg table via MERGE; the
+protocol is identical.
 """
 
 from __future__ import annotations
 
-import os
+import datetime as dt
+import io
 import time
 import uuid
 from dataclasses import dataclass
@@ -28,6 +30,8 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
+
+from . import fs
 
 _METRICS = ("rows_read", "chunks_encoded", "bytes_raw", "bytes_compressed")
 #: arrow rendering of schema.MANIFEST
@@ -54,31 +58,17 @@ class Manifest:
         self.spark = spark
         self.path = path
         self.job_id = job_id
-        os.makedirs(path, exist_ok=True)
+        fs.mkdirs(path)
 
     def _append(self, rows: list[dict]) -> None:
-        now = pd.Timestamp.utcnow().tz_localize(None)
-        pdf = pd.DataFrame(
-            [
-                {
-                    "job_id": self.job_id,
-                    "partition_key": r["partition_key"],
-                    "status": r["status"],
-                    "rows_read": r.get("rows_read"),
-                    "chunks_encoded": r.get("chunks_encoded"),
-                    "bytes_raw": r.get("bytes_raw"),
-                    "bytes_compressed": r.get("bytes_compressed"),
-                    "wall_s": r.get("wall_s"),
-                    "committed_at": now,
-                }
-                for r in rows
-            ]
+        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+        table = pa.Table.from_pylist(
+            [{"job_id": self.job_id, "committed_at": now, **r} for r in rows], schema=_SCHEMA
         )
-        # micros precision (pandas default ns is unreadable as Spark TIMESTAMP)
-        pdf["committed_at"] = pdf["committed_at"].astype("datetime64[us]")
+        buf = io.BytesIO()
+        pq.write_table(table, buf)
         # one parquet file per commit: atomic, append-only, no read-modify-write
-        fname = os.path.join(self.path, f"m-{time.time_ns()}-{uuid.uuid4().hex[:8]}.parquet")
-        pdf.to_parquet(fname, index=False)
+        fs.put(f"{self.path}/m-{time.time_ns()}-{uuid.uuid4().hex[:8]}.parquet", buf.getvalue())
 
     def mark_done(self, partition_key: str, m: UnitMetrics) -> None:
         self._append(
@@ -101,10 +91,17 @@ class Manifest:
     def _latest(self) -> pd.DataFrame:
         """This job's rows, latest status per partition_key (by committed_at;
         ties go to the later commit file). The manifest is a handful of
-        small files, so it is read directly with pyarrow — no Spark job."""
-        # an explicit schema: a 'failed' commit's metric columns are
-        # all-null in its file and are read as the 'done' commits' types
-        df = pq.read_table(self.path, schema=_SCHEMA).to_pandas()
+        small files, so each is got whole and decoded with pyarrow — no
+        Spark job."""
+        names = sorted(
+            n for n, _, _ in fs.ls(self.path) if n.startswith("m-") and n.endswith(".parquet")
+        )
+        # an explicit schema: a 'failed' commit's metric columns may be
+        # null-typed in its file and are read as the 'done' commits' types
+        tables = [
+            pq.read_table(io.BytesIO(fs.get(f"{self.path}/{n}")), schema=_SCHEMA) for n in names
+        ]
+        df = pa.concat_tables(tables or [_SCHEMA.empty_table()]).to_pandas()
         df = df[df["job_id"] == self.job_id].sort_values("committed_at", kind="stable")
         return df.drop_duplicates("partition_key", keep="last")
 

@@ -165,43 +165,3 @@ def _cols(key: str) -> list:
     cols = list(ROLLUP_COLS)
     cols[0] = key
     return cols
-
-
-def rollup_from_raw_salted(
-    df: DataFrame,
-    tier: str,
-    value: Column | None = None,
-    key: str = "conv_id",
-    salt_buckets: int = 8,
-) -> DataFrame:
-    """Skew-resistant two-phase variant of :func:`rollup_from_raw`.
-
-    Phase 1 aggregates on (key, bucket, salt) — a deterministic xxhash64
-    salt derived from turn_idx splits a hot (key, bucket) group across
-    ``salt_buckets`` reducers (the engine's answer to the reference's
-    sampled skew-resistant split points, SingleTableSplitUtil.java:271-329,
-    made deterministic). Phase 2 merges the partials exactly like the tier
-    cascade merge (sums of sums, min/max of partials, max_by of lasts), so
-    results are identical to the unsalted rollup at any parallelism.
-
-    Use when single (key, bucket) groups are huge relative to a partition —
-    e.g. 1d buckets of pathological conversations; for ordinary transcripts
-    the unsalted single-shuffle plan is cheaper (one shuffle vs two)."""
-    v = (value if value is not None else F.length("text")).cast("long")
-    ord_key = F.struct(F.col("ts"), F.col("turn_idx"))
-    salt = F.pmod(F.xxhash64(F.col(key), F.col("turn_idx")), F.lit(salt_buckets))
-    partial = (
-        df.withColumn("bucket_start", bucket_start("ts", tier))
-        .withColumn("_salt", salt)
-        .groupBy(key, "bucket_start", "_salt")
-        .agg(
-            F.count(F.lit(1)).alias("turn_count"),
-            F.sum(v).alias("sum_len"),
-            F.min(v).alias("min_len"),
-            F.max(v).alias("max_len"),
-            F.max_by(F.col("ts"), ord_key).alias("last_ts"),
-            F.max_by(F.col("turn_idx"), ord_key).alias("last_turn_idx"),
-            F.max_by(F.col("text"), ord_key).alias("last_text"),
-        )
-    )
-    return _with_avg(partial.groupBy(key, "bucket_start").agg(*_merge_aggs())).select(*_cols(key))

@@ -1,6 +1,5 @@
 """Partitioning & skew policy (north_rule: explicit hash(conv_id) x
-time-bucket partitioning, salted repartitioning for hot conversations, AQE
-skew handling).
+time-bucket partitioning, AQE skew handling).
 
 The reference plans parallelism from byte/record budgets
 (core/.../job/JobContainer.java:385-433) and avoids skew by sampling real
@@ -15,13 +14,13 @@ uniform"). Spark-native equivalents:
   single-shuffle pipeline. Trade-off: per-partition load follows conv size;
   use only when conversations are bounded (transcripts are — a conversation
   has thousands of turns, not billions).
-- salt(): deterministic salt column for heavy keys when a downstream op can
-  tolerate split groups (e.g. partial aggregation); final merge re-gathers.
+- spread_to_parallelism(): round-robin an under-partitioned scan before a
+  CPU-heavy Python map stage.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -57,22 +56,3 @@ def spread_to_parallelism(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n)
-
-
-def salt(key: Column | str, buckets: int, *extra: Column) -> Column:
-    """Deterministic salt in [0, buckets): spreads a hot key across
-    ``buckets`` groups for a partial-aggregate stage. Derived from
-    xxhash64 of (key, extra...) — stable across runs/parallelism, unlike
-    rand()-based salting."""
-    k = F.col(key) if isinstance(key, str) else key
-    return F.pmod(F.xxhash64(k, *extra), F.lit(buckets)).alias("_salt")
-
-
-def with_salted_repartition(
-    df: DataFrame, n_partitions: int, key: str = "conv_id", hot_buckets: int = 8
-) -> DataFrame:
-    """Repartition on (key, salt) — for pre-aggregation stages where a
-    single conversation overwhelms one partition. Downstream final
-    aggregation must re-merge on the unsalted key (one extra small shuffle
-    over partial aggregates)."""
-    return df.repartition(n_partitions, F.col(key), salt(key, hot_buckets, F.col("turn_idx")))

@@ -23,11 +23,11 @@ horizon — the standard continuous-aggregate retention ladder (e.g. raw 7d,
 from __future__ import annotations
 
 import datetime as dt
-import os
-import shutil
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from . import fs
 
 #: tier -> days retained (None = keep forever); raw handled by ingest side
 DEFAULT_POLICY: dict[str, int | None] = {"1m": 30, "5m": 90, "1h": 365, "1d": None}
@@ -39,14 +39,6 @@ def tier_root(output_root: str, tier: str) -> str:
     """Partition dir for one tier in the unified tiers table layout
     (tiers/tier=X/date=Y — one Iceberg-style identity-partitioned table)."""
     return f"{output_root}/tiers/tier={tier}"
-
-
-def list_date_partitions(root: str) -> list[str]:
-    if not os.path.isdir(root):
-        return []
-    return sorted(
-        p.split("=", 1)[1] for p in os.listdir(root) if p.startswith("date=")
-    )
 
 
 def expire(
@@ -62,9 +54,9 @@ def expire(
             continue
         cutoff = (now - dt.timedelta(days=days)).isoformat()
         root = tier_root(output_root, tier)
-        for d in list_date_partitions(root):
+        for d in fs.list_dates(root):
             if d < cutoff:
-                shutil.rmtree(os.path.join(root, f"date={d}"))
+                fs.delete(f"{root}/date={d}")
                 dropped.setdefault(tier, []).append(d)
     return dropped
 
@@ -78,18 +70,15 @@ def recover_orphaned_partitions(root: str) -> list[str]:
     any bak whose live dir exists (crash after the swap, before cleanup —
     the live copy is the newer compacted one). Returns the dates restored."""
     restored: list[str] = []
-    if not os.path.isdir(root):
-        return restored
-    for p in os.listdir(root):
-        if not p.startswith(".bak_date="):
+    names = {name for name, _, _ in fs.ls(root)}
+    for name in sorted(names):
+        if not name.startswith(".bak_date="):
             continue
-        d = p.split("=", 1)[1]
-        live = os.path.join(root, f"date={d}")
-        bak = os.path.join(root, p)
-        if os.path.isdir(live):
-            shutil.rmtree(bak)
+        d = name.split("=", 1)[1]
+        if f"date={d}" in names:
+            fs.delete(f"{root}/{name}")
         else:
-            os.rename(bak, live)
+            fs.rename(f"{root}/{name}", f"{root}/date={d}")
             restored.append(d)
     return restored
 
@@ -123,37 +112,28 @@ def compact(
     An explicit ``dates`` subset also FILTERS the read (typed date
     predicate -> partition pruning), so compacting 3 of 365 partitions
     scans 3, not 365."""
-    import datetime as _dt
-
     root = tier_root(output_root, tier)
     recover_orphaned_partitions(root)
     explicit_dates = dates is not None
-    dates = dates if dates is not None else list_date_partitions(root)
+    live = fs.list_dates(root)
     plan: list[tuple[str, int]] = []
-    for d in dates:
-        part = os.path.join(root, f"date={d}")
-        if not os.path.isdir(part):
-            continue
-        size = sum(
-            os.path.getsize(os.path.join(part, f))
-            for f in os.listdir(part)
-            if f.endswith(".parquet")
-        )
+    for d in live if dates is None else [d for d in dates if d in live]:
+        size = sum(n for name, _, n in fs.ls(f"{root}/date={d}") if name.endswith(".parquet"))
         plan.append((d, int(max(1, -(-size // target_file_bytes)))))
     if not plan:
         return 0
 
     fmap = spark.createDataFrame(
-        [(_dt.date.fromisoformat(d), n) for d, n in plan], "date date, _nf int"
+        [(dt.date.fromisoformat(d), n) for d, n in plan], "date date, _nf int"
     )
     df = spark.read.parquet(root)
     if explicit_dates:
-        df = df.filter(F.col("date").isin([_dt.date.fromisoformat(d) for d, _ in plan]))
+        df = df.filter(F.col("date").isin([dt.date.fromisoformat(d) for d, _ in plan]))
     df = df.join(F.broadcast(fmap), "date")
     slot = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns if c not in ("date", "_nf")]),
                   F.col("_nf").cast("bigint"))
-    staged = os.path.join(os.path.dirname(root), f"_compact_{tier}")
-    shutil.rmtree(staged, ignore_errors=True)
+    staged = f"{output_root}/tiers/_compact_{tier}"
+    fs.delete(staged)
     (
         df.withColumn("_slot", slot)
         .repartition(F.col("date"), F.col("_slot"))
@@ -163,24 +143,23 @@ def compact(
         .parquet(staged)
     )
     swapped = 0
+    staged_dates = set(fs.list_dates(staged))
     for d, _ in plan:
-        live = os.path.join(root, f"date={d}")
-        new = os.path.join(staged, f"date={d}")
-        if not os.path.isdir(new):
+        if d not in staged_dates:
             # a planned partition that produced no staged output (e.g. its
             # files hold zero rows) must be left as-is, not renamed away
             continue
-        bak = os.path.join(root, f".bak_date={d}")
-        shutil.rmtree(bak, ignore_errors=True)
-        os.rename(live, bak)
+        part, bak = f"{root}/date={d}", f"{root}/.bak_date={d}"
+        fs.delete(bak)
+        fs.rename(part, bak)
         try:
-            os.rename(new, live)
+            fs.rename(f"{staged}/date={d}", part)
         except BaseException:
-            os.rename(bak, live)  # restore — never leave the partition hidden
+            fs.rename(bak, part)  # restore — never leave the partition hidden
             raise
-        shutil.rmtree(bak)
+        fs.delete(bak)
         swapped += 1
-    shutil.rmtree(staged)
+    fs.delete(staged)
     return swapped
 
 

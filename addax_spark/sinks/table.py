@@ -18,6 +18,9 @@ identical partition semantics.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from .. import fs
 
 
 def _is_catalog_table(target: str) -> bool:
@@ -86,11 +89,7 @@ def upsert(
             "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
         )
         return
-    import os
-
-    from pyspark.sql import functions as F
-
-    if not os.path.isdir(target):
+    if not fs.exists(target):
         write_table(df, target, "append", partition_by)
         return
     existing = spark.read.parquet(target)

@@ -14,7 +14,7 @@ Shape (BASELINE.json input_hint):
                 tool string, ts timestamp)
 
 Skew: ~1% of conversations are "hot" with ~43x the turns of a cold one
-(hot share of turns ~= 30%) — exercises the salting / AQE-skew path.
+(hot share of turns ~= 30%) — exercises the AQE-skew path.
 Holes: selected conversations jump 2-50 minutes between some turns —
 exercises gap-fill LOCF / linear interpolation.
 """

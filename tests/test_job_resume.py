@@ -11,8 +11,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from addax_spark import retention, synth
+from addax_spark import fs, retention, serving, synth
 from addax_spark.job import RollupJobSpec, run
+from addax_spark.manifest import Manifest
 
 
 @pytest.fixture(scope="module")
@@ -102,8 +103,6 @@ def test_failed_write_marks_units_failed_and_resumes(spark, raw_path, tmp_path_f
         run(spark, RollupJobSpec(raw_path, out, job_id="fw"))
     # the chunk writer ran to its commit before the failure surfaced
     assert any(d.startswith("date=") for d in os.listdir(f"{out}/chunks"))
-    from addax_spark.manifest import Manifest
-
     assert Manifest(spark, f"{out}/_manifest", "fw").done_keys() == set()
     os.remove(f"{out}/tiers")
     res = run(spark, RollupJobSpec(raw_path, out, job_id="fw"))
@@ -134,14 +133,14 @@ def test_salted_writes_knob_identical_output(spark, raw_path, tmp_path_factory):
 def test_retention_expire_and_compact(spark, raw_path, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("job_retention"))
     run(spark, RollupJobSpec(raw_path, out, job_id="ret"))
-    dates = retention.list_date_partitions(retention.tier_root(out, "1m"))
+    dates = fs.list_dates(retention.tier_root(out, "1m"))
     assert len(dates) > 1
     # pretend "now" is far enough that the oldest 1m partition ages out but 1d stays
     now = dt.date.fromisoformat(dates[0]) + dt.timedelta(days=31)
     dropped = retention.expire(out, now, {"1m": 30, "1d": None})
     assert dropped.get("1m") == [dates[0]]
-    assert retention.list_date_partitions(retention.tier_root(out, "1m")) == dates[1:]
-    assert retention.list_date_partitions(retention.tier_root(out, "1d")) != []  # untouched
+    assert fs.list_dates(retention.tier_root(out, "1m")) == dates[1:]
+    assert fs.list_dates(retention.tier_root(out, "1d")) != []  # untouched
 
     # the ladder: expired date served by a coarser tier
     assert retention.finest_available_tier(out, dt.date.fromisoformat(dates[0]), now,
@@ -163,22 +162,53 @@ def test_retention_expire_and_compact(spark, raw_path, tmp_path_factory):
     before.unpersist()
 
 
+def test_file_uri_root_end_to_end(spark, raw_path, tmp_path_factory, monkeypatch):
+    """job.run -> expire -> compact -> serve on a ``file://`` output root
+    gives exactly the plain path's results: every output-path touch goes
+    through the Hadoop FS layer, so nothing lands in a literal ``file:``
+    dir under the cwd and expire really drops the partition."""
+    monkeypatch.chdir(tmp_path_factory.mktemp("cwd"))
+    uri_dir = str(tmp_path_factory.mktemp("job_uri"))
+    roots = [str(tmp_path_factory.mktemp("job_plain")), f"file://{uri_dir}"]
+    got = []
+    for root in roots:
+        summary = run(spark, RollupJobSpec(raw_path, root, job_id="uri"))
+        dates = fs.list_dates(retention.tier_root(root, "1m"))
+        now = dt.date.fromisoformat(dates[0]) + dt.timedelta(days=31)
+        dropped = retention.expire(root, now, {"1m": 30})
+        assert fs.list_dates(retention.tier_root(root, "1m")) == dates[1:]
+        compacted = retention.compact(spark, root, "1h")
+        t0, t1 = f"{dates[0]} 00:00:00", f"{dates[-1]} 23:59:59"
+        got.append((
+            {k: v for k, v in summary.items() if k != "phases"},
+            Manifest(spark, f"{root}/_manifest", "uri").metrics_summary(),
+            dropped, compacted,
+            serving.query_range(spark, root, t0, t1, tier="1m"),
+            serving.read_points(spark, root, t0, t1),
+        ))
+    assert not os.path.exists(f"{uri_dir}/tiers/tier=1m/date={dates[0]}")
+    assert not os.path.exists("file:")
+    (*meta_plain, rng_p, pts_p), (*meta_uri, rng_u, pts_u) = got
+    assert meta_plain == meta_uri and meta_plain[2] == {"1m": [dates[0]]}
+    for a, b in ((rng_p, rng_u), (pts_p, pts_u)):
+        assert a.count() == b.count() > 0
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
 def test_date_partitioned_input_discovery(spark, raw_path, tmp_path_factory):
     """date=-partitioned input: units come from a partition LISTING (no data
     scan) and per-unit filters partition-prune; outputs identical to the
     flat-layout run."""
-    from addax_spark.job import list_date_partitions
-
     part_in = str(tmp_path_factory.mktemp("jobraw_part") / "t")
     raw = spark.read.parquet(raw_path)
     raw.withColumn("date", F.to_date("ts")).write.partitionBy("date").parquet(part_in)
 
-    listed = list_date_partitions(spark, part_in)
+    listed = fs.list_dates(part_in)
     exp_days = sorted(
         r.d.isoformat() for r in raw.select(F.to_date("ts").alias("d")).distinct().collect()
     )
     assert listed == exp_days
-    assert list_date_partitions(spark, raw_path) is None  # flat layout -> fallback
+    assert fs.list_dates(raw_path) == []  # flat layout -> fallback
 
     out_flat = str(tmp_path_factory.mktemp("job_flat"))
     out_part = str(tmp_path_factory.mktemp("job_part"))
@@ -231,7 +261,7 @@ def test_compact_recovers_orphaned_bak(spark, tmp_path):
         "conv_id string, date date, n long",
     )
     df.repartition(2).write.partitionBy("date").parquet(root)
-    dates = retention.list_date_partitions(root)
+    dates = fs.list_dates(root)
     assert len(dates) == 3
     full = spark.read.parquet(root)
     exp = sorted((r.conv_id, r.n) for r in full.collect())
@@ -240,7 +270,7 @@ def test_compact_recovers_orphaned_bak(spark, tmp_path):
     victim = dates[0]
     os.rename(os.path.join(root, f"date={victim}"),
               os.path.join(root, f".bak_date={victim}"))
-    assert retention.list_date_partitions(root) == dates[1:]  # invisible
+    assert fs.list_dates(root) == dates[1:]  # invisible
 
     # and a stale bak beside a live (newer) partition
     stale = dates[1]
@@ -248,7 +278,7 @@ def test_compact_recovers_orphaned_bak(spark, tmp_path):
                     os.path.join(root, f".bak_date={stale}"))
 
     assert retention.compact(spark, out, "1h") == 3  # all three live again
-    assert retention.list_date_partitions(root) == dates
+    assert fs.list_dates(root) == dates
     assert not any(p.startswith(".bak_date=") for p in os.listdir(root))
     got = sorted((r.conv_id, r.n) for r in spark.read.parquet(root).collect())
     assert got == exp  # no rows lost or duplicated through recovery + compact

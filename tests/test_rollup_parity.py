@@ -79,19 +79,6 @@ def test_boundary_timestamps_land_in_own_bucket(spark, fixture_data):
     }
 
 
-@pytest.mark.parametrize("tier", ["1m", "1d"])
-def test_salted_rollup_identical(spark, fixture_data, tier):
-    """Two-phase salted rollup == unsalted rollup, exactly (incl. last
-    tie-breaks), at any salt bucket count."""
-    from addax_spark.operators.rollup import rollup_from_raw, rollup_from_raw_salted
-
-    plain = rollup_from_raw(fixture_data, tier)
-    for buckets in (2, 16):
-        salted = rollup_from_raw_salted(fixture_data, tier, salt_buckets=buckets)
-        assert salted.exceptAll(plain).count() == 0
-        assert plain.exceptAll(salted).count() == 0
-
-
 def test_colocated_cascade_is_exchange_free(spark):
     """plans.partitioning.colocate_by_series contract: after ONE hash
     repartition on conv_id, the 1m rollup and every cascade step satisfy

@@ -1,13 +1,13 @@
 """Training-data op tests beyond the driver contract: ANN recall vs brute
-force, multimodal plumbing (schema/batch shapes with the stub kernel),
-transformer chain edge semantics, and dedup on a corpus with planted dupes."""
+force, transformer chain edge semantics, and dedup on a corpus with planted
+dupes."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from addax_spark.operators import dedup, multimodal, similarity, transforms as tf
+from addax_spark.operators import dedup, similarity, transforms as tf
 
 from .conftest import SF_SMALL, SF_TINY
 
@@ -95,26 +95,6 @@ def test_planted_duplicates_found(spark):
     assert sh[1] == sh[2]  # identical text -> identical simhash
     assert bin(sh[1] ^ sh[4]).count("1") <= 12  # near dup -> small hamming distance
     assert bin(sh[1] ^ sh[5]).count("1") > 12
-
-
-def test_multimodal_plumbing(spark):
-    media = multimodal.synth_media(spark, 60)
-    assert media.schema.simpleString() == multimodal.MEDIA_SCHEMA.simpleString()
-    feats = multimodal.extract_features(media).collect()
-    assert len(feats) == 60
-    assert all(len(r.features) == multimodal.FEATURE_DIM for r in feats)
-    # deterministic: same payload -> same features across runs
-    feats2 = {r.media_id: r.features for r in multimodal.extract_features(media).collect()}
-    for r in feats:
-        assert feats2[r.media_id] == r.features
-    with pytest.raises(NotImplementedError):
-        multimodal.extract_features(media, fake=False)
-    plan = multimodal.frame_sample_plan(media, every_ms=5000)
-    row = plan.groupBy("media_id").count().join(
-        media.select("media_id", "meta.duration_ms"), "media_id"
-    ).collect()
-    for r in row:
-        assert r["count"] == r.duration_ms // 5000 + 1
 
 
 def test_transform_edges(spark):
