@@ -111,15 +111,7 @@ FROM events
 def rollup_tier(spark: SparkSession, sf_dir: str, tier: str) -> DataFrame:
     """Tier rollup over the derived transcripts. 1m aggregates raw turns;
     coarser tiers cascade from the 1m tier (continuous-aggregate path)."""
-    t = transcripts_view(spark, sf_dir)
-    if tier == "1m":
-        return _rollup.rollup_from_raw(t, "1m")
-    cur = _rollup.rollup_from_raw(t, "1m")
-    for nxt in ["5m", "1h", "1d"]:
-        cur = _rollup.rollup_cascade_step(cur, nxt)
-        if nxt == tier:
-            return cur
-    raise KeyError(tier)
+    return _rollup.rollup_all_tiers(transcripts_view(spark, sf_dir))[tier]
 
 
 def oracle_rollup_sql(tier: str, source_sql: str = TRANSCRIPTS_FROM_EVENTS_SQL) -> str:

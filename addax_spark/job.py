@@ -44,6 +44,10 @@ from .schema import CHUNKS, ROLLUP
 
 #: writer-task fan-out per (tier, date) output cell (files per dir bound)
 _WRITE_SALT = 8
+#: the series value every tier aggregates and the chunk codec encodes
+_VALUE_EXPR = "length(text)"
+#: the total order of points within one series
+_ORDER_COLS = ["ts", "turn_idx"]
 
 
 @dataclass
@@ -54,8 +58,6 @@ class RollupJobSpec:
     chunk_tier: str = "1d"
     job_id: str = ""
     n_partitions: int | None = None
-    value_expr: str = "length(text)"
-    order_cols: tuple[str, ...] = ("ts", "turn_idx")
     max_units: int | None = None  # for tests: stop after N units (resume later)
     # days per checkpoint batch: one dynamic-partition-overwrite write set
     # covers the whole batch (amortizes per-action overhead); the manifest
@@ -80,12 +82,6 @@ class RollupJobSpec:
     # scale parallelism is always >= the threshold, so auto = salted =
     # the bounded-files topology, which is also the correct 100 TB layout.
     salted_writes: bool | None = None
-    # job-level lifecycle hooks — the reference's preHandle/postHandle
-    # (JobContainer.java:106-189): pre_hook(spark, spec) runs before unit
-    # discovery, post_hook(spark, spec, summary) after the summary is built
-    # (retention sweeps and catalog registration live here)
-    pre_hook: object | None = None
-    post_hook: object | None = None
 
     def __post_init__(self):
         if not self.job_id:
@@ -132,8 +128,6 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
         ph[key] = round(ph.get(key, 0.0) + (time.time() - t0), 3)
 
     t_ph = time.time()
-    if spec.pre_hook is not None:
-        spec.pre_hook(spark, spec)
     raw = spark.read.parquet(spec.input_path)
     man = Manifest(spark, f"{spec.output_root}/_manifest", spec.job_id)
     _ph("init", t_ph)
@@ -206,16 +200,16 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
             # files, a partition-pruned scan of a ~2x-compressed table)
             chunks = encode_chunks(
                 sl,
-                value=F.expr(spec.value_expr).cast("double"),
+                value=F.expr(_VALUE_EXPR).cast("double"),
                 chunk_tier=spec.chunk_tier,
-                order_cols=list(spec.order_cols),
+                order_cols=_ORDER_COLS,
             )
             # every tier from one plan over ONE shuffle on hash(conv_id): the
             # 1m aggregate and the all-tier merge are exchange-free above it
             # (plan-asserted in tests/test_rollup_parity.py), and coarser
             # tiers merge 1m partials, never raw rows
             tiers = rollup_tiers(
-                colocate_by_series(sl, n_parts), spec.tiers, value=F.expr(spec.value_expr)
+                colocate_by_series(sl, n_parts), spec.tiers, value=F.expr(_VALUE_EXPR)
             )
             # schema.ROLLUP is the on-disk contract serving reads with; the
             # casts are no-ops (optimized away) for TRANSCRIPTS-typed input
@@ -284,6 +278,4 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
     summary["units_total"] = len(days)
     summary["units_skipped_resume"] = len(done)
     summary["phases"] = ph
-    if spec.post_hook is not None:
-        spec.post_hook(spark, spec, summary)
     return summary

@@ -41,10 +41,3 @@ def bucket_start(ts: Column | str, tier: str) -> Column:
         (F.unix_micros(c) - F.pmod(F.unix_micros(c), F.lit(step_us))) / F.lit(1_000_000)
     )
 
-
-def bucket_start_sql(ts_expr: str, tier: str) -> str:
-    """ANSI/DuckDB SQL rendering of the same bucket expression (for oracles)."""
-    step_us = TIERS[tier] * 1_000_000
-    return (
-        f"to_timestamp((epoch_us({ts_expr}) - epoch_us({ts_expr}) % {step_us}) / 1000000)"
-    )

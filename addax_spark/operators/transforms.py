@@ -142,46 +142,18 @@ class Transform:
     args: tuple
 
 
-# Named transformer registry — the analog of the reference's pluggable
-# TransformerRegistry (core/.../transport/transformer/TransformerRegistry.java:
-# 45-118 registers built-ins by name and loads user transformers from local
-# storage). Here a "plugin" is a vectorized function (DataFrame, column-name,
-# *paras) -> DataFrame — typically built from pandas UDFs or column exprs;
-# per-record Java/Groovy plugins have no place on Spark.
-_REGISTRY: dict[str, object] = {}
-
-
-def register_transformer(name: str, fn) -> None:
-    """Register fn(df, col, *paras) -> DataFrame under a config-addressable
-    name. Job configs may then reference it in their transformer list exactly
-    like a dx_* built-in. Re-registration replaces (test convenience)."""
-    if name in _chain_builtins():
-        raise ValueError(f"cannot shadow built-in transformer {name!r}")
-    _REGISTRY[name] = fn
-
-
-def get_transformer(name: str):
-    fn = _chain_builtins().get(name) or _REGISTRY.get(name)
-    if fn is None:
-        known = sorted(_chain_builtins()) + sorted(_REGISTRY)
-        raise ValueError(f"unknown transformer {name!r} (known: {known}); "
-                         "register custom ones via register_transformer()")
-    return fn
-
-
-def _chain_builtins() -> dict:
-    return {
-        "dx_filter": dx_filter,
-        "dx_substr": dx_substr,
-        "dx_pad": dx_pad,
-        "dx_replace": dx_replace,
-        "dx_map": dx_map,
-    }
+_BUILTINS = {
+    "dx_filter": dx_filter,
+    "dx_substr": dx_substr,
+    "dx_pad": dx_pad,
+    "dx_replace": dx_replace,
+    "dx_map": dx_map,
+}
 
 
 def chain(df: DataFrame, transforms: list[Transform]) -> DataFrame:
     """Apply transformers in order (the reference's chain evaluation,
     TransformerExchanger.java:65-138; a dropped record short-circuits)."""
     for t in transforms:
-        df = get_transformer(t.name)(df, *t.args)
+        df = _BUILTINS[t.name](df, *t.args)
     return df

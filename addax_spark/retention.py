@@ -28,6 +28,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from . import fs
+from .job import read_dates
+from .schema import ROLLUP
 
 #: tier -> days retained (None = keep forever); raw handled by ingest side
 DEFAULT_POLICY: dict[str, int | None] = {"1m": 30, "5m": 90, "1h": 365, "1d": None}
@@ -109,12 +111,12 @@ def compact(
     not the committer's whole delete-all-then-rename span. On Iceberg this
     is rewrite_data_files' snapshot commit and needs none of this.
 
-    An explicit ``dates`` subset also FILTERS the read (typed date
-    predicate -> partition pruning), so compacting 3 of 365 partitions
-    scans 3, not 365."""
+    The read goes through ``job.read_dates`` under the pinned
+    ``schema.ROLLUP`` (no schema-inference job) and keeps only the planned
+    dates (typed date predicate -> partition pruning), so compacting 3 of
+    365 partitions scans 3, not 365."""
     root = tier_root(output_root, tier)
     recover_orphaned_partitions(root)
-    explicit_dates = dates is not None
     live = fs.list_dates(root)
     plan: list[tuple[str, int]] = []
     for d in live if dates is None else [d for d in dates if d in live]:
@@ -126,9 +128,9 @@ def compact(
     fmap = spark.createDataFrame(
         [(dt.date.fromisoformat(d), n) for d, n in plan], "date date, _nf int"
     )
-    df = spark.read.parquet(root)
-    if explicit_dates:
-        df = df.filter(F.col("date").isin([dt.date.fromisoformat(d) for d, _ in plan]))
+    planned = sorted(d for d, _ in plan)
+    df = read_dates(spark, root, ROLLUP, planned[0], planned[-1])
+    df = df.filter(F.col("date").isin([dt.date.fromisoformat(d) for d in planned]))
     df = df.join(F.broadcast(fmap), "date")
     slot = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns if c not in ("date", "_nf")]),
                   F.col("_nf").cast("bigint"))

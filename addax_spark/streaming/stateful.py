@@ -187,11 +187,6 @@ def final_state(emissions: DataFrame) -> DataFrame:
     )
 
 
-def latest_state(spark, out_path: str) -> DataFrame:
-    """Latest per-conversation state from a run_state_to_parquet output."""
-    return final_state(spark.read.parquet(out_path))
-
-
 def stream_conversation_state(
     stream: DataFrame, evict_idle: bool = False, idle_timeout_ms: int = IDLE_TIMEOUT_MS
 ) -> DataFrame:

@@ -1,16 +1,13 @@
 #!/usr/bin/env python
-"""spark-submit entry point: rollup pipeline OR a declarative job config.
+"""spark-submit entry point for the rollup pipeline (``job.run``):
 
-Rollup pipeline (north rule):
     zip -r rollup.zip addax_spark
     spark-submit --master <cluster> --py-files rollup.zip \
         scripts/run_job.py --input <transcripts> --output <root> \
-        [--job-id my-job] [--tiers 1m,5m,1h,1d] [--chunk-tier 1d]
+        [--job-id my-job] [--tiers 1m,5m,1h,1d] [--chunk-tier 1d] \
+        [--partitions N]
 
-Declarative job (the reference's JSON/YAML config shape — reader ->
-transformer chain -> writer + setting.speed/errorLimit, like
-`addax.sh job.json`):
-    spark-submit ... scripts/run_job.py --config path/to/job.json
+Prints the job's metrics summary as one JSON line.
 
 The session builder only sets SQL conf when a master is supplied externally
 (SPARK_GRAFT_EXTERNAL_MASTER=1 or spark-submit), so the same script runs
@@ -26,9 +23,8 @@ import json
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--config", default=None, help="reference-shaped job JSON/YAML")
-    ap.add_argument("--input", required=False)
-    ap.add_argument("--output", required=False)
+    ap.add_argument("--input", required=True)
+    ap.add_argument("--output", required=True)
     ap.add_argument("--job-id", default="")
     ap.add_argument("--tiers", default="1m,5m,1h,1d")
     ap.add_argument("--chunk-tier", default="1d")
@@ -39,13 +35,6 @@ def main() -> None:
     from addax_spark.session import get_spark
 
     spark = get_spark("addax_spark_job")
-    if args.config:
-        from addax_spark.jobconfig import run_job
-
-        print(json.dumps(run_job(spark, args.config)))
-        return
-    if not args.input or not args.output:
-        ap.error("--input/--output required without --config")
     spec = RollupJobSpec(
         input_path=args.input,
         output_root=args.output,

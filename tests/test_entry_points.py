@@ -1,0 +1,91 @@
+"""Entry points: every ``addax_spark`` module is reached from the package
+itself or a non-test entry point, and the spark-submit script runs the
+rollup job exactly as ``job.run`` does."""
+
+from __future__ import annotations
+
+import ast
+import json
+import pathlib
+import runpy
+import sys
+
+import pytest
+
+from addax_spark import session, synth
+from addax_spark.job import RollupJobSpec, run
+
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+PKG = ROOT / "addax_spark"
+# everything that may count as a caller: the package, the scripts, the repo
+# benchmark and the two driver entry files (never tests/)
+CALLERS = [
+    *PKG.rglob("*.py"),
+    *(ROOT / "scripts").glob("*.py"),
+    *(ROOT / "perfbench").glob("*.py"),
+    ROOT / "bench.py",
+    ROOT / "__spark_entry__.py",
+]
+
+
+def _module_name(path: pathlib.Path) -> str:
+    parts = list(path.relative_to(ROOT).with_suffix("").parts)
+    if parts[-1] == "__init__":
+        parts.pop()
+    return ".".join(parts)
+
+
+def _imported(path: pathlib.Path) -> set[str]:
+    """Dotted names ``path`` imports (relative imports resolved), each with
+    its parent packages, plus ``base.name`` for every ``from base import
+    name`` since the name may be a submodule."""
+    mod = _module_name(path)
+    pkg = mod if path.name == "__init__.py" else mod.rpartition(".")[0]
+    names: set[str] = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            names |= {a.name for a in node.names}
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                anchor = pkg.rsplit(".", node.level - 1)[0]
+                base = f"{anchor}.{base}" if base else anchor
+            names.add(base)
+            names |= {f"{base}.{a.name}" for a in node.names}
+    return {".".join(n.split(".")[:i]) for n in names for i in range(1, n.count(".") + 2)}
+
+
+def test_every_module_has_a_non_test_caller():
+    """A module that only tests import is code with no caller: it goes."""
+    used: set[str] = set()
+    for path in CALLERS:
+        used |= _imported(path) - {_module_name(path)}
+    orphans = sorted(
+        m for m in map(_module_name, PKG.rglob("*.py")) if m != "addax_spark" and m not in used
+    )
+    assert not orphans, orphans
+
+
+def test_run_job_script_matches_job_run(spark, tmp_path, monkeypatch, capsys):
+    """scripts/run_job.py, run as spark-submit would, prints job.run's
+    summary; the removed --config mode is an argparse usage error."""
+    raw = str(tmp_path / "raw")
+    synth.transcripts(spark, n_convs=8, avg_turns=10).write.parquet(raw)
+    expected = run(spark, RollupJobSpec(raw, str(tmp_path / "lib"), job_id="lib"))
+
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    script = str(ROOT / "scripts" / "run_job.py")
+    argv = [script, "--input", raw, "--output", str(tmp_path / "cli"), "--job-id", "cli"]
+    monkeypatch.setattr(sys, "argv", argv)
+    capsys.readouterr()
+    runpy.run_path(script, run_name="__main__")
+    got = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    got.pop("phases")
+    expected.pop("phases")
+    assert got == expected and got["units"] > 0
+
+    monkeypatch.setattr(sys, "argv", [*argv, "--config", "job.json"])
+    with pytest.raises(SystemExit) as exc:
+        runpy.run_path(script, run_name="__main__")
+    assert exc.value.code == 2
+    assert "unrecognized arguments: --config" in capsys.readouterr().err

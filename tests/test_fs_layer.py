@@ -1,6 +1,6 @@
-"""The fs layer: every output-path touch in the job, manifest, retention,
-serving and table-sink modules goes through ``addax_spark.fs`` (Hadoop
-FileSystem API), and its mutating calls fail loudly."""
+"""The fs layer: every output-path touch in the job, manifest, retention
+and serving modules goes through ``addax_spark.fs`` (Hadoop FileSystem
+API), and its mutating calls fail loudly."""
 
 from __future__ import annotations
 
@@ -14,7 +14,7 @@ from py4j.protocol import Py4JJavaError
 import addax_spark
 from addax_spark import fs
 
-GUARDED = ["job.py", "manifest.py", "retention.py", "serving.py", "sinks/table.py"]
+GUARDED = ["job.py", "manifest.py", "retention.py", "serving.py"]
 FORBIDDEN = {
     "os.listdir", "os.makedirs", "os.rename",
     "os.path.isdir", "os.path.getsize", "os.path.join",

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from addax_spark import fs, retention, serving, synth
 from addax_spark.job import RollupJobSpec, run
 from addax_spark.manifest import Manifest
+from addax_spark.schema import ROLLUP
 
 
 @pytest.fixture(scope="module")
@@ -161,6 +162,26 @@ def test_retention_expire_and_compact(spark, raw_path, tmp_path_factory):
     assert nfiles_after <= nfiles_before
     before.unpersist()
 
+    # compacting a dates= subset rewrites only that partition: its rows are
+    # unchanged and every other date's files are left exactly as they were
+    root = retention.tier_root(out, "1m")
+    live = fs.list_dates(root)
+    one = live[-1]
+
+    def files(d):
+        p = os.path.join(root, f"date={d}")
+        return sorted((f, os.stat(os.path.join(p, f)).st_mtime_ns) for f in os.listdir(p))
+
+    others = {d: files(d) for d in live if d != one}
+    before = spark.read.parquet(f"{root}/date={one}").cache()
+    assert before.count() > 0
+    assert retention.compact(spark, out, "1m", dates=[one]) == 1
+    after = spark.read.parquet(f"{root}/date={one}")
+    assert before.exceptAll(after).count() == 0 and after.exceptAll(before).count() == 0
+    assert {d: files(d) for d in live if d != one} == others
+    assert fs.list_dates(root) == live
+    before.unpersist()
+
 
 def test_file_uri_root_end_to_end(spark, raw_path, tmp_path_factory, monkeypatch):
     """job.run -> expire -> compact -> serve on a ``file://`` output root
@@ -256,15 +277,17 @@ def test_compact_recovers_orphaned_bak(spark, tmp_path):
 
     out = str(tmp_path / "ret")
     root = retention.tier_root(out, "1h")
-    df = spark.createDataFrame(
-        [(f"c{i}", dt.date(2024, 1, 1 + i % 3), i) for i in range(30)],
-        "conv_id string, date date, n long",
-    )
+    # tier partitions hold schema.ROLLUP rows (compact reads them under it)
+    rows = []
+    for i in range(30):
+        ts = dt.datetime(2024, 1, 1 + i % 3, 12)
+        rows.append((f"c{i}", ts, 1, i, i, i, float(i), ts, 0, f"t{i}"))
+    df = spark.createDataFrame(rows, ROLLUP).withColumn("date", F.to_date("bucket_start"))
     df.repartition(2).write.partitionBy("date").parquet(root)
     dates = fs.list_dates(root)
     assert len(dates) == 3
     full = spark.read.parquet(root)
-    exp = sorted((r.conv_id, r.n) for r in full.collect())
+    exp = sorted(map(tuple, full.collect()))
 
     # simulate a crash mid-swap: one partition exists only as .bak
     victim = dates[0]
@@ -280,5 +303,5 @@ def test_compact_recovers_orphaned_bak(spark, tmp_path):
     assert retention.compact(spark, out, "1h") == 3  # all three live again
     assert fs.list_dates(root) == dates
     assert not any(p.startswith(".bak_date=") for p in os.listdir(root))
-    got = sorted((r.conv_id, r.n) for r in spark.read.parquet(root).collect())
+    got = sorted(map(tuple, spark.read.parquet(root).collect()))
     assert got == exp  # no rows lost or duplicated through recovery + compact

@@ -1,186 +1,15 @@
-"""Sources/sinks + streaming tests: storage reader config semantics,
-dirty-record quarantine + error budget, JDBC split math, table sink modes,
-and the streaming rollup matching the batch rollup on the same data."""
+"""Streaming tests: the streaming rollup and the stateful per-conversation
+operator match their batch twins, across kill/restart on one checkpoint."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from addax_spark import synth
-from addax_spark.jobconfig import job_from_config
 from addax_spark.operators.rollup import rollup_from_raw
-from addax_spark.sinks.table import read_table, write_table
-from addax_spark.sources import jdbc
-from addax_spark.sources.storage import (
-    ColumnSpec,
-    StorageReadSpec,
-    check_error_limit,
-    quarantine,
-    read_storage,
-)
 from addax_spark.streaming.rollup_stream import run_to_memory
-
-
-def test_storage_csv_reader(spark, tmp_path):
-    p = tmp_path / "in.csv"
-    p.write_text('1,alice,2025-01-01 10:00:00,\\N\n2,bob,2025-01-02 11:30:00,x\n')
-    spec = StorageReadSpec(
-        path=str(p),
-        fmt="csv",
-        null_format="\\N",
-        columns=[
-            ColumnSpec(type="long", index=0, name="id"),
-            ColumnSpec(type="string", index=1, name="name"),
-            ColumnSpec(type="timestamp", index=2, name="ts", format="yyyy-MM-dd HH:mm:ss"),
-            ColumnSpec(type="string", index=3, name="extra"),
-            ColumnSpec(type="string", value="const", name="tag"),
-        ],
-    )
-    rows = read_storage(spark, spec).orderBy("id").collect()
-    assert [r.id for r in rows] == [1, 2]
-    assert rows[0].extra is None and rows[1].extra == "x"  # nullFormat
-    assert rows[0].tag == "const"  # constant column
-    assert rows[0].ts.hour == 10
-
-
-def test_quarantine_and_error_budget(spark):
-    df = spark.createDataFrame(
-        [("1", "2.5"), ("x", "3.0"), ("3", "bad"), (None, "4.0")],
-        "a string, b string",
-    )
-    clean, dirty = quarantine(df, {"a": "long", "b": "double"})
-    assert clean.count() == 2  # ("1","2.5") and (None,"4.0") — null passes
-    assert dirty.count() == 2
-    assert dict(clean.dtypes)["a"] == "bigint"
-    check_error_limit(2, 4, max_records=2)  # at the limit: ok
-    with pytest.raises(RuntimeError, match="limit exceeded"):
-        check_error_limit(2, 4, max_records=1)
-    with pytest.raises(RuntimeError, match="ratio exceeded"):
-        check_error_limit(2, 4, max_pct=0.25)
-
-
-def test_jdbc_split_math(spark):
-    pts = jdbc.equal_width_points(0, 100, 4)
-    assert pts == [0, 25, 50, 75]
-    preds = jdbc.split_predicates("id", pts, where="active = 1")
-    assert len(preds) == 5  # 4 ranges + null slice
-    assert preds[0] == "id >= 0 AND id < 25 AND (active = 1)"
-    assert preds[-1] == "id IS NULL AND (active = 1)"
-    # remainder spread like the reference's BigInteger split
-    assert jdbc.equal_width_points(0, 10, 3) == [0, 4, 7]
-
-
-def test_http_reader_paged(spark):
-    """httpreader twin against a loopback REST server: stop-on-short-page
-    sequential probe == executor-parallel max_pages fan-out == the dataset;
-    resultKey JSONPath, '*' column expansion, token auth header, and the
-    jobconfig dispatch path all exercised."""
-    import http.server
-    import json as _json
-    import threading
-    import urllib.parse
-
-    DATA = [{"id": i, "name": f"user{i}", "nested": {"v": i * 10}} for i in range(5)]
-    seen_auth = []
-
-    class H(http.server.BaseHTTPRequestHandler):
-        def do_GET(self):
-            q = urllib.parse.parse_qs(urllib.parse.urlparse(self.path).query)
-            seen_auth.append(self.headers.get("Authorization"))
-            idx = int(q.get("pageIndex", ["1"])[0])
-            size = int(q.get("pageSize", ["100"])[0])
-            page = DATA[(idx - 1) * size : (idx - 1) * size + size]
-            body = _json.dumps({"code": 0, "result": page}).encode()
-            self.send_response(200)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(body)))
-            self.end_headers()
-            self.wfile.write(body)
-
-        def log_message(self, *a):  # noqa: N802
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    url = f"http://127.0.0.1:{srv.server_address[1]}/api"
-    try:
-        from addax_spark.sources.http import HttpReadSpec, read_http
-
-        spec = HttpReadSpec(
-            url=url, token="tok123", result_key="result",
-            columns=["id", "name", "$.nested.v"], page_size=2,
-        )
-        seq = read_http(spark, spec)
-        assert seq.columns == ["id", "name", "nested_v"]
-        assert dict(seq.dtypes) == {c: "string" for c in seq.columns}  # reference: all strings
-        got = sorted((r.id, r.name, r.nested_v) for r in seq.collect())
-        assert got == [(str(i), f"user{i}", str(i * 10)) for i in range(5)]
-        assert all(a == "Bearer tok123" for a in seen_auth if a is not None)
-
-        par = read_http(spark, HttpReadSpec(
-            url=url, result_key="result", columns=["id", "name", "$.nested.v"],
-            page_size=2, max_pages=3,
-        ))
-        assert sorted((r.id, r.name, r.nested_v) for r in par.collect()) == got
-
-        # '*' expands to the first record's keys; nested stays raw JSON
-        star = read_http(spark, HttpReadSpec(url=url, result_key="result", page_size=100))
-        assert star.columns == ["id", "name", "nested"]
-
-        # config-driven dispatch (reference key names)
-        from addax_spark.jobconfig import _read
-
-        cfg = {"job": {"content": {
-            "reader": {"name": "httpreader", "parameter": {
-                "connection": {"url": url}, "resultKey": "result",
-                "column": ["id", "name"], "isPage": True,
-                "pageParams": {"pageSize": {"key": "pageSize", "value": 2}},
-            }},
-            "writer": {"name": "streamwriter", "parameter": {}}}}}
-        df = _read(spark, job_from_config(cfg))
-        assert df.count() == 5 and df.columns == ["id", "name"]
-    finally:
-        srv.shutdown()
-
-
-def test_string_radix_split():
-    """ASCII string-pk split (RangeSplitUtil radix-128 analog): points are
-    lexicographically ordered, bounded by [lo, hi], tile the keyspace, and
-    the derived predicates quote string literals."""
-    pts = jdbc.string_radix_points("aaa", "zzz", 8)
-    assert len(pts) == 8
-    assert pts[0] == "aaa"
-    assert pts == sorted(pts)
-    assert all("aaa" <= p <= "zzz" for p in pts)
-    # each split point is distinct -> 8 non-empty ranges
-    assert len(set(pts)) == 8
-    # a prefix lower bound pads low and sorts first
-    pts2 = jdbc.string_radix_points("a", "ab", 3)
-    assert pts2[0] == "a" and all("a" <= p <= "ab" for p in pts2) and pts2 == sorted(pts2)
-    # degenerate and error cases
-    assert jdbc.string_radix_points("x", "x", 4) == ["x"]
-    with pytest.raises(ValueError, match="not ASCII"):
-        jdbc.string_radix_points("é", "z", 2)
-    with pytest.raises(ValueError, match="hi < lo"):
-        jdbc.string_radix_points("b", "a", 2)
-    # predicates quote + escape string points
-    preds = jdbc.split_predicates("pk", ["a'b", "m"], nullable=False)
-    assert preds == ["pk >= 'a''b' AND pk < 'm'", "pk >= 'm'"]
-
-
-def test_table_sink_modes(spark, tmp_path):
-    t = str(tmp_path / "t")
-    df1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, part string")
-    df2 = spark.createDataFrame([(3, "b")], "id long, part string")
-    write_table(df1, t, "append", ["part"])
-    write_table(df2, t, "overwrite_partitions", ["part"])
-    got = {(r.id, r.part) for r in read_table(spark, t).collect()}
-    assert got == {(1, "a"), (3, "b")}  # only part=b replaced
-    write_table(df2, t, "truncate", ["part"])
-    assert {(r.id, r.part) for r in read_table(spark, t).collect()} == {(3, "b")}
 
 
 def test_streaming_rollup_matches_batch(spark, tmp_path):
@@ -321,9 +150,9 @@ def test_stateful_parquet_sink_resume(spark, tmp_path):
     micro-batch's emissions to a batch_id partition with dynamic overwrite
     (a replayed batch overwrites itself -> exactly-once per batch id). The
     query is killed mid-drain, restarted on the SAME checkpoint (restoring
-    per-conversation state), and latest_state over the files equals the
+    per-conversation state), and final_state over the files equals the
     batch totals — counts, sums, last turn — for every conversation."""
-    from addax_spark.streaming.stateful import latest_state, run_state_to_parquet
+    from addax_spark.streaming.stateful import final_state, run_state_to_parquet
 
     src = str(tmp_path / "ssink_src")
     out = str(tmp_path / "ssink_out")
@@ -362,7 +191,7 @@ def test_stateful_parquet_sink_resume(spark, tmp_path):
     # phase 2: restart on the same checkpoint; full drain
     run_state_to_parquet(spark, src, out, ckpt, max_files_per_trigger=1)
 
-    got = {r.conv_id: r for r in latest_state(spark, out).collect()}
+    got = {r.conv_id: r for r in final_state(spark.read.parquet(out)).collect()}
     exp = {
         r.conv_id: r
         for r in df.groupBy("conv_id")
@@ -378,21 +207,6 @@ def test_stateful_parquet_sink_resume(spark, tmp_path):
         g = got[cid]
         assert g.n_turns == e.n and g.sum_len == e.s, cid
         assert g.last_turn_idx == e.last.turn_idx, cid
-
-
-def test_table_upsert(spark, tmp_path):
-    from addax_spark.sinks.table import upsert, read_table
-
-    t = str(tmp_path / "up")
-    base = spark.createDataFrame(
-        [(1, "a", "old1"), (2, "a", "old2"), (3, "b", "old3")], "id long, part string, v string"
-    )
-    upsert(spark, base, t, ["id"], ["part"])
-    # update id=2, insert id=4 (both in part=a); part=b untouched
-    delta = spark.createDataFrame([(2, "a", "new2"), (4, "a", "new4")], "id long, part string, v string")
-    upsert(spark, delta, t, ["id"], ["part"])
-    got = {r.id: (r.part, r.v) for r in read_table(spark, t).collect()}
-    assert got == {1: ("a", "old1"), 2: ("a", "new2"), 3: ("b", "old3"), 4: ("a", "new4")}
 
 
 def test_stateful_timeout_evicts_state(spark, tmp_path):
@@ -462,141 +276,3 @@ def test_stateful_timeout_evicts_state(spark, tmp_path):
         assert not any(r.n_turns == 5 for r in rows), "state survived eviction"
     finally:
         q.stop()
-
-
-def test_kafka_record_parse_roundtrip(spark):
-    """kafkareader's JSON->columns mapping as a pure transformation: record
-    value bytes -> typed transcript rows -> back to writer records."""
-    from addax_spark.streaming.kafka import parse_transcript_records, to_kafka_records
-    from addax_spark import synth
-
-    df = synth.transcripts(spark, n_convs=5, avg_turns=4)
-    records = to_kafka_records(df)  # key=conv_id, value=JSON
-    assert dict(records.dtypes) == {"key": "string", "value": "string"}
-    back = parse_transcript_records(records.select(F.col("value").cast("binary").alias("value")))
-    assert back.count() == df.count()
-    cols = ["conv_id", "turn_idx", "role", "text", "ts"]
-    assert back.select(cols).exceptAll(df.select(cols)).count() == 0
-    # malformed value -> all-null row (dirty record), not a crash
-    bad = spark.createDataFrame([(bytearray(b"{not json"),)], "value binary")
-    r = parse_transcript_records(bad).collect()[0]
-    assert r.conv_id is None and r.ts is None
-
-
-def test_extra_formats_fallback_chain(spark, tmp_path):
-    """ColumnCast extraFormats: a timestamp column parsed through a format
-    fallback chain; a value no pattern accepts quarantines as dirty."""
-    p = tmp_path / "fmt.csv"
-    p.write_text(
-        "1,2024-01-05 10:00:00\n2,2024/01/05 11:30\n3,05.01.2024\n4,whenever\n"
-    )
-    spec = StorageReadSpec(
-        path=str(p),
-        fmt="csv",
-        columns=[
-            ColumnSpec(type="long", index=0, name="id"),
-            ColumnSpec(type="timestamp", index=1, name="ts", format="yyyy-MM-dd HH:mm:ss"),
-        ],
-        extra_formats=["yyyy/MM/dd HH:mm", "dd.MM.yyyy"],
-    )
-    rows = {r.id: r.ts for r in read_storage(spark, spec).collect()}
-    assert rows[1].hour == 10 and rows[2].minute == 30 and rows[3].day == 5
-    assert rows[4] is None  # no pattern matched -> null, quarantinable
-    # quarantine path with the same chain
-    raw = spark.createDataFrame([("2024/01/05 11:30",), ("whenever",)], "ts string")
-    clean, dirty = quarantine(
-        raw, {"ts": "timestamp"}, with_reason=True,
-        formats={"ts": ["yyyy-MM-dd HH:mm:ss", "yyyy/MM/dd HH:mm"]},
-    )
-    assert clean.count() == 1 and dirty.count() == 1
-    assert "ts !~ timestamp" in dirty.collect()[0]._error_reason
-
-
-def test_table_replace_mode(spark, tmp_path):
-    """writeMode=replace: delete-then-insert by key — whole-row equivalence
-    with upsert on the parquet-dir sink."""
-    from addax_spark.sinks.table import read_table, replace
-
-    t = str(tmp_path / "rep")
-    base = spark.createDataFrame(
-        [(1, "a", "old1"), (2, "a", "old2")], "id long, part string, v string"
-    )
-    replace(spark, base, t, ["id"], ["part"])
-    delta = spark.createDataFrame([(2, "a", "new2"), (3, "b", "new3")], "id long, part string, v string")
-    replace(spark, delta, t, ["id"], ["part"])
-    got = {r.id: r.v for r in read_table(spark, t).collect()}
-    assert got == {1: "old1", 2: "new2", 3: "new3"}
-
-
-def test_split_predicates_rejects_backslash():
-    """A backslash in a user-supplied string bound has no dialect-portable
-    SQL escaping (MySQL default mode reads it as an escape, standard SQL
-    reads it literally) — reject loudly instead of shifting a range
-    silently on one dialect (ADVICE r4)."""
-    with pytest.raises(ValueError, match="backslash"):
-        jdbc.split_predicates("pk", ["a\\b", "m"], nullable=False)
-
-
-def test_http_reader_guardrails(spark):
-    """ADVICE r4 hardening: (a) a server that always returns exactly
-    page_size records must not spin the sequential probe forever —
-    page_limit bounds it with a loud error; (b) in the executor fan-out a
-    page whose resultKey path is ABSENT (error envelope) fails the read
-    instead of silently dropping the page, while a present-but-empty array
-    still reads as a legitimate empty page."""
-    import http.server
-    import json as _json
-    import threading
-    import urllib.parse
-
-    class H(http.server.BaseHTTPRequestHandler):
-        def do_GET(self):
-            q = urllib.parse.parse_qs(urllib.parse.urlparse(self.path).query)
-            idx = int(q.get("pageIndex", ["1"])[0])
-            size = int(q.get("pageSize", ["2"])[0])
-            mode = urllib.parse.urlparse(self.path).path
-            if mode == "/forever":  # always a full page -> never a short page
-                body = {"result": [{"id": idx * 100 + j} for j in range(size)]}
-            elif mode == "/flaky":  # page 2 is an error envelope, no resultKey
-                body = (
-                    {"error": "rate limited"}
-                    if idx == 2
-                    else {"result": [{"id": idx * 100 + j} for j in range(size)]}
-                )
-            else:  # /empty: resultKey present, array empty
-                body = {"result": []}
-            payload = _json.dumps(body).encode()
-            self.send_response(200)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(payload)))
-            self.end_headers()
-            self.wfile.write(payload)
-
-        def log_message(self, *a):  # noqa: N802
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    base = f"http://127.0.0.1:{srv.server_address[1]}"
-    try:
-        from addax_spark.sources.http import HttpReadSpec, read_http
-
-        with pytest.raises(ValueError, match="page_limit"):
-            read_http(spark, HttpReadSpec(
-                url=f"{base}/forever", result_key="result",
-                columns=["id"], page_size=2, page_limit=5,
-            ))
-
-        with pytest.raises(Exception, match="resultKey path 'result' absent"):
-            read_http(spark, HttpReadSpec(
-                url=f"{base}/flaky", result_key="result",
-                columns=["id"], page_size=2, max_pages=3,
-            )).collect()
-
-        ok = read_http(spark, HttpReadSpec(
-            url=f"{base}/empty", result_key="result",
-            columns=["id"], page_size=2, max_pages=2,
-        ))
-        assert ok.count() == 0  # empty array != error envelope
-    finally:
-        srv.shutdown()
