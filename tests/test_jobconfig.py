@@ -1,136 +1,41 @@
-"""Declarative job-config composer tests: the reference's JSON/YAML job
-shape (reader -> transformer chain -> writer + setting errorLimit/speed)
-runs end-to-end; dirty rows are quarantined WITH reasons and the error
-budget fails the job past the limit (ErrorRecordChecker record priority);
-preSql truncate + postSql probe; dx_filter null-literal semantics."""
+"""Transformer-chain and job-driver tests: the reference's transformer_demo
+chain (dx_replace -> dx_map(^) -> dx_filter) run through `chain`,
+dx_filter null-literal semantics, `chain`'s by-name lookup of the dx_*
+built-ins and its single pass, native types through the date-partition
+reader, and a zero-unit dry run of `job.run` that writes no output."""
 
 from __future__ import annotations
 
-import json
+import os
+from decimal import Decimal
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
-from addax_spark.jobconfig import job_from_config, load_config, run_job
-from addax_spark.operators.transforms import dx_filter
-
-
-def _csv_job(src, out, error_record_limit=10):
-    return {
-        "job": {
-            "setting": {
-                "speed": {"byte": -1, "channel": 1},
-                "errorLimit": {"record": error_record_limit, "percentage": 0.5},
-            },
-            "content": {
-                "reader": {
-                    "name": "txtfilereader",
-                    "parameter": {
-                        "path": src,
-                        "fieldDelimiter": ",",
-                        "nullFormat": "\\N",
-                        "column": [
-                            {"index": 0, "type": "long", "name": "id"},
-                            {"index": 1, "type": "string", "name": "name"},
-                            {"index": 2, "type": "double", "name": "score"},
-                        ],
-                    },
-                },
-                "transformer": [
-                    {"name": "dx_substr", "parameter": {"columnIndex": 1, "paras": ["0", "3"]}},
-                    {"name": "dx_filter", "parameter": {"columnIndex": 0, "paras": [">", "90"]}},
-                ],
-                "writer": {
-                    "name": "hdfswriter",
-                    "parameter": {
-                        "path": out,
-                        "fileType": "parquet",
-                        "writeMode": "truncate",
-                        "preSql": ["truncate table @table"],
-                        "postSql": ["select 1"],
-                    },
-                },
-            },
-        }
-    }
+from addax_spark import synth
+from addax_spark.job import RollupJobSpec, read_dates, run
+from addax_spark.operators.transforms import Transform, chain, dx_filter
+from addax_spark.retention import tier_root
+from addax_spark.schema import ROLLUP
 
 
-def test_csv_to_parquet_job(spark, tmp_path):
-    src = tmp_path / "in.csv"
-    src.write_text("1,alice,2.5\n2,bobby,3.5\n95,zed,9.9\nbad,eve,1.0\n4,carl,oops\n")
-    out = str(tmp_path / "out")
-    m = run_job(spark, _csv_job(str(src), out))
-    assert m["rows_read"] == 5
-    assert m["dirty_records"] == 2  # "bad" id and "oops" score
-    assert m["rows_written"] == 2  # id=95 dropped by dx_filter(>90)
-    got = {r.id: (r.name, r.score) for r in spark.read.parquet(out).collect()}
-    assert got == {1: ("ali", 2.5), 2: ("bob", 3.5)}
-    # dirty lineage persisted as a SIBLING with reasons
-    errs = spark.read.json(out + "_errors")
-    reasons = {r._error_reason for r in errs.collect()}
-    assert any("id !~ long: 'bad'" in r for r in reasons)
-    assert any("score !~ double: 'oops'" in r for r in reasons)
-
-
-def test_error_budget_enforced_after_persist(spark, tmp_path):
-    src = tmp_path / "in2.csv"
-    src.write_text("1,a,1.0\nx,b,2.0\ny,c,3.0\n")
-    out = str(tmp_path / "out2")
-    with pytest.raises(RuntimeError, match="limit exceeded"):
-        run_job(spark, _csv_job(str(src), out, error_record_limit=1))
-    # reference semantics: budget checked POST-run -> dirty rows + output exist
-    assert spark.read.json(out + "_errors").count() == 2
-    assert spark.read.parquet(out).count() == 1
-
-
-def test_streamreader_transformer_demo_shape(spark, tmp_path):
-    """The reference's transformer_demo.json shape (streamreader constants +
-    random column, dx_replace/dx_substr/dx_map(^)/dx_filter chain)."""
-    cfg = {
-        "job": {
-            "setting": {"speed": {"channel": 1}},
-            "content": {
-                "reader": {
-                    "name": "streamreader",
-                    "parameter": {
-                        "column": [
-                            {"value": "My name is xxxx", "type": "string"},
-                            {"value": "19", "type": "string"},
-                            {"random": "0,10", "type": "long"},
-                        ],
-                        "sliceRecordCount": 10,
-                    },
-                },
-                "transformer": [
-                    {"name": "dx_replace", "parameter": {"columnIndex": 0, "paras": ["11", "4", "wgzhao"]}},
-                    {"name": "dx_map", "parameter": {"columnIndex": 1, "paras": ["^", "2"]}},
-                    {"name": "dx_filter", "parameter": {"columnIndex": 2, "paras": ["<", "5"]}},
-                ],
-                "writer": {"name": "streamwriter", "parameter": {"print": False}},
-            },
-        }
-    }
-    m = run_job(spark, cfg)
-    assert m["rows_read"] == 10
-    assert 0 < m["rows_written"] <= 10  # deterministic: same every run
-    again = run_job(spark, cfg)
-    assert again["rows_written"] == m["rows_written"]
-
-
-def test_yaml_config_roundtrip(tmp_path):
-    import yaml
-
-    cfg = _csv_job("/x/in.csv", "/x/out")
-    p = tmp_path / "job.yaml"
-    p.write_text(yaml.safe_dump(cfg))
-    j = job_from_config(load_config(str(p)))
-    assert j.reader_name == "txtfilereader"
-    assert [t.name for t in j.transforms] == ["dx_substr", "dx_filter"]
-    assert j.error_limit_records == 10 and j.channel == 1
-    jp = tmp_path / "job.json"
-    jp.write_text(json.dumps(cfg))
-    assert job_from_config(load_config(str(jp))).writer_name == "hdfswriter"
+def test_streamreader_transformer_demo_shape(spark):
+    """The reference's transformer_demo.json shape: constant string columns
+    plus a 0..10 long column, through the dx_replace / dx_map(^) / dx_filter
+    chain; the result is the same on every run."""
+    rows = [("My name is xxxx", "19", i % 11) for i in range(10)]
+    df = spark.createDataFrame(rows, "col1 string, col2 string, col3 long")
+    demo = [
+        Transform("dx_replace", ("col1", 11, 4, "wgzhao")),
+        Transform("dx_map", ("col2", "^", "2")),
+        Transform("dx_filter", ("col3", "<", "5")),
+    ]
+    got = sorted(tuple(r) for r in chain(df, demo).collect())
+    # dx_filter drops the matching rows: col3 < 5 goes, 5..9 stay
+    assert got == [("My name is wgzhao", Decimal(361), v) for v in range(5, 10)]
+    assert sorted(tuple(r) for r in chain(df, demo).collect()) == got
 
 
 def test_dx_filter_null_literal_semantics(spark):
@@ -151,275 +56,62 @@ def test_dx_filter_null_literal_semantics(spark):
     assert keep("not like", "a.*") == ["a"]  # nulls dropped on not-like
 
 
-def test_pre_check_dry_run(spark, tmp_path):
-    """preCheck twin (JobContainer.java:191-269): validates reader schema,
-    transformer resolution and writer dispatch on a LIMIT 0 plan — no data
-    moved, no output written."""
-    import os
+def test_registered_transformer_and_single_pass(spark, tmp_path):
+    """`chain` resolves each dx_* built-in by its registered name, and the
+    pipeline executes ONCE: custom logic enters as a pandas UDF column ahead
+    of the chain, and an accumulator inside it counts row visits — building
+    the chain (dx_filter reads the column type) runs no Spark job, so the
+    write is the only pass. An unknown name fails before any data moves."""
+    acc = spark.sparkContext.accumulator(0)
 
-    from addax_spark.jobconfig import pre_check
+    def upper_counted(s: pd.Series) -> pd.Series:
+        acc.add(len(s))
+        return s.str.upper()
 
-    src = tmp_path / "pc.csv"
-    src.write_text("1,alice,2.5\n")
-    out = str(tmp_path / "pc_out")
-    res = pre_check(spark, _csv_job(str(src), out))
-    assert res["ok"] and res["columns"] == ["id", "name", "score"]
-    assert res["dirty_cast_columns"] == ["id", "score"]
-    assert not os.path.exists(out)  # nothing written
-    bad = _csv_job(str(src), out)
-    bad["job"]["content"]["writer"]["name"] = "nosuchwriter"
-    with pytest.raises(ValueError, match="unsupported writer"):
-        pre_check(spark, bad)
-
-
-def test_job_lifecycle_hooks(spark, tmp_path):
-    """preHandle/postHandle twins on the rollup job driver."""
-    from addax_spark import synth
-    from addax_spark.job import RollupJobSpec, run
-
-    raw = str(tmp_path / "hooks_in.parquet")
-    synth.transcripts(spark, n_convs=5, avg_turns=5).write.parquet(raw)
-    calls = []
-    spec = RollupJobSpec(
-        raw, str(tmp_path / "hooks_out"), job_id="hooks", tiers=["1m"],
-        pre_hook=lambda sp, s: calls.append(("pre", s.job_id)),
-        post_hook=lambda sp, s, summary: calls.append(("post", summary["units"])),
-    )
-    res = run(spark, spec)
-    assert calls[0] == ("pre", "hooks")
-    assert calls[1] == ("post", res["units"])
-
-
-def test_streamreader_incr_sequences(spark):
-    """streamreader incr columns (StreamReader.java:476-513): long start/step
-    with default step 1; date stepping with unit table (:571-583) and
-    defaults step=1,unit=d (:226-249); value wins over incr (:187-196);
-    a column with none of value/random/incr raises (:180-182)."""
-    from addax_spark.jobconfig import _read
-
-    def read(cols, n=4):
-        cfg = {"job": {"content": {
-            "reader": {"name": "streamreader",
-                       "parameter": {"sliceRecordCount": n, "column": cols}},
-            "writer": {"name": "streamwriter", "parameter": {}}}}}
-        return _read(spark, job_from_config(cfg)).orderBy("col1").collect()
-
-    rows = read([{"incr": "100", "type": "long"}])
-    assert [r.col1 for r in rows] == [100, 101, 102, 103]
-    rows = read([{"incr": "5,10", "type": "long"}])
-    assert [r.col1 for r in rows] == [5, 15, 25, 35]
-    # date default unit d, custom format; hour unit
-    rows = read([{"incr": "2024-01-01,2", "type": "date", "dateFormat": "yyyy-MM-dd"},
-                 {"incr": "2024-01-01 00:00:00,6,h", "type": "date"}], n=3)
-    assert [str(r.col1)[:10] for r in rows] == ["2024-01-01", "2024-01-03", "2024-01-05"]
-    assert [str(r.col2)[11:13] for r in rows] == ["00", "06", "12"]
-    # value has priority over incr
-    rows = read([{"incr": "5,1", "value": "42", "type": "long"}], n=2)
-    assert [r.col1 for r in rows] == [42, 42]
-    # strictness
-    with pytest.raises(ValueError, match="value/random/incr"):
-        read([{"type": "long"}])
-    with pytest.raises(ValueError, match="long/date"):
-        read([{"incr": "1,1", "type": "double"}])
-    with pytest.raises(ValueError, match="invalid date unit"):
-        read([{"incr": "2024-01-01 00:00:00,1,q", "type": "date"}])
-    # an empty unit field is the same config error, not an IndexError
-    with pytest.raises(ValueError, match="invalid date unit"):
-        read([{"incr": "2024-01-01 00:00:00,1,", "type": "date"}])
-
-
-def test_datareader_random_range_errors(spark):
-    """datareader random rule config errors raise clearly at compile time:
-    missing range, non-integer range, hi < lo (ADVICE r3 — the old path
-    surfaced int("None") or a runtime pmod-by-nonpositive failure)."""
-    from addax_spark.jobconfig import _read
-
-    def read(cols, n=2):
-        cfg = {"job": {"content": {
-            "reader": {"name": "datareader",
-                       "parameter": {"sliceRecordCount": n, "column": cols}},
-            "writer": {"name": "streamwriter", "parameter": {}}}}}
-        return _read(spark, job_from_config(cfg)).collect()
-
-    with pytest.raises(ValueError, match="needs a 'lo,hi' range"):
-        read([{"rule": "random", "type": "long"}])
-    with pytest.raises(ValueError, match="must be 'lo,hi' integers"):
-        read([{"rule": "random", "random": "a,b", "type": "long"}])
-    with pytest.raises(ValueError, match="hi < lo"):
-        read([{"rule": "random", "random": "9,5", "type": "long"}])
-    # valid range still works, inclusive bounds
-    vals = {r.col1 for r in read([{"rule": "random", "random": "3,4", "type": "long"}], n=16)}
-    assert vals <= {3, 4}
-
-
-def test_jsonpath_projected_json_job(spark, tmp_path):
-    """jsonfilereader JSONPath projection: nested paths via get_json_object,
-    missing leafs -> null, typed casts through quarantine, constants."""
-    src = tmp_path / "in.jsonl"
-    lines = [
-        json.dumps({"id": 1, "score": {"math": 90.5}, "tags": ["a", "b"]}),
-        json.dumps({"id": 2, "score": {}}),  # missing leaf -> null
-        json.dumps({"id": "bad", "score": {"math": 1.0}}),  # dirty
-    ]
-    src.write_text("\n".join(lines) + "\n")
-    out = str(tmp_path / "jout")
-    cfg = {"job": {"setting": {"errorLimit": {"record": 5}}, "content": {
-        "reader": {"name": "txtfilereader", "parameter": {
-            "path": str(src), "fileType": "json",
-            "column": [
-                {"index": "$.id", "type": "long", "name": "id"},
-                {"index": "$.score.math", "type": "double", "name": "math"},
-                {"index": "$.tags[0]", "type": "string", "name": "tag0"},
-                {"value": "k", "type": "string", "name": "const"},
-            ]}},
-        "writer": {"name": "hdfswriter", "parameter": {
-            "path": out, "fileType": "parquet", "writeMode": "truncate"}}}}}
-    m = run_job(spark, cfg)
-    assert (m["rows_read"], m["rows_written"], m["dirty_records"]) == (3, 2, 1)
-    got = {r.id: (r.math, r.tag0, r.const)
-           for r in spark.read.parquet(out).collect()}
-    assert got == {1: (90.5, "a", "k"), 2: (None, None, "k")}
-    # config validation mirrors JsonReader.java:139-153
-    bad = json.loads(json.dumps(cfg))
-    bad["job"]["content"]["reader"]["parameter"]["column"][0] = {"type": "long"}
-    with pytest.raises(ValueError, match="index or value"):
-        run_job(spark, bad)
+    df = spark.createDataFrame(
+        [(1, "alice"), (2, "bob"), (95, "carl")], "id long, name string"
+    ).withColumn("name", F.pandas_udf(upper_counted, StringType())(F.col("name")))
+    out = str(tmp_path / "single_pass")
+    chain(df, [
+        Transform("dx_substr", ("name", 0, 3)),
+        Transform("dx_pad", ("name", "r", 4, "_")),
+        Transform("dx_filter", ("id", ">", "90")),
+    ]).write.parquet(out)
+    assert {r.name for r in spark.read.parquet(out).collect()} == {"ALI_", "BOB_"}
+    # single pass: the filter on id runs below the UDF, so the 2 surviving
+    # rows crossed it exactly once each, during the write
+    assert acc.value == 2
+    with pytest.raises(KeyError, match="dx_nope"):
+        chain(df, [Transform("dx_nope", ("name",))])
+    assert acc.value == 2
 
 
 def test_parquet_reader_keeps_native_types(spark, tmp_path):
-    """hdfsreader fileType=parquet with typed columns must keep native types
-    (no silent string round-trip)."""
-    src = str(tmp_path / "typed_in")
-    spark.createDataFrame([(1, 2.5, "x")], "a long, b double, c string").write.parquet(src)
+    """A rollup tier read back through the date-partition reader keeps its
+    native column types (no string round-trip), and an empty date range
+    yields the same typed columns."""
+    raw = str(tmp_path / "typed_in.parquet")
+    synth.transcripts(spark, n_convs=4, avg_turns=5).write.parquet(raw)
     out = str(tmp_path / "typed_out")
-    cfg = {"job": {"content": {
-        "reader": {"name": "hdfsreader", "parameter": {
-            "path": src, "fileType": "parquet",
-            "column": [{"name": "a", "type": "long"},
-                       {"name": "b", "type": "double"},
-                       {"name": "c", "type": "string"}]}},
-        "writer": {"name": "hdfswriter", "parameter": {
-            "path": out, "fileType": "parquet", "writeMode": "truncate"}}}}}
-    m = run_job(spark, cfg)
-    assert m["rows_written"] == 1
-    assert dict(spark.read.parquet(out).dtypes) == {"a": "bigint", "b": "double", "c": "string"}
+    run(spark, RollupJobSpec(raw, out, job_id="typed", tiers=["1m"]))
+    expected = {f.name: f.dataType.simpleString() for f in ROLLUP.fields}
+    expected["date"] = "date"
+    got = read_dates(spark, tier_root(out, "1m"), ROLLUP)
+    assert dict(got.dtypes) == expected
+    assert got.count() > 0
+    empty = read_dates(spark, tier_root(out, "1m"), ROLLUP, "1900-01-01", "1900-01-01")
+    assert dict(empty.dtypes) == expected and empty.count() == 0
 
 
-def test_nonconflict_write_mode(spark, tmp_path):
-    out = str(tmp_path / "nc_out")
-    cfg = {"job": {"content": {
-        "reader": {"name": "streamreader", "parameter": {
-            "sliceRecordCount": 3, "column": [{"incr": "1", "type": "long"}]}},
-        "writer": {"name": "txtfilewriter", "parameter": {
-            "path": out, "fileType": "parquet", "writeMode": "nonConflict"}}}}}
-    assert run_job(spark, cfg)["rows_written"] == 3  # empty target: fine
-    with pytest.raises(RuntimeError, match="nonConflict"):
-        run_job(spark, cfg)  # second run: target non-empty
-
-
-def test_jdbc_writer_presql_refused(spark):
-    """A migrated job whose jdbc writer carries preSql must fail loudly, not
-    silently skip the statement the reference would run."""
-    cfg = {"job": {"content": {
-        "reader": {"name": "streamreader", "parameter": {
-            "sliceRecordCount": 1, "column": [{"value": "1", "type": "long"}]}},
-        "writer": {"name": "mysqlwriter", "parameter": {
-            "preSql": ["truncate table @table"],
-            "connection": [{"jdbcUrl": "jdbc:mysql://h/db", "table": ["t"]}]}}}}}
-    with pytest.raises(ValueError, match="preSql"):
-        run_job(spark, cfg)
-
-
-def test_registered_transformer_and_single_pass(spark, tmp_path):
-    """Custom named transformer (TransformerRegistry analog) runs from a job
-    config, and the pipeline executes ONCE: an accumulator inside the
-    registered transform counts row-visits — with the old count()-based
-    metrics it would see every row 2-3x."""
-    from pyspark.sql.types import StringType
-
-    from addax_spark.operators.transforms import register_transformer
-
-    acc = spark.sparkContext.accumulator(0)
-
-    def upper_counted(df, col, *paras):
-        def f(s: "pd.Series") -> "pd.Series":
-            acc.add(len(s))
-            return s.str.upper()
-        fu = F.pandas_udf(f, StringType())
-        return df.withColumn(col, fu(F.col(col)))
-
-    register_transformer("dx_upper_counted", upper_counted)
-    src = tmp_path / "reg.csv"
-    src.write_text("1,alice\n2,bob\nx,carl\n")
-    out = str(tmp_path / "reg_out")
-    cfg = {"job": {"setting": {"errorLimit": {"record": 5}}, "content": {
-        "reader": {"name": "txtfilereader", "parameter": {
-            "path": str(src),
-            "column": [{"index": 0, "type": "long", "name": "id"},
-                       {"index": 1, "type": "string", "name": "name"}]}},
-        "transformer": [
-            {"name": "dx_upper_counted", "parameter": {"columnIndex": 1, "paras": []}}],
-        "writer": {"name": "hdfswriter", "parameter": {
-            "path": out, "fileType": "parquet", "writeMode": "truncate"}}}}}
-    m = run_job(spark, cfg)
-    assert (m["rows_read"], m["rows_written"], m["dirty_records"]) == (3, 2, 1)
-    assert {r.name for r in spark.read.parquet(out).collect()} == {"ALICE", "BOB"}
-    # single pass: the 2 clean rows crossed the transform exactly once
-    assert acc.value == 2
-    # unknown names still fail fast at compile time
-    bad = json.loads(json.dumps(cfg))
-    bad["job"]["content"]["transformer"][0]["name"] = "dx_nope"
-    with pytest.raises(ValueError, match="unknown transformer"):
-        job_from_config(bad)
-
-
-def test_datareader_rules(spark, tmp_path):
-    """datareader twin (DataReader.java:419-560): constant/random/incr plus
-    faker-style rules as deterministic JVM column expressions (documented
-    deviation: seeded by row hash, original pools)."""
-    import re
-
-    from addax_spark.jobconfig import _read
-
-    cfg = {"job": {"content": {
-        "reader": {"name": "datareader", "parameter": {
-            "sliceRecordCount": 20,
-            "column": [
-                {"rule": "incr", "incr": "1,1", "type": "long", "name": "id"},
-                {"rule": "name", "name": "who"},
-                {"rule": "address", "name": "addr"},
-                {"rule": "email", "name": "email"},
-                {"rule": "phone", "name": "phone"},
-                {"rule": "uuid", "name": "uid"},
-                {"rule": "creditCard", "name": "cc"},
-                {"rule": "lat", "type": "double", "name": "lat"},
-                {"rule": "lng", "type": "double", "name": "lng"},
-                {"rule": "zipCode", "type": "long", "name": "zip"},
-                {"rule": "company", "name": "co"},
-                {"rule": "constant", "value": "k", "name": "const"},
-                {"rule": "random", "random": "5,9", "type": "long", "name": "rnd"},
-            ]}},
-        "writer": {"name": "streamwriter", "parameter": {}}}}}
-    df = _read(spark, job_from_config(cfg))
-    rows = df.orderBy("id").collect()
-    assert [r.id for r in rows] == list(range(1, 21))
-    r0 = rows[0]
-    assert re.fullmatch(r"[A-Z][a-z]+ [A-Z][a-z]+", r0.who)
-    assert re.fullmatch(r"\d+ \w+ St, \w+", r0.addr)
-    assert re.fullmatch(r"[a-z]+\.[a-z]+\d{1,2}@[a-z.]+", r0.email)
-    assert re.fullmatch(r"1\d{10}", r0.phone)
-    assert re.fullmatch(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", r0.uid)
-    assert re.fullmatch(r"\d{16}", r0.cc)
-    assert -90 <= r0.lat <= 90 and -180 <= r0.lng <= 180
-    assert 100_000 <= r0.zip <= 699_999
-    assert all(5 <= r.rnd <= 9 for r in rows) and r0.const == "k"
-    # deterministic: identical across invocations and parallelism
-    again = _read(spark, job_from_config(cfg)).orderBy("id").collect()
-    assert again == rows
-    # unsupported rule raises (buildOtherColumn default branch)
-    bad = {"job": {"content": {
-        "reader": {"name": "datareader", "parameter": {
-            "sliceRecordCount": 1, "column": [{"rule": "nosuch"}]}},
-        "writer": {"name": "streamwriter", "parameter": {}}}}}
-    with pytest.raises(ValueError, match="unsupported rule"):
-        _read(spark, job_from_config(bad))
+def test_pre_check_dry_run(spark, tmp_path):
+    """A zero-unit run discovers the input's day units and resolves the
+    manifest, but moves no data: no tier or chunk output is written."""
+    raw = str(tmp_path / "dry_in.parquet")
+    df = synth.transcripts(spark, n_convs=4, avg_turns=5)
+    df.write.parquet(raw)
+    n_days = df.select(F.to_date("ts")).distinct().count()
+    out = str(tmp_path / "dry_out")
+    summary = run(spark, RollupJobSpec(raw, out, job_id="dry", max_units=0))
+    assert summary["units_total"] == n_days and summary["units"] == 0
+    assert not os.path.exists(f"{out}/tiers")
+    assert not os.path.exists(f"{out}/chunks")

@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from addax_spark.operators import dedup, similarity, transforms as tf
-from addax_spark.operators.transforms import dx_filter
 
 from .conftest import SF_SMALL, SF_TINY
 
@@ -121,24 +120,6 @@ def test_transform_edges(spark):
     # filter drops matches, keeps nulls
     out = [r.id for r in tf.dx_filter(df, "s", "like", "ab.*").collect()]
     assert out == [2]  # 1 and 3 match the anchored regex and are dropped
-
-
-def test_dx_filter_null_literal_semantics(spark):
-    """FilterTransformer null branches: '=' 'null' drops nulls; '!=' other
-    drops nulls; '>' keeps nulls; 'not like' drops nulls."""
-    df = spark.createDataFrame(
-        [("a",), (None,), ("null",), ("b",)], "v string"
-    )
-    keep = lambda op, val: sorted(  # noqa: E731
-        r.v or "<null>" for r in dx_filter(df, "v", op, val).collect()
-    )
-    assert keep("=", "null") == ["a", "b"]  # null AND literal 'null' dropped
-    assert keep("=", "a") == ["<null>", "b", "null"]
-    assert keep("!=", "null") == ["<null>", "null"]  # kept: null field + 'null'
-    assert keep("!=", "a") == ["a"]  # nulls dropped on != other
-    assert keep(">", "a") == ["<null>", "a"]  # nulls skip comparison
-    assert keep("like", "a.*") == ["<null>", "b", "null"]
-    assert keep("not like", "a.*") == ["a"]  # nulls dropped on not-like
 
 
 def test_embedding_exact_path_no_driver_broadcast(spark):
