@@ -18,32 +18,38 @@ split -> schedule -> post). Here:
   its own partitions (dynamic partition overwrite -> idempotent).
 - "metrics" = per-unit rows_read / chunks_encoded / bytes_raw /
   bytes_compressed rows in the manifest (the reference's Communication
-  counters, CommunicationTool.java:30-120).
+  counters, CommunicationTool.java:30-120), counted by Observations on the
+  two write actions as rows pass — the output is never read back — and
+  checked per day: rows read = finest-tier Σ turn_count = Σ chunk n_points.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
-import os
 import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import fs
-from .manifest import Manifest, UnitMetrics
+from .manifest import METRICS, Manifest, UnitMetrics
 from .operators.bucketize import TIER_ORDER
 from .operators.gorilla import encode_chunks
 from .operators.rollup import rollup_tiers
 from .plans.partitioning import colocate_by_series
-from .schema import CHUNKS, ROLLUP
+from .schema import ROLLUP
 
 #: writer-task fan-out per (tier, date) output cell (files per dir bound)
 _WRITE_SALT = 8
+#: salted_writes=None salts at scheduler parallelism >= this: the r5
+#: interleaved A/Bs had unsalted winning at local[2]/local[8] but LOSING at
+#: local[32] (warm mins 45.0 vs 40.1 s: n_parts writer tasks x dates of
+#: small-file churn dominates)
+_SALTED_MIN_CORES = 16
 #: the series value every tier aggregates and the chunk codec encodes
 _VALUE_EXPR = "length(text)"
 #: the total order of points within one series
@@ -60,8 +66,8 @@ class RollupJobSpec:
     n_partitions: int | None = None
     max_units: int | None = None  # for tests: stop after N units (resume later)
     # days per checkpoint batch: one dynamic-partition-overwrite write set
-    # covers the whole batch (amortizes per-action overhead); the manifest
-    # records each day so resume granularity stays per-day
+    # covers the whole batch (amortizes per-action overhead); the batch's
+    # one manifest commit holds a row per day, so resume stays per-day
     unit_batch: int = 16
     # salted_writes=True restores the pre-r5 (date, conv-salt) repartition
     # before every partitionBy write: bounds files/dir at _WRITE_SALT and
@@ -72,13 +78,11 @@ class RollupJobSpec:
     # partition columns per task): files/dir = n_parts per date.
     #
     # Default None = AUTO (r6, VERDICT r5 item 2): salted when scheduler
-    # parallelism >= SPARK_GRAFT_SALTED_MIN_CORES (default 16). The r5
-    # interleaved A/Bs showed unsalted winning at local[2]/local[8] (the
-    # extra shuffle is the bigger term when write-task churn overlaps
-    # compute) but LOSING at local[32] (warm mins 45.0 vs 40.1: n_parts
-    # writer tasks x dates small-file churn dominates) — and every
-    # downstream consumer (compaction listing, snapshot copies, serving
-    # scans) pays the n_parts-files-per-date fan-out again. At cluster
+    # parallelism >= _SALTED_MIN_CORES. Unsalted wins at low parallelism
+    # (the extra shuffle is the bigger term when write-task churn overlaps
+    # compute) but loses at local[32] — and every downstream consumer
+    # (compaction listing, snapshot copies, serving scans) pays the
+    # n_parts-files-per-date fan-out again. At cluster
     # scale parallelism is always >= the threshold, so auto = salted =
     # the bounded-files topology, which is also the correct 100 TB layout.
     salted_writes: bool | None = None
@@ -114,14 +118,27 @@ def read_dates(
     return spark.read.schema(full).option("basePath", base).parquet(*paths)
 
 
+def _observe_days(df: DataFrame, obs: Observation, days: list[str],
+                  **vals: Column | None) -> DataFrame:
+    """``df`` with ``obs`` counting, for each of ``days``, Σ of each ``vals``
+    column (None: the row count) over the rows whose ``date`` is that day,
+    under the key ``"<name> <day>"``. Summed as rows pass through the action
+    that consumes ``df``; ``obs.get`` blocks until it succeeded."""
+    on = {d: F.col("date") == F.lit(_dt.date.fromisoformat(d)) for d in days}
+    return df.observe(obs, *[
+        (F.count(F.when(on[d], 1)) if v is None else F.sum(F.when(on[d], v))).alias(f"{k} {d}")
+        for k, v in vals.items() for d in days
+    ])
+
+
 def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
     """Execute (or resume) a rollup job; returns the metrics summary.
 
     The summary carries a ``phases`` dict of accumulated per-phase driver
-    wall seconds (discover / manifest resume / writer join / metrics /
-    manifest summary) — the reference's PerfRecord phase accounting (PerfRecord.java:162-180)
-    re-expressed, and the tool for attributing the per-job fixed term that
-    caps N->4N scaling efficiency."""
+    wall seconds (discover / manifest resume / writer join / manifest
+    summary) — the reference's PerfRecord phase accounting
+    (PerfRecord.java:162-180) re-expressed, and the tool for attributing
+    the per-job fixed term that caps N->4N scaling efficiency."""
     ph: dict[str, float] = {}
 
     def _ph(key: str, t0: float) -> None:
@@ -177,32 +194,41 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
     # restore the bounded fan-in of _WRITE_SALT files per dir.
     wsalt = F.pmod(F.xxhash64("conv_id"), F.lit(_WRITE_SALT))
     if spec.salted_writes is None:
-        min_cores = int(os.environ.get("SPARK_GRAFT_SALTED_MIN_CORES", "16"))
-        salted = spark.sparkContext.defaultParallelism >= min_cores
+        salted = spark.sparkContext.defaultParallelism >= _SALTED_MIN_CORES
     else:
         salted = spec.salted_writes
 
-    def _write_partitioned(df: DataFrame, ts_col: str, path: str, *parts: str) -> None:
-        out = df.withColumn("date", F.to_date(ts_col))
+    def _write_partitioned(df: DataFrame, path: str, *parts: str) -> None:
         parts = (*parts, "date")
         if salted:
-            out = out.repartition(*[F.col(c) for c in parts], wsalt)
-        out.write.mode("overwrite").option(
+            df = df.repartition(*[F.col(c) for c in parts], wsalt)
+        df.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy(*parts).parquet(path)
 
     for batch in batches:
         t0 = time.time()
         sl = raw.filter(day_filter(batch))
+        # per-day lineage counters, summed by the two write actions as rows
+        # pass, keyed by the output `date` column: input rows before the
+        # encode's shuffle, finest-tier turn_count and the chunks' counts and
+        # bytes. CollectMetrics is not codegen-fused, so each observation sits
+        # on narrow rows or on the rows the writer's sort copies anyway.
+        o_rows, o_chunks, o_tiers = Observation(), Observation(), Observation()
         try:
             # chunk pipeline: the Python-worker encode streams straight into
-            # its writer (per-day metrics are read back from the written
-            # files, a partition-pruned scan of a ~2x-compressed table)
+            # its writer
+            pts = sl.select("conv_id", *_ORDER_COLS, F.expr(_VALUE_EXPR).cast("double").alias("value"),
+                            F.to_date("ts").alias("date"))
             chunks = encode_chunks(
-                sl,
-                value=F.expr(_VALUE_EXPR).cast("double"),
+                _observe_days(pts, o_rows, batch, rows_read=None),
                 chunk_tier=spec.chunk_tier,
                 order_cols=_ORDER_COLS,
+            )
+            chunks = _observe_days(
+                chunks.withColumn("date", F.to_date("chunk_start")), o_chunks, batch, chunks_encoded=None,
+                n_points=F.col("n_points"), bytes_raw=F.col("bytes_raw"),
+                bytes_compressed=F.col("bytes_enc"),
             )
             # every tier from one plan over ONE shuffle on hash(conv_id): the
             # 1m aggregate and the all-tier merge are exchange-free above it
@@ -214,8 +240,11 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
             # schema.ROLLUP is the on-disk contract serving reads with; the
             # casts are no-ops (optimized away) for TRANSCRIPTS-typed input
             tiers = tiers.select(
-                *[F.col(f.name).cast(f.dataType).alias(f.name) for f in ROLLUP.fields], "tier"
+                *[F.col(f.name).cast(f.dataType).alias(f.name) for f in ROLLUP.fields], "tier",
+                F.to_date("bucket_start").alias("date"),
             )
+            tiers = _observe_days(tiers, o_tiers, batch,
+                                  turns=F.when(F.col("tier") == spec.tiers[0], F.col("turn_count")))
             # the two write actions run on writer threads so each one's
             # serial segments (driver planning, output commit, straggler
             # tail) overlap the other's parallel compute. Leaving the pool
@@ -223,53 +252,30 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
             # running to race a retry committing into the same directories.
             with ThreadPoolExecutor(max_workers=2) as pool:
                 writes = [
-                    pool.submit(_write_partitioned, chunks, "chunk_start",
-                                f"{spec.output_root}/chunks"),
-                    pool.submit(_write_partitioned, tiers, "bucket_start",
-                                f"{spec.output_root}/tiers", "tier"),
+                    pool.submit(_write_partitioned, chunks, f"{spec.output_root}/chunks"),
+                    pool.submit(_write_partitioned, tiers, f"{spec.output_root}/tiers", "tier"),
                 ]
                 t_ph = time.time()
             _ph("writers_join", t_ph)
             for w in writes:
                 w.result()
-            # per-day lineage metrics from the WRITTEN chunk table (tiny:
-            # ~2x-compressed blobs + stats columns), read from this batch's
-            # date partitions only (days in between that belong to other
-            # batches are ignored below) — avoids caching the encode output
-            # just to re-aggregate it. A zero-chunk batch writes no files:
-            # read_dates then yields an empty frame -> zero metrics.
-            t_ph = time.time()
-            day_metrics = {
-                r.d.isoformat(): r
-                for r in read_dates(
-                    spark, f"{spec.output_root}/chunks", CHUNKS, batch[0], batch[-1]
-                )
-                .groupBy(F.col("date").alias("d"))
-                .agg(
-                    F.count("*").alias("nc"),
-                    F.sum("n_points").alias("np"),
-                    F.sum("bytes_raw").alias("br"),
-                    F.sum("bytes_enc").alias("be"),
-                )
-                .collect()
-            }
-            _ph("metrics_collect", t_ph)
-            wall_each = (time.time() - t0) / max(1, len(batch))
-            for day in batch:
-                m = day_metrics.get(day)
-                man.mark_done(
-                    day,
-                    UnitMetrics(
-                        rows_read=(m.np if m else 0) or 0,
-                        chunks_encoded=(m.nc if m else 0) or 0,
-                        bytes_raw=(m.br if m else 0) or 0,
-                        bytes_compressed=(m.be if m else 0) or 0,
-                        wall_s=wall_each,
-                    ),
-                )
+            # only now: a failed action never completes its observations.
+            # A day with no rows sums to null, i.e. 0; an observed node AQE
+            # pruned off an empty input leaves an empty row with no schema
+            got = {k: v for o in (o_rows, o_chunks, o_tiers) if o._jo.getRow().length()
+                   for k, v in o.get.items() if v}
+            broken = [d for d in batch
+                      if len({got.get(f"{k} {d}", 0) for k in ("rows_read", "turns", "n_points")}) > 1]
+            if broken:
+                raise RuntimeError(f"per-day conservation broken on {broken}: rows read, "
+                                   "finest-tier turn_count and chunk n_points differ")
+            wall_each = (time.time() - t0) / len(batch)
+            man.mark_done({
+                d: UnitMetrics(**{k: got.get(f"{k} {d}", 0) for k in METRICS}, wall_s=wall_each)
+                for d in batch
+            })
         except Exception:
-            for day in batch:
-                man.mark_failed(day)
+            man.mark_failed(batch)
             raise
 
     t_ph = time.time()

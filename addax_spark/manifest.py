@@ -24,7 +24,7 @@ import datetime as dt
 import io
 import time
 import uuid
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 
 import pandas as pd
 import pyarrow as pa
@@ -33,11 +33,12 @@ from pyspark.sql import SparkSession
 
 from . import fs
 
-_METRICS = ("rows_read", "chunks_encoded", "bytes_raw", "bytes_compressed")
+#: the per-unit counters, in UnitMetrics order
+METRICS = ("rows_read", "chunks_encoded", "bytes_raw", "bytes_compressed")
 #: arrow rendering of schema.MANIFEST
 _SCHEMA = pa.schema(
     [("job_id", pa.string()), ("partition_key", pa.string()), ("status", pa.string())]
-    + [(k, pa.int64()) for k in _METRICS]
+    + [(k, pa.int64()) for k in METRICS]
     + [("wall_s", pa.float64()), ("committed_at", pa.timestamp("us"))]
 )
 
@@ -70,23 +71,13 @@ class Manifest:
         # one parquet file per commit: atomic, append-only, no read-modify-write
         fs.put(f"{self.path}/m-{time.time_ns()}-{uuid.uuid4().hex[:8]}.parquet", buf.getvalue())
 
-    def mark_done(self, partition_key: str, m: UnitMetrics) -> None:
-        self._append(
-            [
-                {
-                    "partition_key": partition_key,
-                    "status": "done",
-                    "rows_read": m.rows_read,
-                    "chunks_encoded": m.chunks_encoded,
-                    "bytes_raw": m.bytes_raw,
-                    "bytes_compressed": m.bytes_compressed,
-                    "wall_s": m.wall_s,
-                }
-            ]
-        )
+    def mark_done(self, units: dict[str, UnitMetrics]) -> None:
+        """Commit every ``partition_key -> metrics`` of a batch as 'done', in
+        one file."""
+        self._append([{"partition_key": k, "status": "done", **asdict(m)} for k, m in units.items()])
 
-    def mark_failed(self, partition_key: str) -> None:
-        self._append([{"partition_key": partition_key, "status": "failed"}])
+    def mark_failed(self, partition_keys: list[str]) -> None:
+        self._append([{"partition_key": k, "status": "failed"} for k in partition_keys])
 
     def _latest(self) -> pd.DataFrame:
         """This job's rows, latest status per partition_key (by committed_at;
@@ -113,4 +104,4 @@ class Manifest:
     def metrics_summary(self) -> dict:
         df = self._latest()
         done = df[df["status"] == "done"]
-        return {"units": len(done), **{k: int(done[k].sum()) for k in _METRICS}}
+        return {"units": len(done), **{k: int(done[k].sum()) for k in METRICS}}

@@ -245,9 +245,9 @@ def test_date_partitioned_input_discovery(spark, raw_path, tmp_path_factory):
 def test_zero_chunk_batch_reads_metrics_with_explicit_schema(spark, tmp_path):
     """A listed unit with zero rows (empty date= partition dir) encodes zero
     chunks; its batch's empty partitionBy write leaves no parquet files, and
-    the per-day metrics read-back must not die on schema inference (ADVICE
-    r5): explicit schema -> empty frame -> zero metrics, and later real
-    batches still complete with correct tiers."""
+    the write observations over that fully pruned slice must still complete
+    (no hang on ``Observation.get``) with zero metrics for the day, and
+    later real batches still complete with correct tiers."""
     part_in = str(tmp_path / "t")
     raw = synth.transcripts(spark, n_convs=6, avg_turns=8)
     raw.withColumn("date", F.to_date("ts")).write.partitionBy("date").parquet(part_in)
@@ -266,6 +266,76 @@ def test_zero_chunk_batch_reads_metrics_with_explicit_schema(spark, tmp_path):
     exp = rollup_all_tiers(raw)["1m"]
     got = _table(spark, out, "1m")
     assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
+
+
+@pytest.fixture(scope="module")
+def part3_path(spark, tmp_path_factory):
+    """A 3-day date=-partitioned input."""
+    p = str(tmp_path_factory.mktemp("jobraw_part3") / "t")
+    raw = synth.transcripts(spark, n_convs=100, avg_turns=20)
+    raw.withColumn("date", F.to_date("ts")).write.partitionBy("date").parquet(p)
+    assert len(fs.list_dates(p)) == 3
+    return p
+
+
+def test_one_manifest_commit_per_batch(spark, part3_path, tmp_path):
+    """A batch's days are committed in one manifest file, and resume and the
+    summary read it exactly as they read one file per day."""
+    got = {}
+    for batch in (3, 1):
+        root = str(tmp_path / f"b{batch}")
+        run(spark, RollupJobSpec(part3_path, root, job_id="m", unit_batch=batch))
+        files = [n for n, _, _ in fs.ls(f"{root}/_manifest") if n.startswith("m-")]
+        assert len(files) == 3 // batch
+        man = Manifest(spark, f"{root}/_manifest", "m")
+        got[batch] = (man.done_keys(), man.metrics_summary())
+    assert got[3] == got[1] and got[3][0] == set(fs.list_dates(part3_path))
+
+
+def test_conservation_break_fails_whole_batch(spark, raw_path, tmp_path, monkeypatch):
+    """job.run checks per day that rows read = finest-tier Σ turn_count =
+    Σ chunk n_points, from its own write observations: an encode that loses
+    one input row fails the whole batch (no unit done), and an intact rerun
+    completes."""
+    import addax_spark.job as job
+
+    encode = job.encode_chunks
+    monkeypatch.setattr(job, "encode_chunks",
+                        lambda df, **kw: encode(df.filter(F.col("conv_id") != "edge-single"), **kw))
+    out = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="conservation"):
+        run(spark, RollupJobSpec(raw_path, out, job_id="cons"))
+    man = Manifest(spark, f"{out}/_manifest", "cons")
+    assert man.done_keys() == set()
+    assert set(man._latest()["status"]) == {"failed"}
+    monkeypatch.undo()
+    res = run(spark, RollupJobSpec(raw_path, out, job_id="cons"))
+    assert res["units"] == res["units_total"] and res["units_skipped_resume"] == 0
+    assert res["rows_read"] == spark.read.parquet(raw_path).count()
+
+
+def test_job_never_reads_its_output_back(spark, part3_path, tmp_path, monkeypatch):
+    """Per-day metrics come from the write actions' observations: with
+    ``read_dates`` unusable a 2-batch job still completes, has no
+    metrics_collect phase, and runs no Spark job on the driver thread but
+    the input-schema read at init (the writes run on writer threads)."""
+    import addax_spark.job as job
+
+    def no_read_back(*args, **kwargs):
+        raise AssertionError("job.run read its own output back")
+
+    monkeypatch.setattr(job, "read_dates", no_read_back)
+    sc = spark.sparkContext
+    sc.setJobGroup("no-read-back", "job.run driver thread")
+    try:
+        res = run(spark, RollupJobSpec(part3_path, str(tmp_path / "out"), job_id="nrb",
+                                       unit_batch=2))
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(k, None)
+    assert res["units"] == res["units_total"] == 3
+    assert "metrics_collect" not in res["phases"]
+    assert len(sc.statusTracker().getJobIdsForGroup("no-read-back")) <= 1
 
 
 def test_compact_recovers_orphaned_bak(spark, tmp_path):
