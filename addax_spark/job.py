@@ -20,7 +20,8 @@ split -> schedule -> post). Here:
   bytes_compressed rows in the manifest (the reference's Communication
   counters, CommunicationTool.java:30-120), counted by Observations on the
   two write actions as rows pass — the output is never read back — and
-  checked per day: rows read = finest-tier Σ turn_count = Σ chunk n_points.
+  checked: rows read = Σ chunk n_points per day, = finest-tier Σ turn_count
+  per batch.
 """
 
 from __future__ import annotations
@@ -28,15 +29,17 @@ from __future__ import annotations
 import datetime as _dt
 import time
 import uuid
+from collections import defaultdict
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import fs
-from .manifest import METRICS, Manifest, UnitMetrics
+from .manifest import Manifest, UnitMetrics
 from .operators.bucketize import TIER_ORDER
 from .operators.gorilla import encode_chunks
 from .operators.rollup import rollup_tiers
@@ -69,22 +72,14 @@ class RollupJobSpec:
     # covers the whole batch (amortizes per-action overhead); the batch's
     # one manifest commit holds a row per day, so resume stays per-day
     unit_batch: int = 16
-    # salted_writes=True restores the pre-r5 (date, conv-salt) repartition
-    # before every partitionBy write: bounds files/dir at _WRITE_SALT and
-    # keeps write tasks fine-grained, at the cost of a full extra shuffle
-    # per write — for the tier write that shuffle carries last_text, i.e.
-    # ~raw-sized bytes. False writes straight from the conv_id-clustered
-    # tier/arrange output (the dynamic-partition writer sorts by its
-    # partition columns per task): files/dir = n_parts per date.
-    #
-    # Default None = AUTO (r6, VERDICT r5 item 2): salted when scheduler
-    # parallelism >= _SALTED_MIN_CORES. Unsalted wins at low parallelism
-    # (the extra shuffle is the bigger term when write-task churn overlaps
-    # compute) but loses at local[32] — and every downstream consumer
-    # (compaction listing, snapshot copies, serving scans) pays the
-    # n_parts-files-per-date fan-out again. At cluster
-    # scale parallelism is always >= the threshold, so auto = salted =
-    # the bounded-files topology, which is also the correct 100 TB layout.
+    # salted_writes=True repartitions by (date, conv-salt) before every
+    # partitionBy write: files/dir bounded at _WRITE_SALT, at the cost of a
+    # full extra shuffle per write (for the tiers it carries last_text, i.e.
+    # ~raw-sized bytes). False writes straight from the conv_id-clustered
+    # output: files/dir = n_parts per date, which every downstream reader
+    # (compaction, snapshots, serving) pays again. None (default) = salted
+    # at scheduler parallelism >= _SALTED_MIN_CORES, i.e. always at cluster
+    # scale, where the bounded-files layout is also the right 100 TB layout.
     salted_writes: bool | None = None
 
     def __post_init__(self):
@@ -118,17 +113,31 @@ def read_dates(
     return spark.read.schema(full).option("basePath", base).parquet(*paths)
 
 
-def _observe_days(df: DataFrame, obs: Observation, days: list[str],
-                  **vals: Column | None) -> DataFrame:
-    """``df`` with ``obs`` counting, for each of ``days``, Σ of each ``vals``
-    column (None: the row count) over the rows whose ``date`` is that day,
-    under the key ``"<name> <day>"``. Summed as rows pass through the action
-    that consumes ``df``; ``obs.get`` blocks until it succeeded."""
+def _observe_days(df: DataFrame, obs: Observation, days: list[str], ts_col: str,
+                  **vals: str | None) -> DataFrame:
+    """``df`` plus its ``date`` (of ``ts_col``), with ``obs`` counting, for
+    each of ``days``, Σ of each ``vals`` column (None: the row count) over
+    the rows of that date, under the key ``"<name> <day>"``. Summed as rows
+    pass through the action that consumes it; ``obs.get`` blocks until it
+    succeeded."""
     on = {d: F.col("date") == F.lit(_dt.date.fromisoformat(d)) for d in days}
-    return df.observe(obs, *[
-        (F.count(F.when(on[d], 1)) if v is None else F.sum(F.when(on[d], v))).alias(f"{k} {d}")
+    return df.withColumn("date", F.to_date(ts_col)).observe(obs, *[
+        (F.count(F.when(on[d], 1)) if v is None else F.sum(F.when(on[d], F.col(v)))).alias(f"{k} {d}")
         for k, v in vals.items() for d in days
     ])
+
+
+def _observed(*obs: Observation) -> defaultdict[str, int]:
+    """The values of ``obs`` once their actions returned; 0 where no row
+    passed (a null sum, or the schema-less row that ``Observation.get``
+    cannot convert, left when AQE prunes the node off an empty input)."""
+    got: defaultdict[str, int] = defaultdict(int)
+    for o in obs:
+        try:
+            got.update((k, v) for k, v in o.get.items() if v)
+        except Py4JJavaError:
+            pass
+    return got
 
 
 def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
@@ -178,20 +187,14 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
 
     n_parts = spec.n_partitions or spark.sparkContext.defaultParallelism * 2
 
-    batches = [
-        pending[i : i + spec.unit_batch] for i in range(0, len(pending), spec.unit_batch)
-    ]
+    batches = [pending[i : i + spec.unit_batch] for i in range(0, len(pending), spec.unit_batch)]
     # partitionOverwriteMode pinned PER WRITE: with a user-supplied session
     # (default static) a batch overwrite would wipe ALL previously written
-    # partitions and a resume would delete completed days' output.
-    #
-    # No repartition before partitionBy by default: both writer inputs (the
-    # all-tier table, the arranged chunk table) are ALREADY
-    # hash(conv_id)-clustered, so the dynamic-partition writer's implicit
-    # per-task sort fans each (tier, date) cell across ALL n_parts tasks and
-    # no extra shuffle is paid (for the tiers it would carry last_text, i.e.
-    # ~raw-sized bytes). Cost: files/dir = n_parts per date; salted writes
-    # restore the bounded fan-in of _WRITE_SALT files per dir.
+    # partitions and a resume would delete completed days' output. Unsalted,
+    # both writer inputs (the all-tier table, the arranged chunks) are
+    # already hash(conv_id)-clustered, so the dynamic-partition writer's
+    # per-task sort fans each (tier, date) cell across all n_parts tasks
+    # with no extra shuffle.
     wsalt = F.pmod(F.xxhash64("conv_id"), F.lit(_WRITE_SALT))
     if spec.salted_writes is None:
         salted = spark.sparkContext.defaultParallelism >= _SALTED_MIN_CORES
@@ -209,27 +212,22 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
     for batch in batches:
         t0 = time.time()
         sl = raw.filter(day_filter(batch))
-        # per-day lineage counters, summed by the two write actions as rows
-        # pass, keyed by the output `date` column: input rows before the
-        # encode's shuffle, finest-tier turn_count and the chunks' counts and
-        # bytes. CollectMetrics is not codegen-fused, so each observation sits
-        # on narrow rows or on the rows the writer's sort copies anyway.
+        # lineage counters summed as rows pass the two write actions: per day
+        # (keyed by the output `date`) input rows before the encode's shuffle
+        # and the chunks' counts and bytes; the batch's finest-tier turn_count.
+        # A per-day counter costs every observed row once per day (CLAUDE.md).
         o_rows, o_chunks, o_tiers = Observation(), Observation(), Observation()
         try:
             # chunk pipeline: the Python-worker encode streams straight into
             # its writer
-            pts = sl.select("conv_id", *_ORDER_COLS, F.expr(_VALUE_EXPR).cast("double").alias("value"),
-                            F.to_date("ts").alias("date"))
+            pts = sl.select("conv_id", *_ORDER_COLS, F.expr(_VALUE_EXPR).cast("double").alias("value"))
             chunks = encode_chunks(
-                _observe_days(pts, o_rows, batch, rows_read=None),
+                _observe_days(pts, o_rows, batch, "ts", rows=None),
                 chunk_tier=spec.chunk_tier,
                 order_cols=_ORDER_COLS,
             )
-            chunks = _observe_days(
-                chunks.withColumn("date", F.to_date("chunk_start")), o_chunks, batch, chunks_encoded=None,
-                n_points=F.col("n_points"), bytes_raw=F.col("bytes_raw"),
-                bytes_compressed=F.col("bytes_enc"),
-            )
+            chunks = _observe_days(chunks, o_chunks, batch, "chunk_start", chunks=None,
+                                   points="n_points", bytes_raw="bytes_raw", bytes_enc="bytes_enc")
             # every tier from one plan over ONE shuffle on hash(conv_id): the
             # 1m aggregate and the all-tier merge are exchange-free above it
             # (plan-asserted in tests/test_rollup_parity.py), and coarser
@@ -243,8 +241,8 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
                 *[F.col(f.name).cast(f.dataType).alias(f.name) for f in ROLLUP.fields], "tier",
                 F.to_date("bucket_start").alias("date"),
             )
-            tiers = _observe_days(tiers, o_tiers, batch,
-                                  turns=F.when(F.col("tier") == spec.tiers[0], F.col("turn_count")))
+            finest = F.when(F.col("tier") == spec.tiers[0], F.col("turn_count"))
+            tiers = tiers.observe(o_tiers, F.sum(finest).alias("turns"))
             # the two write actions run on writer threads so each one's
             # serial segments (driver planning, output commit, straggler
             # tail) overlap the other's parallel compute. Leaving the pool
@@ -259,19 +257,19 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
             _ph("writers_join", t_ph)
             for w in writes:
                 w.result()
-            # only now: a failed action never completes its observations.
-            # A day with no rows sums to null, i.e. 0; an observed node AQE
-            # pruned off an empty input leaves an empty row with no schema
-            got = {k: v for o in (o_rows, o_chunks, o_tiers) if o._jo.getRow().length()
-                   for k, v in o.get.items() if v}
-            broken = [d for d in batch
-                      if len({got.get(f"{k} {d}", 0) for k in ("rows_read", "turns", "n_points")}) > 1]
-            if broken:
-                raise RuntimeError(f"per-day conservation broken on {broken}: rows read, "
-                                   "finest-tier turn_count and chunk n_points differ")
+            # only now: a failed action never completes its observations
+            got = _observed(o_rows, o_chunks, o_tiers)
+            broken = [d for d in batch if got[f"rows {d}"] != got[f"points {d}"]]
+            if broken or sum(got[f"rows {d}"] for d in batch) != got["turns"]:
+                raise RuntimeError(
+                    f"conservation broken: rows read vs chunk n_points on days {broken}, or the "
+                    "batch's rows read vs finest-tier turn_count. A task retry in a shuffle-map "
+                    "stage counts twice, so after an executor loss a rerun may succeed")
             wall_each = (time.time() - t0) / len(batch)
             man.mark_done({
-                d: UnitMetrics(**{k: got.get(f"{k} {d}", 0) for k in METRICS}, wall_s=wall_each)
+                d: UnitMetrics(rows_read=got[f"rows {d}"], chunks_encoded=got[f"chunks {d}"],
+                               bytes_raw=got[f"bytes_raw {d}"], bytes_compressed=got[f"bytes_enc {d}"],
+                               wall_s=wall_each)
                 for d in batch
             })
         except Exception:

@@ -33,12 +33,11 @@ from pyspark.sql import SparkSession
 
 from . import fs
 
-#: the per-unit counters, in UnitMetrics order
-METRICS = ("rows_read", "chunks_encoded", "bytes_raw", "bytes_compressed")
+_METRICS = ("rows_read", "chunks_encoded", "bytes_raw", "bytes_compressed")
 #: arrow rendering of schema.MANIFEST
 _SCHEMA = pa.schema(
     [("job_id", pa.string()), ("partition_key", pa.string()), ("status", pa.string())]
-    + [(k, pa.int64()) for k in METRICS]
+    + [(k, pa.int64()) for k in _METRICS]
     + [("wall_s", pa.float64()), ("committed_at", pa.timestamp("us"))]
 )
 
@@ -104,4 +103,4 @@ class Manifest:
     def metrics_summary(self) -> dict:
         df = self._latest()
         done = df[df["status"] == "done"]
-        return {"units": len(done), **{k: int(done[k].sum()) for k in METRICS}}
+        return {"units": len(done), **{k: int(done[k].sum()) for k in _METRICS}}

@@ -293,10 +293,10 @@ def test_one_manifest_commit_per_batch(spark, part3_path, tmp_path):
 
 
 def test_conservation_break_fails_whole_batch(spark, raw_path, tmp_path, monkeypatch):
-    """job.run checks per day that rows read = finest-tier Σ turn_count =
-    Σ chunk n_points, from its own write observations: an encode that loses
-    one input row fails the whole batch (no unit done), and an intact rerun
-    completes."""
+    """job.run checks rows read = Σ chunk n_points per day and = finest-tier
+    Σ turn_count per batch, from its own write observations: an encode that
+    loses one input row fails the whole batch (no unit done), and an intact
+    rerun completes."""
     import addax_spark.job as job
 
     encode = job.encode_chunks
@@ -312,6 +312,20 @@ def test_conservation_break_fails_whole_batch(spark, raw_path, tmp_path, monkeyp
     res = run(spark, RollupJobSpec(raw_path, out, job_id="cons"))
     assert res["units"] == res["units_total"] and res["units_skipped_resume"] == 0
     assert res["rows_read"] == spark.read.parquet(raw_path).count()
+
+
+def test_tier_conservation_break_fails_whole_batch(spark, raw_path, tmp_path, monkeypatch):
+    """A tier pipeline that loses one input row breaks rows read = finest-tier
+    Σ turn_count: the batch fails and no unit is done."""
+    import addax_spark.job as job
+
+    colocate = job.colocate_by_series
+    monkeypatch.setattr(job, "colocate_by_series",
+                        lambda df, n: colocate(df.filter(F.col("conv_id") != "edge-single"), n))
+    out = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="conservation"):
+        run(spark, RollupJobSpec(raw_path, out, job_id="tcons"))
+    assert Manifest(spark, f"{out}/_manifest", "tcons").done_keys() == set()
 
 
 def test_job_never_reads_its_output_back(spark, part3_path, tmp_path, monkeypatch):
