@@ -18,15 +18,14 @@ split -> schedule -> post). Here:
   its own partitions (dynamic partition overwrite -> idempotent).
 - "metrics" = per-unit rows_read / chunks_encoded / bytes_raw /
   bytes_compressed rows in the manifest (the reference's Communication
-  counters, CommunicationTool.java:30-120), counted by Observations on the
-  two write actions as rows pass — the output is never read back — and
-  checked: rows read = Σ chunk n_points per day, = finest-tier Σ turn_count
-  per batch.
+  counters, CommunicationTool.java:30-120), observed on the two writes and
+  checked per day: rows read = finest-tier Σ turn_count = Σ chunk n_points.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import random
 import time
 import uuid
 from collections import defaultdict
@@ -34,7 +33,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from py4j.protocol import Py4JJavaError
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -113,24 +112,20 @@ def read_dates(
     return spark.read.schema(full).option("basePath", base).parquet(*paths)
 
 
-def _observe_days(df: DataFrame, obs: Observation, days: list[str], ts_col: str,
-                  **vals: str | None) -> DataFrame:
-    """``df`` plus its ``date`` (of ``ts_col``), with ``obs`` counting, for
-    each of ``days``, Σ of each ``vals`` column (None: the row count) over
-    the rows of that date, under the key ``"<name> <day>"``. Summed as rows
-    pass through the action that consumes it; ``obs.get`` blocks until it
-    succeeded."""
-    on = {d: F.col("date") == F.lit(_dt.date.fromisoformat(d)) for d in days}
-    return df.withColumn("date", F.to_date(ts_col)).observe(obs, *[
-        (F.count(F.when(on[d], 1)) if v is None else F.sum(F.when(on[d], F.col(v)))).alias(f"{k} {d}")
-        for k, v in vals.items() for d in days
-    ])
+def _observe_checksum(df: DataFrame, obs: Observation, weights: dict[str, int], ts_col: str,
+                      name: str, v: Column) -> DataFrame:
+    """``df`` plus its ``date`` (of ``ts_col``), observed by ``obs``: Σ ``v`` as
+    ``name``, Σ ``v`` x its date's weight as ``"<name> wt"``. Two sums, not one
+    per day (each costs every row): a wrong per-day vector with the right total
+    matches both only if orthogonal to the random ``weights`` (p <= 1/range)."""
+    w = F.create_map(*[F.lit(x) for d, k in weights.items() for x in (_dt.date.fromisoformat(d), k)])
+    return df.withColumn("date", F.to_date(ts_col)).observe(
+        obs, F.sum(v).alias(name), F.sum(v * w[F.col("date")]).alias(f"{name} wt"))
 
 
 def _observed(*obs: Observation) -> defaultdict[str, int]:
-    """The values of ``obs`` once their actions returned; 0 where no row
-    passed (a null sum, or the schema-less row that ``Observation.get``
-    cannot convert, left when AQE prunes the node off an empty input)."""
+    """``obs``' values once their actions returned; 0 where no row passed (a null sum, or
+    the schema-less row ``get`` cannot convert, left when AQE prunes off an empty input)."""
     got: defaultdict[str, int] = defaultdict(int)
     for o in obs:
         try:
@@ -187,14 +182,20 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
 
     n_parts = spec.n_partitions or spark.sparkContext.defaultParallelism * 2
 
-    batches = [pending[i : i + spec.unit_batch] for i in range(0, len(pending), spec.unit_batch)]
+    batches = [
+        pending[i : i + spec.unit_batch] for i in range(0, len(pending), spec.unit_batch)
+    ]
     # partitionOverwriteMode pinned PER WRITE: with a user-supplied session
     # (default static) a batch overwrite would wipe ALL previously written
-    # partitions and a resume would delete completed days' output. Unsalted,
-    # both writer inputs (the all-tier table, the arranged chunks) are
-    # already hash(conv_id)-clustered, so the dynamic-partition writer's
-    # per-task sort fans each (tier, date) cell across all n_parts tasks
-    # with no extra shuffle.
+    # partitions and a resume would delete completed days' output.
+    #
+    # No repartition before partitionBy by default: both writer inputs (the
+    # all-tier table, the arranged chunk table) are ALREADY
+    # hash(conv_id)-clustered, so the dynamic-partition writer's implicit
+    # per-task sort fans each (tier, date) cell across ALL n_parts tasks and
+    # no extra shuffle is paid (for the tiers it would carry last_text, i.e.
+    # ~raw-sized bytes). Cost: files/dir = n_parts per date; salted writes
+    # restore the bounded fan-in of _WRITE_SALT files per dir.
     wsalt = F.pmod(F.xxhash64("conv_id"), F.lit(_WRITE_SALT))
     if spec.salted_writes is None:
         salted = spark.sparkContext.defaultParallelism >= _SALTED_MIN_CORES
@@ -212,22 +213,26 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
     for batch in batches:
         t0 = time.time()
         sl = raw.filter(day_filter(batch))
-        # lineage counters summed as rows pass the two write actions: per day
-        # (keyed by the output `date`) input rows before the encode's shuffle
-        # and the chunks' counts and bytes; the batch's finest-tier turn_count.
-        # A per-day counter costs every observed row once per day (CLAUDE.md).
+        # summed as rows pass the two writes, keyed by output `date`: per-day
+        # checksums of input rows (before the encode's shuffle) and finest-tier
+        # turn_count, and the chunks' per-day counts and bytes
         o_rows, o_chunks, o_tiers = Observation(), Observation(), Observation()
+        weights = {d: random.randrange(1, 1 << 20) for d in batch}
         try:
             # chunk pipeline: the Python-worker encode streams straight into
             # its writer
             pts = sl.select("conv_id", *_ORDER_COLS, F.expr(_VALUE_EXPR).cast("double").alias("value"))
             chunks = encode_chunks(
-                _observe_days(pts, o_rows, batch, "ts", rows=None),
+                _observe_checksum(pts, o_rows, weights, "ts", "rows", F.lit(1)),
                 chunk_tier=spec.chunk_tier,
                 order_cols=_ORDER_COLS,
             )
-            chunks = _observe_days(chunks, o_chunks, batch, "chunk_start", chunks=None,
-                                   points="n_points", bytes_raw="bytes_raw", bytes_enc="bytes_enc")
+            # exact per-day sums only over the chunks (one row per series-day)
+            day = {d: F.col("date") == F.lit(_dt.date.fromisoformat(d)) for d in batch}
+            sums = {"chunks": F.lit(1), "points": F.col("n_points"),
+                    "bytes_raw": F.col("bytes_raw"), "bytes_enc": F.col("bytes_enc")}
+            chunks = chunks.withColumn("date", F.to_date("chunk_start")).observe(o_chunks, *[
+                F.sum(F.when(day[d], v)).alias(f"{k} {d}") for k, v in sums.items() for d in batch])
             # every tier from one plan over ONE shuffle on hash(conv_id): the
             # 1m aggregate and the all-tier merge are exchange-free above it
             # (plan-asserted in tests/test_rollup_parity.py), and coarser
@@ -238,11 +243,10 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
             # schema.ROLLUP is the on-disk contract serving reads with; the
             # casts are no-ops (optimized away) for TRANSCRIPTS-typed input
             tiers = tiers.select(
-                *[F.col(f.name).cast(f.dataType).alias(f.name) for f in ROLLUP.fields], "tier",
-                F.to_date("bucket_start").alias("date"),
+                *[F.col(f.name).cast(f.dataType).alias(f.name) for f in ROLLUP.fields], "tier"
             )
             finest = F.when(F.col("tier") == spec.tiers[0], F.col("turn_count"))
-            tiers = tiers.observe(o_tiers, F.sum(finest).alias("turns"))
+            tiers = _observe_checksum(tiers, o_tiers, weights, "bucket_start", "turns", finest)
             # the two write actions run on writer threads so each one's
             # serial segments (driver planning, output commit, straggler
             # tail) overlap the other's parallel compute. Leaving the pool
@@ -259,17 +263,19 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
                 w.result()
             # only now: a failed action never completes its observations
             got = _observed(o_rows, o_chunks, o_tiers)
-            broken = [d for d in batch if got[f"rows {d}"] != got[f"points {d}"]]
-            if broken or sum(got[f"rows {d}"] for d in batch) != got["turns"]:
+            # the chunks' per-day n_points, once both checksums match them, are
+            # the per-day rows read and finest-tier turn_count sums too
+            points = {d: got[f"points {d}"] for d in batch}
+            want = (sum(points.values()), sum(weights[d] * n for d, n in points.items()))
+            if any((got[k], got[f"{k} wt"]) != want for k in ("rows", "turns")):
                 raise RuntimeError(
-                    f"conservation broken: rows read vs chunk n_points on days {broken}, or the "
-                    "batch's rows read vs finest-tier turn_count. A task retry in a shuffle-map "
-                    "stage counts twice, so after an executor loss a rerun may succeed")
+                    f"conservation broken in batch {batch}: per-day rows read, finest-tier "
+                    "turn_count and chunk n_points differ. A task retry in a shuffle-map stage "
+                    "counts twice, so after an executor loss a rerun may succeed")
             wall_each = (time.time() - t0) / len(batch)
             man.mark_done({
-                d: UnitMetrics(rows_read=got[f"rows {d}"], chunks_encoded=got[f"chunks {d}"],
-                               bytes_raw=got[f"bytes_raw {d}"], bytes_compressed=got[f"bytes_enc {d}"],
-                               wall_s=wall_each)
+                d: UnitMetrics(rows_read=points[d], chunks_encoded=got[f"chunks {d}"], wall_s=wall_each,
+                               bytes_raw=got[f"bytes_raw {d}"], bytes_compressed=got[f"bytes_enc {d}"])
                 for d in batch
             })
         except Exception:

@@ -293,10 +293,10 @@ def test_one_manifest_commit_per_batch(spark, part3_path, tmp_path):
 
 
 def test_conservation_break_fails_whole_batch(spark, raw_path, tmp_path, monkeypatch):
-    """job.run checks rows read = Σ chunk n_points per day and = finest-tier
-    Σ turn_count per batch, from its own write observations: an encode that
-    loses one input row fails the whole batch (no unit done), and an intact
-    rerun completes."""
+    """job.run checks per day that rows read = finest-tier Σ turn_count =
+    Σ chunk n_points, from its own write observations: an encode that loses
+    one input row fails the whole batch (no unit done), and an intact rerun
+    completes."""
     import addax_spark.job as job
 
     encode = job.encode_chunks
@@ -314,18 +314,28 @@ def test_conservation_break_fails_whole_batch(spark, raw_path, tmp_path, monkeyp
     assert res["rows_read"] == spark.read.parquet(raw_path).count()
 
 
-def test_tier_conservation_break_fails_whole_batch(spark, raw_path, tmp_path, monkeypatch):
-    """A tier pipeline that loses one input row breaks rows read = finest-tier
-    Σ turn_count: the batch fails and no unit is done."""
+@pytest.mark.parametrize("stage", ["tiers", "day_shift"])
+def test_conservation_break_in_tiers_or_days_fails_batch(spark, raw_path, tmp_path, monkeypatch, stage):
+    """The checks cover the tier side and each day, not only totals: a tier
+    pipeline that loses one input row, or an encode that moves one day's
+    rows to the next day of the batch (every total intact), fails the batch
+    and leaves no unit done."""
     import addax_spark.job as job
 
-    colocate = job.colocate_by_series
-    monkeypatch.setattr(job, "colocate_by_series",
-                        lambda df, n: colocate(df.filter(F.col("conv_id") != "edge-single"), n))
+    if stage == "tiers":
+        colocate = job.colocate_by_series
+        monkeypatch.setattr(job, "colocate_by_series",
+                            lambda df, n: colocate(df.filter(F.col("conv_id") != "edge-single"), n))
+    else:
+        first = spark.read.parquet(raw_path).select(F.min(F.to_date("ts"))).first()[0]
+        shift = F.when(F.to_date("ts") == F.lit(first), F.col("ts") + F.expr("INTERVAL 1 DAY"))
+        encode = job.encode_chunks
+        monkeypatch.setattr(job, "encode_chunks",
+                            lambda df, **kw: encode(df.withColumn("ts", F.coalesce(shift, "ts")), **kw))
     out = str(tmp_path / "out")
     with pytest.raises(RuntimeError, match="conservation"):
-        run(spark, RollupJobSpec(raw_path, out, job_id="tcons"))
-    assert Manifest(spark, f"{out}/_manifest", "tcons").done_keys() == set()
+        run(spark, RollupJobSpec(raw_path, out, job_id="cons2"))
+    assert Manifest(spark, f"{out}/_manifest", "cons2").done_keys() == set()
 
 
 def test_job_never_reads_its_output_back(spark, part3_path, tmp_path, monkeypatch):
