@@ -5,9 +5,10 @@ Implements the codec from Pelkonen et al., "Gorilla: A Fast, Scalable,
 In-Memory Time Series Database" (VLDB 2015), adapted to microsecond
 timestamps (wider delta-of-delta buckets than the paper's seconds) and to
 **vectorized numpy encoding** — the per-point control-bit decisions are made
-with array ops and the variable-length codes are packed via one
-``np.packbits`` pass, so the Spark integration is a pure Arrow
-``applyInPandas`` with no per-row Python (north_rule requirement).
+with array ops and the variable-length codes are packed word-wise into
+uint64s, so the Spark integration is a pure Arrow ``mapInPandas`` with no
+per-row Python (north_rule requirement). :func:`encode_many` is the one
+encoder the pipeline runs; :func:`encode` is its single-chunk reference.
 
 Chunk format (little-endian header, then MSB-first bitstream):
 
@@ -84,35 +85,42 @@ def _ctz64(x: np.ndarray) -> np.ndarray:
 
 def _pack(codes: np.ndarray, lengths: np.ndarray) -> bytes:
     """Pack variable-length big-endian codes (each <= 64 bits) into a single
-    MSB-first bitstream. Fully vectorized: build an (n, maxlen) bit matrix,
-    mask to each code's length, flatten row-major, packbits."""
+    MSB-first bitstream: build an (n, maxlen) bit matrix, mask to each
+    code's length, flatten row-major, packbits. O(n * maxlen) — used only by
+    the reference :func:`encode`; production packs with :func:`_pack_words`."""
     lengths = lengths.astype(np.int64)
     keep = lengths > 0
     codes, lengths = codes[keep].astype(np.uint64), lengths[keep]
     if len(codes) == 0:
         return b""
-    if len(codes) < 4096:
-        # small chunk: (n x maxlen) bit matrix beats the per-length scatter
-        # loop's fixed overhead
-        maxlen = int(lengths.max())
-        j = np.arange(maxlen)
-        shift = lengths[:, None] - 1 - j[None, :]
-        valid = shift >= 0
-        m = (codes[:, None] >> np.maximum(shift, 0).astype(np.uint64)) & np.uint64(1)
-        return np.packbits(m[valid].astype(np.uint8)).tobytes()
-    offsets = np.concatenate(([0], np.cumsum(lengths)))
-    total = int(offsets[-1])
-    bits = np.zeros(total, dtype=np.uint8)
-    # scatter per distinct code length: total work = total output bits (a
-    # naive (n x maxlen) bit matrix is O(n*64) whenever any code has a
-    # 64-bit payload — ~6x more work on typical mixes)
-    for L in np.unique(lengths):
-        idx = np.flatnonzero(lengths == L)
-        starts = offsets[idx]
-        c = codes[idx]
-        for j in range(int(L)):
-            bits[starts + j] = (c >> np.uint64(L - 1 - j)) & np.uint64(1)
-    return np.packbits(bits).tobytes()
+    j = np.arange(int(lengths.max()))
+    shift = lengths[:, None] - 1 - j[None, :]
+    valid = shift >= 0
+    m = (codes[:, None] >> np.maximum(shift, 0).astype(np.uint64)) & np.uint64(1)
+    return np.packbits(m[valid].astype(np.uint8)).tobytes()
+
+
+def _pack_words(
+    codes: np.ndarray, lengths: np.ndarray, start_bit: np.ndarray, total_bits: int
+) -> bytes:
+    """Write each code (``lengths[i]`` <= 64 bits, zero-length codes must be
+    0) at bit ``start_bit[i]`` of an MSB-first stream of ``total_bits``
+    bits, word-wise: O(codes) whatever the code lengths.
+
+    A code left-aligned in a uint64 lands in word ``s >> 6`` shifted right
+    by ``s & 63``, and its spill in the next word shifted left by
+    ``64 - (s & 63)`` (numpy defines shifts by >= 64 as 0, which covers
+    ``L == 0`` and ``s & 63 == 0``). Codes never overlap, so summing every
+    code that touches a word is their OR: with ``start_bit`` nondecreasing,
+    one ``np.add.reduceat`` per target word builds the stream."""
+    al = codes << (np.uint64(64) - lengths.astype(np.uint64))
+    w = start_bit >> 6
+    o = (start_bit & 63).astype(np.uint64)
+    heads = np.flatnonzero(np.diff(w, prepend=-1))
+    words = np.zeros((total_bits >> 6) + 2, np.uint64)
+    words[w[heads]] = np.add.reduceat(al >> o, heads)
+    words[w[heads] + 1] += np.add.reduceat(al << (np.uint64(64) - o), heads)
+    return words.astype(">u8").tobytes()[: total_bits >> 3]
 
 
 # -------------------------------------------------------------------- encode
@@ -121,23 +129,26 @@ def _pack(codes: np.ndarray, lengths: np.ndarray) -> bytes:
 def encode_many(
     ts_us: np.ndarray, values: np.ndarray, offsets: np.ndarray
 ) -> list[bytes]:
-    """Encode many sorted chunks in ONE vectorized pass (r6).
+    """Encode many sorted chunks in ONE vectorized pass: the production
+    encoder, at every chunk size.
 
     ``offsets`` delimits chunks inside the concatenated ``ts_us``/``values``
     arrays (len C+1, ``offsets[k]:offsets[k+1]`` = chunk k). All per-point
     code decisions (dod bucketing, XOR windows) are computed over the flat
     arrays with chunk-boundary masks, and the variable-length codes of ALL
-    chunks are scattered into one global bitstream with each chunk's stream
-    byte-aligned — the trailing pad bits of a chunk are never read by the
-    decoder (it consumes exactly n-1 codes), so each blob is bit-identical
-    to :func:`encode` of that chunk alone (asserted in tests).
+    chunks are packed word-wise (:func:`_pack_words`, O(codes)) into one
+    global bitstream with each chunk's stream byte-aligned — the trailing
+    pad bits of a chunk are never read by the decoder (it consumes exactly
+    n-1 codes), so each blob is bit-identical to the reference
+    :func:`encode` of that chunk alone (asserted in tests).
 
-    Why: :func:`encode` costs ~300-500us of fixed numpy overhead per call
+    Why one pass: a per-chunk call costs ~300-500us of fixed numpy overhead
     regardless of chunk size, and real workloads have MANY small chunks
-    (series x days); per-chunk encoding was the dominant Python cost of the
-    chunk pipeline (~5us/point). This pass amortizes the overhead across
-    the whole Arrow batch — same transposition that makes
-    :func:`decode_many` fast."""
+    (series x days). This pass amortizes the overhead across the whole
+    Arrow batch — same transposition that makes :func:`decode_many` fast —
+    and the word packer keeps it faster than per-chunk :func:`encode` at
+    large chunks too (one-core table from 22 to 40,000 points/chunk in
+    CHANGES.md)."""
     ts = np.ascontiguousarray(np.asarray(ts_us, dtype=np.int64))
     vals = np.ascontiguousarray(np.asarray(values, dtype=np.float64))
     offs = np.asarray(offsets, dtype=np.int64)
@@ -233,28 +244,7 @@ def encode_many(
         cum - lengths - prior_unpadded[code_chunk] + base_bits[code_chunk]
     )
 
-    # scatter grouped by code length via ONE radix sort: work = total output
-    # bits (a (codes x 64) bit-matrix pass costs 64 ops per code regardless
-    # of its length — 2-8x more for typical dod/xor mixes)
-    total_bits = int(base_bits[-1])
-    bits = np.zeros(total_bits, dtype=np.uint8)
-    keep = lengths > 0
-    codes_k, lengths_k, start_k = codes[keep], lengths[keep], start_bit[keep]
-    order = np.argsort(lengths_k, kind="stable")
-    sorted_len = lengths_k[order]
-    sorted_codes = codes_k[order].astype(np.uint64)
-    sorted_starts = start_k[order]
-    bounds = np.searchsorted(sorted_len, np.arange(1, 65), side="right")
-    lo = 0
-    for L in range(1, 65):
-        hi = bounds[L - 1]
-        if hi > lo:
-            c = sorted_codes[lo:hi]
-            starts = sorted_starts[lo:hi]
-            for j in range(L):
-                bits[starts + j] = (c >> np.uint64(L - 1 - j)) & np.uint64(1)
-        lo = hi
-    packed = np.packbits(bits).tobytes()
+    packed = _pack_words(codes, lengths, start_bit, int(base_bits[-1]))
 
     byte_base = np.concatenate(([0], np.cumsum(chunk_bytes)))
     return [
@@ -264,7 +254,9 @@ def encode_many(
 
 
 def encode(ts_us: np.ndarray, values: np.ndarray) -> bytes:
-    """Encode a sorted series (int64 epoch-micros, float64 values) to a blob."""
+    """Encode one sorted series (int64 epoch-micros, float64 values) to a
+    blob: the independent single-chunk reference that the tests compare
+    :func:`encode_many` against (the pipeline only runs ``encode_many``)."""
     ts_us = np.asarray(ts_us, dtype=np.int64)
     values = np.ascontiguousarray(np.asarray(values, dtype=np.float64))
     n = len(ts_us)
@@ -434,7 +426,7 @@ def encode_chunks(
     """Compress a point series into one Gorilla blob per (key, chunk bucket).
 
     One shuffle on (key, chunk_start); the encode itself is a vectorized
-    Arrow ``applyInPandas`` (numpy bit-packing — analog of the reference's
+    Arrow ``mapInPandas`` (numpy bit-packing — analog of the reference's
     only vectorized paths, the ORC batch readers MyOrcReader.java:91-93, but
     applied to the compute kernel instead of the format edge).
 
@@ -454,7 +446,7 @@ def encode_chunks(
     ocols = ["_t"] + [c for c in pts.columns if c.startswith("_o")]
 
     # One shuffle on hash(conv_id) + in-partition sort; the encode runs as
-    # mapInPandas with a pandas groupby INSIDE each Arrow batch — one Python
+    # mapInPandas that finds the groups INSIDE each Arrow batch — one Python
     # invocation per batch instead of per (conv, chunk) group, which is
     # ~10-100x cheaper when groups are small (per-group applyInPandas costs
     # ~ms of Arrow/dispatch overhead each). Groups can span Arrow batch
@@ -468,9 +460,8 @@ def encode_chunks(
         def flush(pdf: pd.DataFrame) -> pd.DataFrame:
             # rows arrive sorted by (conv_id, chunk_start, order): group
             # boundaries are found with one numpy compare and the WHOLE
-            # batch is encoded in a single vectorized encode_many pass (r6;
-            # the old shape ran pandas groupby + one encode() per group —
-            # ~300-500us of fixed overhead per chunk)
+            # batch is encoded in a single vectorized encode_many pass,
+            # whatever its chunk sizes
             cid = pdf["conv_id"].to_numpy()
             cs = pdf["chunk_start"].to_numpy()
             change = np.flatnonzero((cid[1:] != cid[:-1]) | (cs[1:] != cs[:-1])) + 1
@@ -479,16 +470,7 @@ def encode_chunks(
             npts = np.diff(offs)
             t = pdf["_t"].to_numpy(np.int64)
             v = pdf["_v"].to_numpy(np.float64)
-            # regime switch: many SMALL chunks -> one vectorized pass
-            # (amortizes encode()'s ~0.3-0.5ms fixed numpy overhead: 7x at
-            # ~22-point, 1.7x at ~107-point chunks); very LARGE chunks ->
-            # per-chunk encode, which amortizes its own overhead and skips
-            # encode_many's global layout/sort (measured crossover between
-            # 107 and 4000 points/chunk)
-            if len(npts) > 1 and npts.mean() < 512:
-                blobs = encode_many(t, v, offs)
-            else:
-                blobs = [encode(t[o:e], v[o:e]) for o, e in zip(offs[:-1], offs[1:])]
+            blobs = encode_many(t, v, offs)
             return pd.DataFrame(
                 {
                     "conv_id": cid[heads],

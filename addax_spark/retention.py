@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from . import fs
 from .job import read_dates
+from .operators.bucketize import TIER_ORDER
 from .schema import ROLLUP
 
 #: tier -> days retained (None = keep forever); raw handled by ingest side
@@ -90,11 +91,10 @@ def compact(
     output_root: str,
     tier: str,
     dates: list[str] | None = None,
-    target_file_bytes: int = TARGET_FILE_BYTES,
 ) -> int:
-    """Rewrite partitions of a tier to ~target-size files (small-file
-    compaction). Returns partitions rewritten. The parquet-dir analog of
-    Iceberg's rewrite_data_files + overwritePartitions commit.
+    """Rewrite partitions of a tier to ~``TARGET_FILE_BYTES`` files
+    (small-file compaction). Returns partitions rewritten. The parquet-dir
+    analog of Iceberg's rewrite_data_files + overwritePartitions commit.
 
     ONE Spark action for all touched dates: per-date file targets come from
     a metadata-only size listing, each row gets a file slot hashed into
@@ -121,7 +121,7 @@ def compact(
     plan: list[tuple[str, int]] = []
     for d in live if dates is None else [d for d in dates if d in live]:
         size = sum(n for name, _, n in fs.ls(f"{root}/date={d}") if name.endswith(".parquet"))
-        plan.append((d, int(max(1, -(-size // target_file_bytes)))))
+        plan.append((d, int(max(1, -(-size // TARGET_FILE_BYTES)))))
     if not plan:
         return 0
 
@@ -170,7 +170,7 @@ def finest_available_tier(
 ) -> str | None:
     """Which tier serves a date under the retention ladder (finest surviving)."""
     policy = policy or DEFAULT_POLICY
-    for tier in ["1m", "5m", "1h", "1d"]:
+    for tier in TIER_ORDER:
         days = policy.get(tier)
         if days is None or query_date >= now - dt.timedelta(days=days):
             return tier
