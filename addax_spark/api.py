@@ -114,14 +114,14 @@ def rollup_tier(spark: SparkSession, sf_dir: str, tier: str) -> DataFrame:
     return _rollup.rollup_all_tiers(transcripts_view(spark, sf_dir))[tier]
 
 
-def oracle_rollup_sql(tier: str, source_sql: str = TRANSCRIPTS_FROM_EVENTS_SQL) -> str:
+def oracle_rollup_sql(tier: str) -> str:
     """DuckDB recomputation of a tier DIRECTLY from raw turns (never via the
     cascade — so cascade exactness is part of what the driver checks).
     `last` uses a HUGEINT composite key == lexicographic (ts, turn_idx)."""
     step_us = TIERS[tier] * 1_000_000
     key = "epoch_us(ts)::HUGEINT * 1000000 + turn_idx"
     return f"""
-WITH transcripts AS ({source_sql})
+WITH transcripts AS ({TRANSCRIPTS_FROM_EVENTS_SQL})
 SELECT conv_id,
        make_timestamp(epoch_us(ts) - epoch_us(ts) % {step_us}) AS bucket_start,
        count(*) AS turn_count,

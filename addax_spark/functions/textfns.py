@@ -14,6 +14,9 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+#: words per shingle (the MinHash/Jaccard unit is a word 3-gram)
+SHINGLE_N = 3
+
 
 def tokens(c: Column) -> Column:
     """Whitespace tokens, empties removed (empty string -> [])."""
@@ -33,39 +36,32 @@ def hash60_sql(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
-def word_shingles(c: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles (the MinHash/Jaccard unit).
+def word_shingles(c: Column) -> Column:
+    """Distinct word SHINGLE_N-gram shingles (the MinHash/Jaccard unit).
 
     The token list is bound ONCE as a higher-order-function lambda variable
     (``transform(array(tokens(c)), w -> ...)[1]``): referencing a plain
     projected column instead gets re-inlined by CollapseProject, so every
-    ``element_at`` would re-run the regex split — O(tokens * n) splits per
+    ``element_at`` would re-run the regex split — O(tokens * SHINGLE_N) splits per
     row, measured 15x slower on the sf0.1 documents corpus.
     """
 
     def per_words(wv: Column) -> Column:
-        idx = F.sequence(F.lit(1), F.greatest(F.size(wv) - (n - 1), F.lit(0)))
-        gram = lambda i: F.concat_ws(" ", *[F.element_at(wv, i + j) for j in range(n)])  # noqa: E731
+        idx = F.sequence(F.lit(1), F.greatest(F.size(wv) - (SHINGLE_N - 1), F.lit(0)))
+        gram = lambda i: F.concat_ws(  # noqa: E731
+            " ", *[F.element_at(wv, i + j) for j in range(SHINGLE_N)]
+        )
         return F.array_distinct(F.transform(idx, gram))
 
     return F.element_at(F.transform(F.array(tokens(c)), per_words), 1)
 
 
-def word_shingles_sql(expr: str, n: int = 3) -> str:
-    w = tokens_sql(expr)
-    parts = " || ' ' || ".join(f"w[i+{j}]" if j else "w[i]" for j in range(n))
-    return (
-        f"list_distinct(list_transform(generate_series(1, greatest(len(w) - {n - 1}, 0)), i -> {parts})) "
-        f"FROM (SELECT {w} AS w)"
+def shingles_expr_sql(words_expr: str) -> str:
+    """SQL twin of :func:`word_shingles` over a bound words-list column."""
+    parts = " || ' ' || ".join(
+        f"{words_expr}[i+{j}]" if j else f"{words_expr}[i]" for j in range(SHINGLE_N)
     )
-
-
-# NB: word_shingles_sql needs a scalar-subquery wrapper; callers use
-# shingles_cte_sql which binds `w` once per row instead.
-def shingles_expr_sql(words_expr: str, n: int = 3) -> str:
-    """SQL for shingles given a bound words-list column name."""
-    parts = " || ' ' || ".join(f"{words_expr}[i+{j}]" if j else f"{words_expr}[i]" for j in range(n))
     return (
         f"list_distinct(list_transform("
-        f"generate_series(1, greatest(len({words_expr}) - {n - 1}, 0)), i -> {parts}))"
+        f"generate_series(1, greatest(len({words_expr}) - {SHINGLE_N - 1}, 0)), i -> {parts}))"
     )

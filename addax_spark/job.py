@@ -13,7 +13,10 @@ split -> schedule -> post). Here:
   the 1m aggregate and the all-tier merge are then exchange-free —
   plans.partitioning.colocate_by_series) and land in ONE partitionBy(tier,
   date) write; the chunk encode keeps its own column-pruned arrange shuffle
-  and writes on a second thread, so the two write actions overlap.
+  and writes on a second thread, so the two write actions overlap. Both
+  shuffles take their partition count from colocate_by_series (2x the
+  scheduler's parallelism); whether writes are salted follows from that
+  parallelism too (_SALTED_MIN_CORES), so neither is a spec field.
 - "failover" = the manifest: a rerun skips 'done' units and rewrites only
   its own partitions (dynamic partition overwrite -> idempotent).
 - "metrics" = per-unit rows_read / chunks_encoded / bytes_raw /
@@ -47,10 +50,10 @@ from .schema import ROLLUP
 
 #: writer-task fan-out per (tier, date) output cell (files per dir bound)
 _WRITE_SALT = 8
-#: salted_writes=None salts at scheduler parallelism >= this: the r5
-#: interleaved A/Bs had unsalted winning at local[2]/local[8] but LOSING at
-#: local[32] (warm mins 45.0 vs 40.1 s: n_parts writer tasks x dates of
-#: small-file churn dominates)
+#: writes are salted at scheduler parallelism >= this: the r5 interleaved
+#: A/Bs had unsalted winning at local[2]/local[8] but LOSING at local[32]
+#: (warm mins 45.0 vs 40.1 s: one file per writer task x date of small-file
+#: churn dominates)
 _SALTED_MIN_CORES = 16
 #: the series value every tier aggregates and the chunk codec encodes
 _VALUE_EXPR = "length(text)"
@@ -65,21 +68,11 @@ class RollupJobSpec:
     tiers: list[str] = field(default_factory=lambda: list(TIER_ORDER))
     chunk_tier: str = "1d"
     job_id: str = ""
-    n_partitions: int | None = None
     max_units: int | None = None  # for tests: stop after N units (resume later)
     # days per checkpoint batch: one dynamic-partition-overwrite write set
     # covers the whole batch (amortizes per-action overhead); the batch's
     # one manifest commit holds a row per day, so resume stays per-day
     unit_batch: int = 16
-    # salted_writes=True repartitions by (date, conv-salt) before every
-    # partitionBy write: files/dir bounded at _WRITE_SALT, at the cost of a
-    # full extra shuffle per write (for the tiers it carries last_text, i.e.
-    # ~raw-sized bytes). False writes straight from the conv_id-clustered
-    # output: files/dir = n_parts per date, which every downstream reader
-    # (compaction, snapshots, serving) pays again. None (default) = salted
-    # at scheduler parallelism >= _SALTED_MIN_CORES, i.e. always at cluster
-    # scale, where the bounded-files layout is also the right 100 TB layout.
-    salted_writes: bool | None = None
 
     def __post_init__(self):
         if not self.job_id:
@@ -180,8 +173,6 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
     if spec.max_units is not None:
         pending = pending[: spec.max_units]
 
-    n_parts = spec.n_partitions or spark.sparkContext.defaultParallelism * 2
-
     batches = [
         pending[i : i + spec.unit_batch] for i in range(0, len(pending), spec.unit_batch)
     ]
@@ -189,18 +180,19 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
     # (default static) a batch overwrite would wipe ALL previously written
     # partitions and a resume would delete completed days' output.
     #
-    # No repartition before partitionBy by default: both writer inputs (the
-    # all-tier table, the arranged chunk table) are ALREADY
-    # hash(conv_id)-clustered, so the dynamic-partition writer's implicit
-    # per-task sort fans each (tier, date) cell across ALL n_parts tasks and
-    # no extra shuffle is paid (for the tiers it would carry last_text, i.e.
-    # ~raw-sized bytes). Cost: files/dir = n_parts per date; salted writes
-    # restore the bounded fan-in of _WRITE_SALT files per dir.
+    # Unsalted (below _SALTED_MIN_CORES), no repartition before partitionBy:
+    # both writer inputs (the all-tier table, the arranged chunk table) are
+    # ALREADY hash(conv_id)-clustered, so the dynamic-partition writer's
+    # implicit per-task sort fans each (tier, date) cell across ALL shuffle
+    # tasks and no extra shuffle is paid (for the tiers it would carry
+    # last_text, i.e. ~raw-sized bytes). Cost: one file per shuffle
+    # partition per date dir, which every downstream reader (compaction,
+    # snapshots, serving) pays again. Salted writes repartition by (date,
+    # conv-salt) first: files/dir bounded at _WRITE_SALT for one extra
+    # shuffle per write — at cluster scale, where that bounded layout is
+    # also the right 100 TB layout.
     wsalt = F.pmod(F.xxhash64("conv_id"), F.lit(_WRITE_SALT))
-    if spec.salted_writes is None:
-        salted = spark.sparkContext.defaultParallelism >= _SALTED_MIN_CORES
-    else:
-        salted = spec.salted_writes
+    salted = spark.sparkContext.defaultParallelism >= _SALTED_MIN_CORES
 
     def _write_partitioned(df: DataFrame, path: str, *parts: str) -> None:
         parts = (*parts, "date")
@@ -237,9 +229,7 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
             # 1m aggregate and the all-tier merge are exchange-free above it
             # (plan-asserted in tests/test_rollup_parity.py), and coarser
             # tiers merge 1m partials, never raw rows
-            tiers = rollup_tiers(
-                colocate_by_series(sl, n_parts), spec.tiers, value=F.expr(_VALUE_EXPR)
-            )
+            tiers = rollup_tiers(colocate_by_series(sl), spec.tiers, value=F.expr(_VALUE_EXPR))
             # schema.ROLLUP is the on-disk contract serving reads with; the
             # casts are no-ops (optimized away) for TRANSCRIPTS-typed input
             tiers = tiers.select(

@@ -11,7 +11,7 @@ become explicit metric columns per work unit.
 
 Storage: an append-only parquet directory of manifest rows (atomic at the
 file level — each commit writes one new file; latest status per key wins by
-committed_at), with the schema of schema.MANIFEST. The files are put and
+committed_at), with the schema ``_SCHEMA``. The files are put and
 got whole through the fs layer (any Hadoop FS root) and decoded with
 pyarrow, so resume and summary reads cost no Spark job. On a cluster with
 an Iceberg catalog the same rows go to an Iceberg table via MERGE; the
@@ -34,7 +34,8 @@ from pyspark.sql import SparkSession
 from . import fs
 
 _METRICS = ("rows_read", "chunks_encoded", "bytes_raw", "bytes_compressed")
-#: arrow rendering of schema.MANIFEST
+#: the schema of every manifest file: one row per committed (job_id,
+#: partition_key), status 'done' or 'failed', with the unit's metrics
 _SCHEMA = pa.schema(
     [("job_id", pa.string()), ("partition_key", pa.string()), ("status", pa.string())]
     + [(k, pa.int64()) for k in _METRICS]

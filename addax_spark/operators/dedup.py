@@ -27,6 +27,13 @@ from ..plans.partitioning import spread_to_parallelism as _spread
 
 K_HASHES = 64
 BANDS = 32  # r = K/BANDS = 2 rows per band
+#: hash-partitioned blocks of the exact embedding pair grid
+N_BLOCKS = 16
+#: width of the embedding column the LSH hyperplanes are drawn for
+EMBEDDING_DIM = 64
+#: min-label propagation rounds before dedup_clusters gives up: near-dup
+#: clusters are shallow, their diameter is far below this
+MAX_ITERS = 20
 
 
 def normalized(c: Column) -> Column:
@@ -41,24 +48,24 @@ def normalized_sql(expr: str) -> str:
 # --------------------------------------------------------------- exact dedup
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep the min-id representative per normalized-text hash.
 
     One shuffle on the 128-bit content hash; at 100 TB this is the classic
     first pass (hash is tiny vs text; shuffle carries (hash, id) pairs only).
     """
-    h = F.md5(normalized(F.col(text_col)))
+    h = F.md5(normalized(F.col("text")))
     return (
-        df.select(F.col(id_col), h.alias("content_hash"))
+        df.select(F.col("doc_id"), h.alias("content_hash"))
         .groupBy("content_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_copies"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_copies"))
     )
 
 
-def exact_dedup_sql(source: str = "documents") -> str:
+def exact_dedup_sql() -> str:
     return f"""
 SELECT md5(norm) AS content_hash, min(doc_id) AS keep_id, count(*) AS n_copies
-FROM (SELECT doc_id, {normalized_sql('text')} AS norm FROM {source})
+FROM (SELECT doc_id, {normalized_sql('text')} AS norm FROM documents)
 GROUP BY content_hash
 """
 
@@ -66,13 +73,11 @@ GROUP BY content_hash
 # ------------------------------------------------------------- MinHash + LSH
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = K_HASHES
-) -> DataFrame:
-    """k-minhash signature per doc, computed in ONE vectorized numpy pass
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """K_HASHES-minhash signature per doc, computed in ONE vectorized numpy pass
     per Arrow batch (``mapInPandas``) — no explode, no shuffle, no per-row
     Python: all shingles of a batch are hashed with pandas' deterministic
-    siphash (``pd.util.hash_array``), the (n_shingles, k) Kirsch-Mitzenmacher
+    siphash (``pd.util.hash_array``), the (n_shingles, K_HASHES) Kirsch-Mitzenmacher
     matrix ``(h1 + i*h2) mod p`` is built by broadcasting, and per-doc mins
     fall out of one ``np.minimum.reduceat`` over the doc offsets.
 
@@ -88,16 +93,16 @@ def minhash_signatures(
     import pandas as pd
 
     p = np.uint64((1 << 31) - 1)
-    idx = np.arange(k, dtype=np.uint64)
-    id_t = df.schema[id_col].dataType.simpleString()
-    schema = f"{id_col} {id_t}, " + ", ".join(f"mh{i} long" for i in range(k))
+    idx = np.arange(K_HASHES, dtype=np.uint64)
+    id_t = df.schema["doc_id"].dataType.simpleString()
+    schema = f"doc_id {id_t}, " + ", ".join(f"mh{i} long" for i in range(K_HASHES))
 
     def sig_batches(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             ids, offs, all_sh = [], [0], []
-            for doc_id, t in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
                 w = (t or "").split()
                 grams = sorted({" ".join(w[i : i + 3]) for i in range(max(len(w) - 2, 0))})
                 if not grams:
@@ -113,44 +118,39 @@ def minhash_signatures(
             # (S, k); max term ~2^31 + 64*2^31 < 2^38 — no uint64 overflow
             vals = (h1[:, None] + idx[None, :] * h2[:, None]) % p
             mins = np.minimum.reduceat(vals, np.asarray(offs[:-1]), axis=0).astype(np.int64)
-            out = pd.DataFrame(mins, columns=[f"mh{i}" for i in range(k)])
-            out.insert(0, id_col, ids)
+            out = pd.DataFrame(mins, columns=[f"mh{i}" for i in range(K_HASHES)])
+            out.insert(0, "doc_id", ids)
             yield out
 
-    return _spread(df.select(id_col, text_col)).mapInPandas(sig_batches, schema=schema)
+    return _spread(df.select("doc_id", "text")).mapInPandas(sig_batches, schema=schema)
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame, id_col: str = "doc_id", k: int = K_HASHES, bands: int = BANDS
-) -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     """Banded LSH: docs sharing any band signature become candidates.
 
     Self-join happens per (band, band_sig) bucket — the shuffle key — so
     cost scales with bucket occupancy, not corpus^2."""
-    r = k // bands
+    r = K_HASHES // BANDS
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
             F.concat_ws("_", *[F.col(f"mh{b * r + j}") for j in range(r)]).alias("sig"),
         )
-        for b in range(bands)
+        for b in range(BANDS)
     ]
     buckets = sigs.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.sig").alias("sig"))
+        F.col("doc_id"), F.explode(F.array(*band_structs)).alias("bb")
+    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.sig").alias("sig"))
     a, b = buckets.alias("a"), buckets.alias("b")
     return (
         a.join(b, ["band", "sig"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
 
 
-def jaccard_verify(
-    pairs: DataFrame, df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    threshold: float = 0.5,
-) -> DataFrame:
+def jaccard_verify(pairs: DataFrame, df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Exact word-3gram Jaccard on candidate pairs (join back to shingle sets).
 
     The shingle side is first semi-joined down to documents that actually
@@ -167,18 +167,18 @@ def jaccard_verify(
     on by default) prunes the corpus scan side of the semi-join.
     """
     cand_ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .union(pairs.select(F.col("id_b").alias(id_col)))
+        pairs.select(F.col("id_a").alias("doc_id"))
+        .union(pairs.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    sh = df.join(cand_ids.hint("SHUFFLE_HASH"), id_col, "leftsemi").select(
-        F.col(id_col), word_shingles(F.col(text_col)).alias("sh")
+    sh = df.join(cand_ids.hint("SHUFFLE_HASH"), "doc_id", "leftsemi").select(
+        F.col("doc_id"), word_shingles(F.col("text")).alias("sh")
     )
     out = (
         pairs
-        .join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a")
+        .join(sh.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sh", "sh_a")
                 .hint("SHUFFLE_HASH"), "id_a")
-        .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b")
+        .join(sh.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sh", "sh_b")
                 .hint("SHUFFLE_HASH"), "id_b")
         .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")).cast("long"))
         .withColumn(
@@ -194,32 +194,25 @@ def jaccard_verify(
     return out.select("id_a", "id_b", "inter", "uni", "jaccard")
 
 
-def minhash_lsh_pairs(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", threshold: float = 0.5,
-    materialize: bool = True,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """signatures -> banded LSH candidates -> exact-Jaccard verify.
 
-    ``materialize`` (default on) pins the two fan-out points with eager
-    executor-local checkpoints: the signature stage is consumed TWICE by the
-    bucket self-join and the candidate stage THREE times by the verify
-    (broadcast(pairs) + the two legs of the candidate-id semi-join) — left
+    Eager executor-local checkpoints pin the two fan-out points: the
+    signature stage is consumed TWICE by the bucket self-join and the
+    candidate stage THREE times by the verify (the pair join + the two
+    legs of the candidate-id semi-join) — left
     lazy, Spark re-runs the whole upstream pipeline per consumer (measured
     6.0 s -> 2.1 s at sf0.1). Candidates are sparse by design, so both
     checkpoints are small relative to the corpus; at full 100 TB scale the
     natural form of the same break is WRITING signatures/pairs to a table
     between stages (as the cluster/serving builds do), which also restores
     lineage-free fault tolerance."""
-    sigs = minhash_signatures(df, text_col, id_col)
-    if materialize:
-        sigs = sigs.localCheckpoint(eager=True)
-    cands = lsh_candidate_pairs(sigs, id_col)
-    if materialize:
-        cands = cands.localCheckpoint(eager=True)
-    return jaccard_verify(cands, df, text_col, id_col, threshold)
+    sigs = minhash_signatures(df).localCheckpoint(eager=True)
+    cands = lsh_candidate_pairs(sigs).localCheckpoint(eager=True)
+    return jaccard_verify(cands, df, threshold)
 
 
-def ngram_jaccard_pairs_sql(source: str = "documents", threshold: float = 0.5) -> str:
+def ngram_jaccard_pairs_sql(threshold: float = 0.5) -> str:
     """Oracle: exact all-pairs Jaccard (recomputes what LSH+verify finds —
     at verification threshold >= LSH design threshold, recall is ~1 by the
     banding bound 1-(1-s^r)^b; parity failures would expose missed pairs)."""
@@ -227,7 +220,7 @@ def ngram_jaccard_pairs_sql(source: str = "documents", threshold: float = 0.5) -
     return f"""
 WITH s AS (
   SELECT doc_id, {sh} AS sh
-  FROM (SELECT doc_id, {tokens_sql('text')} AS w FROM {source})
+  FROM (SELECT doc_id, {tokens_sql('text')} AS w FROM documents)
 )
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        len(list_intersect(a.sh, b.sh))::BIGINT AS inter,
@@ -247,7 +240,7 @@ WHERE CASE WHEN len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) > 0
 # ------------------------------------------------------------------- SimHash
 
 
-def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash64(df: DataFrame) -> DataFrame:
     """64-bit SimHash: per-token 60-bit md5 hash, per-bit +/-1 votes summed
     with multiplicity, sign -> bit. (60 bits: hash60 = 15 md5 hex chars.)
 
@@ -271,7 +264,7 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     import numpy as np
     import pandas as pd
 
-    id_t = df.schema[id_col].dataType.simpleString()
+    id_t = df.schema["doc_id"].dataType.simpleString()
     bit_idx = np.arange(60, dtype=np.int64)
 
     def sim_batches(batches):
@@ -279,7 +272,7 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
             if not len(pdf):
                 continue
             ids, offs, toks = [], [0], []
-            for doc_id, t in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
                 # ASCII whitespace class ONLY — Python's \s is Unicode-aware
                 # while the JVM twin (Java regex \s = [ \t\n\x0b\f\r]) and
                 # the DuckDB RE2 oracle are ASCII; a Unicode space (NBSP)
@@ -301,14 +294,14 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
             pm = ((h[:, None] >> bit_idx[None, :]) & 1) * 2 - 1  # (U, 60) in {-1,+1}
             votes = np.add.reduceat(pm[inv], np.asarray(offs[:-1]), axis=0)
             sim = ((votes > 0).astype(np.int64) << bit_idx[None, :]).sum(axis=1)
-            yield pd.DataFrame({id_col: ids, "simhash": sim})
+            yield pd.DataFrame({"doc_id": ids, "simhash": sim})
 
-    return _spread(df.select(id_col, text_col)).mapInPandas(
-        sim_batches, schema=f"{id_col} {id_t}, simhash long"
+    return _spread(df.select("doc_id", "text")).mapInPandas(
+        sim_batches, schema=f"doc_id {id_t}, simhash long"
     )
 
 
-def simhash64_sql(source: str = "documents") -> str:
+def simhash64_sql() -> str:
     votes = ", ".join(
         f"sum(CASE WHEN (h // {1 << b}) % 2 = 1 THEN 1 ELSE -1 END) AS v{b}"
         for b in range(60)
@@ -320,7 +313,7 @@ FROM (
   SELECT doc_id, {votes}
   FROM (
     SELECT doc_id, {hash60_sql('tok')} AS h
-    FROM (SELECT doc_id, unnest({tokens_sql('text')}) AS tok FROM {source})
+    FROM (SELECT doc_id, unnest({tokens_sql('text')}) AS tok FROM documents)
   )
   GROUP BY doc_id
 )
@@ -330,13 +323,7 @@ FROM (
 # ------------------------------------------------------- cluster assignment
 
 
-def dedup_clusters(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_iters: int = 20,
-    reliable_checkpoint: bool = False,
-) -> DataFrame:
+def dedup_clusters(df: DataFrame, pairs: DataFrame, reliable_checkpoint: bool = False) -> DataFrame:
     """Connected components over the near-dup pair graph: every document is
     assigned its cluster representative (the MIN id reachable through pairs;
     singletons map to themselves). This is the step that turns a pair list
@@ -389,21 +376,21 @@ def dedup_clusters(
 
     # edges already holds both directions, so src alone covers every
     # endpoint; only these nodes can ever change label
-    labels = edges.select(F.col("src").alias(id_col)).distinct().withColumn(
-        "label", F.col(id_col)
+    labels = edges.select(F.col("src").alias("doc_id")).distinct().withColumn(
+        "label", F.col("doc_id")
     )
     labels = _ckpt(labels, eager=True)
     converged = False
-    for _ in range(max_iters):
+    for _ in range(MAX_ITERS):
         nb = (
-            edges.join(labels.withColumnRenamed(id_col, "src"), "src")
-            .groupBy(F.col("dst").alias(id_col))
+            edges.join(labels.withColumnRenamed("doc_id", "src"), "src")
+            .groupBy(F.col("dst").alias("doc_id"))
             .agg(F.min("label").alias("nb_label"))
         )
         new_label = F.least(F.col("label"), F.coalesce("nb_label", "label"))
         new = _ckpt(
-            labels.join(nb, id_col, "left").select(
-                F.col(id_col),
+            labels.join(nb, "doc_id", "left").select(
+                F.col("doc_id"),
                 new_label.alias("label"),
                 (new_label != F.col("label")).cast("long").alias("_chg"),
             ),
@@ -422,21 +409,19 @@ def dedup_clusters(
         # returning partially-propagated labels would split one component
         # across cluster_ids — a silent-wrong keep/drop decision
         raise RuntimeError(
-            f"dedup_clusters did not converge in {max_iters} rounds "
-            "(component diameter exceeds max_iters); raise max_iters"
+            f"dedup_clusters did not converge in {MAX_ITERS} rounds "
+            "(component diameter exceeds MAX_ITERS)"
         )
     # re-attach singletons: every document not in any pair keeps itself
     return (
-        df.select(F.col(id_col))
+        df.select(F.col("doc_id"))
         .distinct()
-        .join(labels, id_col, "left")
-        .select(F.col(id_col), F.coalesce("label", F.col(id_col)).alias("cluster_id"))
+        .join(labels, "doc_id", "left")
+        .select(F.col("doc_id"), F.coalesce("label", F.col("doc_id")).alias("cluster_id"))
     )
 
 
-def keep_representatives(
-    clusters: DataFrame, quality: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def keep_representatives(clusters: DataFrame, quality: DataFrame) -> DataFrame:
     """The keep/drop decision a corpus-curation run actually ships: one
     representative per near-dup cluster, chosen by (quality DESC, id ASC) —
     every document gets a row with its cluster, its quality, and a boolean
@@ -453,27 +438,27 @@ def keep_representatives(
     # left join: a document without a quality row still gets a decision
     # (ranked after scored docs, nulls-last made EXPLICIT so the oracle and
     # any engine agree), honoring the every-document-gets-a-row contract
-    j = clusters.join(quality.select(id_col, "quality"), id_col, "left")
+    j = clusters.join(quality.select("doc_id", "quality"), "doc_id", "left")
     w = Window.partitionBy("cluster_id").orderBy(
-        F.col("quality").desc_nulls_last(), F.col(id_col)
+        F.col("quality").desc_nulls_last(), F.col("doc_id")
     )
     return j.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("cluster_id"),
         F.col("quality"),
         (F.row_number().over(w) == 1).alias("keep"),
     )
 
 
-def keep_representatives_sql(source: str = "documents", threshold: float = 0.5) -> str:
+def keep_representatives_sql(threshold: float = 0.5) -> str:
     """Oracle: clusters via the recursive-CTE closure, quality via the
     exact-ratio feature SQL, representative by the same (quality DESC, id)
     window — the full curation pipeline recomputed independently."""
     from .text import quality_score_sql
 
     return f"""
-WITH c AS ({dedup_clusters_sql(source, threshold)}),
-q AS ({quality_score_sql(source)})
+WITH c AS ({dedup_clusters_sql(threshold)}),
+q AS ({quality_score_sql()})
 SELECT c.doc_id, c.cluster_id, q.quality,
        (row_number() OVER (PARTITION BY c.cluster_id
                            ORDER BY q.quality DESC NULLS LAST, c.doc_id) = 1) AS keep
@@ -481,18 +466,18 @@ FROM c LEFT JOIN q ON c.doc_id = q.doc_id
 """
 
 
-def dedup_clusters_sql(source: str = "documents", threshold: float = 0.5) -> str:
+def dedup_clusters_sql(threshold: float = 0.5) -> str:
     """Oracle: transitive closure by recursive CTE over the SAME exact
     all-pairs Jaccard edges; cluster = min reachable id."""
     return f"""
-WITH RECURSIVE p AS ({ngram_jaccard_pairs_sql(source, threshold)}),
+WITH RECURSIVE p AS ({ngram_jaccard_pairs_sql(threshold)}),
 edges AS (
   SELECT id_a AS src, id_b AS dst FROM p
   UNION ALL
   SELECT id_b, id_a FROM p
 ),
 reach(id, r) AS (
-  SELECT doc_id, doc_id FROM {source}
+  SELECT doc_id, doc_id FROM documents
   UNION
   SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.id
 )
@@ -503,21 +488,19 @@ SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id
 # --------------------------------------------------- embedding cosine dedup
 
 
-def _exact_cosine_verify(
-    cands: DataFrame, df: DataFrame, vec_col: str, id_col: str, threshold: float
-) -> DataFrame:
+def _exact_cosine_verify(cands: DataFrame, df: DataFrame, threshold: float) -> DataFrame:
     """Exact sequential-fold cosine on candidate pairs (oracle semantics:
     the same left-fold order DuckDB's list_reduce uses — bit-exact doubles,
     rounded to 9 dp). Vectors are joined back only for candidate ids."""
     v = df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
+        F.col("vec_id"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
     ).withColumn(
         "norm",
         F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x)),
     )
-    a = v.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
-    b = v.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
+    a = v.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
+    b = v.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
     dot = F.aggregate(
         F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
         F.lit(0.0),
@@ -532,19 +515,13 @@ def _exact_cosine_verify(
     )
 
 
-def embedding_cosine_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-    n_blocks: int = 16,
-) -> DataFrame:
+def embedding_cosine_pairs(df: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Near-duplicate pairs by cosine — exact, fully distributed.
 
     Phase 1 prunes with a DISTRIBUTED block matmul: the corpus is packed
-    into ``n_blocks`` single-row blocks (native-typed id array + a
+    into ``N_BLOCKS`` single-row blocks (native-typed id array + a
     normalized float64 matrix, serialized) keyed by hash(id); every block
-    pair (upper triangle, n_blocks*(n_blocks+1)/2 tasks) is scored with one
+    pair (upper triangle, N_BLOCKS*(N_BLOCKS+1)/2 tasks) is scored with one
     numpy matmul and emits ids with cos >= threshold - 1e-6. Nothing
     touches the driver: each block EXPLODES to its upper-triangle partner
     keys and meets the partner payload in a SHUFFLE_HASH join on the block
@@ -565,16 +542,16 @@ def embedding_cosine_pairs(
     import pandas as pd
 
     margin = threshold - 1e-6
-    id_t = df.schema[id_col].dataType.simpleString()
-    blk = F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_blocks)).alias("_blk")
+    id_t = df.schema["vec_id"].dataType.simpleString()
+    blk = F.pmod(F.xxhash64(F.col("vec_id").cast("string")), F.lit(N_BLOCKS)).alias("_blk")
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        M = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+        M = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
         M = M / np.linalg.norm(M, axis=1, keepdims=True)
         return pd.DataFrame(
             {
                 "blk": [int(pdf["_blk"].iloc[0])],
-                "ids": [pdf[id_col].tolist()],
+                "ids": [pdf["vec_id"].tolist()],
                 "mat": [M.tobytes()],
                 "n": [len(pdf)],
                 "dim": [M.shape[1]],
@@ -582,7 +559,7 @@ def embedding_cosine_pairs(
         )
 
     packed = (
-        df.select(blk, F.col(id_col), F.col(vec_col))
+        df.select(blk, F.col("vec_id"), F.col("embedding"))
         .groupBy("_blk")
         .applyInPandas(pack, schema=f"blk int, ids array<{id_t}>, mat binary, n int, dim int")
     )
@@ -595,7 +572,7 @@ def embedding_cosine_pairs(
         F.col("mat").alias("mat_a"),
         F.col("n").alias("n_a"),
         F.col("dim").alias("dim"),
-        F.explode(F.sequence(F.col("blk"), F.lit(n_blocks - 1))).alias("blk_b"),
+        F.explode(F.sequence(F.col("blk"), F.lit(N_BLOCKS - 1))).alias("blk_b"),
     )
     b_side = packed.select(
         F.col("blk").alias("blk_b"),
@@ -621,20 +598,14 @@ def embedding_cosine_pairs(
                     out = pd.DataFrame({"id_a": lo[keep], "id_b": hi[keep]})
                     yield out.drop_duplicates()  # diagonal block sees (i,j) twice
 
-    cands = grid.repartition(max(n_blocks, 1)).mapInPandas(
+    cands = grid.repartition(N_BLOCKS).mapInPandas(
         score, schema=f"id_a {id_t}, id_b {id_t}"
     ).dropDuplicates(["id_a", "id_b"])
-    return _exact_cosine_verify(cands, df, vec_col, id_col, threshold)
+    return _exact_cosine_verify(cands, df, threshold)
 
 
 def embedding_lsh_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.95,
-    n_planes: int = 4,
-    n_tables: int = 24,
-    dim: int = 64,
+    df: DataFrame, threshold: float = 0.95, n_planes: int = 4, n_tables: int = 24
 ) -> DataFrame:
     """Sub-quadratic near-dup: random-hyperplane LSH candidate buckets +
     exact-fold verify — the 100 TB default pair generator.
@@ -667,25 +638,25 @@ def embedding_lsh_pairs(
 
     margin = threshold - 1e-6
     planes_all = np.concatenate(
-        [_hyperplanes_for_table(dim, n_planes, t) for t in range(n_tables)]
+        [_hyperplanes_for_table(EMBEDDING_DIM, n_planes, t) for t in range(n_tables)]
     )
     weights = (1 << np.arange(n_planes)).astype(np.int64)
-    id_t = df.schema[id_col].dataType.simpleString()
+    id_t = df.schema["vec_id"].dataType.simpleString()
 
     def bucketize(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
             bits = (V @ planes_all.T) > 0
-            ids = pdf[id_col].to_numpy()
+            ids = pdf["vec_id"].to_numpy()
             out = []
             for t in range(n_tables):
                 out.append(
                     pd.DataFrame(
                         {
-                            id_col: ids,
+                            "vec_id": ids,
                             "nv": list(Vn),
                             "tbl": t,
                             "bucket": bits[:, t * n_planes : (t + 1) * n_planes] @ weights,
@@ -694,16 +665,16 @@ def embedding_lsh_pairs(
                 )
             yield pd.concat(out, ignore_index=True)
 
-    buckets = _spread(df.select(id_col, vec_col)).mapInPandas(
-        bucketize, schema=f"{id_col} {id_t}, nv array<double>, tbl int, bucket long"
+    buckets = _spread(df.select("vec_id", "embedding")).mapInPandas(
+        bucketize, schema=f"vec_id {id_t}, nv array<double>, tbl int, bucket long"
     )
 
     def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         g = len(pdf)
         if g < 2:
-            return pd.DataFrame({"id_a": pdf[id_col][:0], "id_b": pdf[id_col][:0]})
+            return pd.DataFrame({"id_a": pdf["vec_id"][:0], "id_b": pdf["vec_id"][:0]})
         Vn = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["nv"]])
-        ids = pdf[id_col].to_numpy()
+        ids = pdf["vec_id"].to_numpy()
         outs = []
         # row blocks bound the similarity matrix to (block x g) per step
         for s in range(0, g, 2048):
@@ -716,7 +687,7 @@ def embedding_lsh_pairs(
                 hi = np.maximum(ids[qa[keep]], ids[ca[keep]])
                 outs.append(pd.DataFrame({"id_a": lo, "id_b": hi}))
         if not outs:
-            return pd.DataFrame({"id_a": pdf[id_col][:0], "id_b": pdf[id_col][:0]})
+            return pd.DataFrame({"id_a": pdf["vec_id"][:0], "id_b": pdf["vec_id"][:0]})
         return pd.concat(outs, ignore_index=True)
 
     cands = (
@@ -724,15 +695,15 @@ def embedding_lsh_pairs(
         .applyInPandas(score_bucket, schema=f"id_a {id_t}, id_b {id_t}")
         .dropDuplicates(["id_a", "id_b"])
     )
-    return _exact_cosine_verify(cands, df, vec_col, id_col, threshold)
+    return _exact_cosine_verify(cands, df, threshold)
 
 
-def embedding_cosine_pairs_sql(source: str = "embeddings", threshold: float = 0.95) -> str:
+def embedding_cosine_pairs_sql(threshold: float = 0.95) -> str:
     return f"""
 WITH v AS (
   SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v,
          sqrt(list_reduce(list_prepend(0.0, list_transform(embedding, x -> (x::DOUBLE)*(x::DOUBLE))), (a, x) -> a + x)) AS norm
-  FROM {source}
+  FROM embeddings
 )
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
        round(list_reduce(list_prepend(0.0, list_transform(generate_series(1, len(a.v)), i -> a.v[i] * b.v[i])), (acc, x) -> acc + x)

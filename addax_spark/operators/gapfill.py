@@ -10,9 +10,9 @@ Scale notes:
   callers processing long retention windows should pass an explicit
   [start, end) window (normal at 100 TB: gap-fill is a query-time op over a
   bounded range, not a whole-history rewrite).
-- The join key (keys, bucket) matches the rollup's grouping key, so with the
+- The join key (conv_id, bucket_start) matches the rollup's grouping key, so with the
   spine derived from the same tier table AQE plans a cheap join; the
-  subsequent windows reuse the (keys)-hash partitioning.
+  subsequent windows reuse the conv_id-hash partitioning.
 
 Determinism: LOCF copies exact values; linear interpolation is the literal
 IEEE expression ``prev + (next - prev) * ((b - pb) / (nb - pb))`` on doubles
@@ -31,19 +31,18 @@ from .bucketize import TIERS, bucket_start
 def bucket_spine(
     df: DataFrame,
     tier: str,
-    keys: list[str] = ["conv_id"],
-    bucket_col: str = "bucket_start",
     start: Column | None = None,
     end: Column | None = None,
     universe: DataFrame | None = None,
 ) -> DataFrame:
-    """One row per (keys, bucket) for every `tier` bucket in the series range.
+    """One row per (conv_id, bucket_start) for every `tier` bucket in the
+    series range.
 
     Range defaults to [min(bucket), max(bucket)] per series; pass ``start``/
     ``end`` literals to gap-fill a fixed window instead (cheaper + aligned
     output across series).
 
-    ``universe`` (distinct key rows) decouples WHICH series get a spine from
+    ``universe`` (distinct conv_id rows) decouples WHICH series get a spine from
     the tier table itself: with a fixed window the caller can aggregate only
     [start, end) — the 100 TB-friendly plan — while still spining series that
     have no observation inside the window (they come back as all-gap rows).
@@ -51,21 +50,21 @@ def bucket_spine(
     over one column instead of a full-history rollup.
     """
     step = TIERS[tier]
-    lo = start if start is not None else F.min(bucket_col)
-    hi = end if end is not None else F.max(bucket_col)
+    lo = start if start is not None else F.min("bucket_start")
+    hi = end if end is not None else F.max("bucket_start")
     if universe is not None:
         if start is None or end is None:
             raise ValueError("universe requires explicit start/end bounds")
-        bounds = universe.select(*keys).distinct().select(
-            *keys, lo.alias("_lo"), hi.alias("_hi")
+        bounds = universe.select("conv_id").distinct().select(
+            "conv_id", lo.alias("_lo"), hi.alias("_hi")
         )
     else:
-        bounds = df.groupBy(*keys).agg(lo.alias("_lo"), hi.alias("_hi"))
+        bounds = df.groupBy("conv_id").agg(lo.alias("_lo"), hi.alias("_hi"))
     return bounds.select(
-        *keys,
+        "conv_id",
         F.explode(
             F.sequence("_lo", "_hi", F.expr(f"interval {step} seconds"))
-        ).alias(bucket_col),
+        ).alias("bucket_start"),
     )
 
 
@@ -73,8 +72,6 @@ def gapfill(
     df: DataFrame,
     tier: str,
     value_cols: list[str],
-    keys: list[str] = ["conv_id"],
-    bucket_col: str = "bucket_start",
     methods: tuple[str, ...] = ("locf", "linear"),
     start: Column | None = None,
     end: Column | None = None,
@@ -82,7 +79,7 @@ def gapfill(
 ) -> DataFrame:
     """Densify a tier table and fill missing buckets.
 
-    Output columns: keys, bucket, ``fill_method`` ('observed' | 'gap'),
+    Output columns: conv_id, bucket_start, ``fill_method`` ('observed' | 'gap'),
     original value_cols (null on gap rows), and per method m in ``methods``
     a ``{col}_{m}`` column per value col.
 
@@ -92,11 +89,11 @@ def gapfill(
       weighted by bucket distance; leading/trailing gaps stay null (no
       extrapolation).
     """
-    spine = bucket_spine(df, tier, keys, bucket_col, start, end, universe)
+    spine = bucket_spine(df, tier, start, end, universe)
     marked = df.withColumn("_obs", F.lit(1))
-    full = spine.join(marked, on=[*keys, bucket_col], how="left")
+    full = spine.join(marked, on=["conv_id", "bucket_start"], how="left")
 
-    w = Window.partitionBy(*keys).orderBy(bucket_col)
+    w = Window.partitionBy("conv_id").orderBy("bucket_start")
     w_back = w.rowsBetween(Window.unboundedPreceding, 0)
     # "next observed" is expressed as a RUNNING frame over DESCENDING bucket
     # order, not first_value over (0, unboundedFollowing): Spark executes an
@@ -105,11 +102,11 @@ def gapfill(
     # 7.7s -> 0.6s at sf0.1) — while a running frame is incremental O(n).
     # Same exchange (identical partitioning), one extra in-partition sort.
     w_fwd_run = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(bucket_col).desc())
+        Window.partitionBy("conv_id")
+        .orderBy(F.col("bucket_start").desc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    b_us = F.unix_micros(F.col(bucket_col).cast("timestamp"))
+    b_us = F.unix_micros(F.col("bucket_start").cast("timestamp"))
 
     out = full.withColumn(
         "fill_method", F.when(F.col("_obs").isNotNull(), "observed").otherwise("gap")

@@ -48,6 +48,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.partitioning import colocate_by_series
 from ..schema import CHUNKS
 from .bucketize import bucket_start
 
@@ -155,6 +156,11 @@ def encode_many(
     C = len(offs) - 1
     N = len(ts)
     ns = np.diff(offs)
+    if C < 0 or offs[0] != 0 or offs[-1] != N or len(vals) != N or (ns < 0).any():
+        raise ValueError(
+            f"offsets must be nondecreasing from 0 to len(ts_us) == len(values) "
+            f"({N}, {len(vals)}); got {len(offs)} offsets, {offs[:1]} to {offs[-1:]}"
+        )
     v64 = vals.view(np.uint64)
 
     # headers, vectorized: <4s I q Q per chunk
@@ -418,30 +424,29 @@ def decode(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
 def encode_chunks(
     df: DataFrame,
     value: Column | str = "value",
-    key: str = "conv_id",
-    ts_col: str = "ts",
     chunk_tier: str = "1d",
     order_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Compress a point series into one Gorilla blob per (key, chunk bucket).
+    """Compress a point series into one Gorilla blob per (conv_id, chunk
+    bucket), its points ordered by ``order_cols`` (default ``ts``).
 
-    One shuffle on (key, chunk_start); the encode itself is a vectorized
-    Arrow ``mapInPandas`` (numpy bit-packing — analog of the reference's
-    only vectorized paths, the ORC batch readers MyOrcReader.java:91-93, but
-    applied to the compute kernel instead of the format edge).
+    One shuffle on conv_id (:func:`colocate_by_series`); the encode itself
+    is a vectorized Arrow ``mapInPandas`` (numpy bit-packing — analog of the
+    reference's only vectorized paths, the ORC batch readers
+    MyOrcReader.java:91-93, but applied to the compute kernel instead of the
+    format edge).
 
     At 100 TB the group count is (series x days) — massively parallel; hot
-    conversations stay bounded because a chunk never exceeds one (key, tier
-    bucket) group.
+    conversations stay bounded because a chunk never exceeds one (conv_id,
+    tier bucket) group.
     """
     vcol = F.col(value) if isinstance(value, str) else value
-    order = order_cols or [ts_col]
     pts = df.select(
-        F.col(key).alias("conv_id"),
-        bucket_start(ts_col, chunk_tier).alias("chunk_start"),
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("_t"),
+        F.col("conv_id"),
+        bucket_start("ts", chunk_tier).alias("chunk_start"),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("_t"),
         vcol.cast("double").alias("_v"),
-        *[F.col(c).alias(f"_o{i}") for i, c in enumerate(order) if c != ts_col],
+        *[F.col(c).alias(f"_o{i}") for i, c in enumerate(order_cols or []) if c != "ts"],
     )
     ocols = ["_t"] + [c for c in pts.columns if c.startswith("_o")]
 
@@ -450,11 +455,9 @@ def encode_chunks(
     # invocation per batch instead of per (conv, chunk) group, which is
     # ~10-100x cheaper when groups are small (per-group applyInPandas costs
     # ~ms of Arrow/dispatch overhead each). Groups can span Arrow batch
-    # boundaries, so a tail buffer carries the last open group forward.
-    parts = pts.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    arranged = pts.repartition(int(parts), "conv_id").sortWithinPartitions(
-        "conv_id", "chunk_start", *ocols
-    )
+    # boundaries, so each batch is held until the next one shows whether
+    # its last group continues.
+    arranged = colocate_by_series(pts).sortWithinPartitions("conv_id", "chunk_start", *ocols)
 
     def enc_batches(batches):
         def flush(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -482,20 +485,18 @@ def encode_chunks(
                 }
             )
 
-        tail: pd.DataFrame | None = None
-        for pdf in batches:
-            if tail is not None and len(tail):
-                pdf = pd.concat([tail, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last_key = (pdf["conv_id"].iloc[-1], pdf["chunk_start"].iloc[-1])
-            is_last = (pdf["conv_id"] == last_key[0]) & (pdf["chunk_start"] == last_key[1])
-            tail = pdf[is_last]
-            done = pdf[~is_last]
-            if len(done):
-                yield flush(done)
-        if tail is not None and len(tail):
-            yield flush(tail)
+        held: pd.DataFrame | None = None
+        for pdf in filter(len, batches):
+            if held is not None:
+                c0, s0 = pdf["conv_id"].iloc[0], pdf["chunk_start"].iloc[0]
+                cont = (held["conv_id"] == c0) & (held["chunk_start"] == s0)  # the open group
+                if cont.any():
+                    pdf, held = pd.concat([held[cont], pdf], ignore_index=True), held[~cont]
+                if len(held):
+                    yield flush(held)
+            held = pdf
+        if held is not None:
+            yield flush(held)
 
     return arranged.mapInPandas(enc_batches, schema=CHUNKS)
 

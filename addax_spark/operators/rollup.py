@@ -38,23 +38,19 @@ from .bucketize import TIER_ORDER, TIERS, bucket_start
 ROLLUP_COLS = ROLLUP.fieldNames()
 
 
-def rollup_from_raw(
-    df: DataFrame,
-    tier: str,
-    value: Column | None = None,
-    key: str = "conv_id",
-) -> DataFrame:
+def rollup_from_raw(df: DataFrame, tier: str, value: Column | None = None) -> DataFrame:
     """Aggregate raw transcripts into one tier directly.
 
     ``value`` defaults to ``length(text)`` (int64 — keeps sum/avg exact).
-    One shuffle on (key, bucket); partial aggregation is map-side so the
-    shuffle carries one row per (key, bucket, map-partition), not raw turns.
+    One shuffle on (conv_id, bucket); partial aggregation is map-side so the
+    shuffle carries one row per (conv_id, bucket, map-partition), not raw
+    turns.
     """
     v = (value if value is not None else F.length("text")).cast("long")
     ord_key = F.struct(F.col("ts"), F.col("turn_idx"))
     out = (
         df.withColumn("bucket_start", bucket_start("ts", tier))
-        .groupBy(key, "bucket_start")
+        .groupBy("conv_id", "bucket_start")
         .agg(
             F.count(F.lit(1)).alias("turn_count"),
             F.sum(v).alias("sum_len"),
@@ -65,7 +61,7 @@ def rollup_from_raw(
             F.max_by(F.col("text"), ord_key).alias("last_text"),
         )
     )
-    return _with_avg(out).select(*_cols(key))
+    return _with_avg(out).select(*ROLLUP_COLS)
 
 
 def _merge_aggs() -> list[Column]:
@@ -88,7 +84,7 @@ def _with_avg(df: DataFrame) -> DataFrame:
     return df.withColumn("avg_len", F.col("sum_len").cast("double") / F.col("turn_count"))
 
 
-def rollup_cascade_step(lower: DataFrame, tier: str, key: str = "conv_id") -> DataFrame:
+def rollup_cascade_step(lower: DataFrame, tier: str) -> DataFrame:
     """Exact re-aggregation of a coarser tier from the next finer tier table.
 
     The classic partial/final agg merge (:func:`_merge_aggs`) — at 100 TB
@@ -96,26 +92,24 @@ def rollup_cascade_step(lower: DataFrame, tier: str, key: str = "conv_id") -> Da
     """
     out = (
         lower.withColumn("bucket_start2", bucket_start("bucket_start", tier))
-        .groupBy(key, "bucket_start2")
+        .groupBy("conv_id", "bucket_start2")
         .agg(*_merge_aggs())
         .withColumnRenamed("bucket_start2", "bucket_start")
     )
-    return _with_avg(out).select(*_cols(key))
+    return _with_avg(out).select(*ROLLUP_COLS)
 
 
 def rollup_tiers(
-    df: DataFrame,
-    tiers: list[str] | None = None,
-    value: Column | None = None,
-    key: str = "conv_id",
+    df: DataFrame, tiers: list[str] | None = None, value: Column | None = None
 ) -> DataFrame:
     """Every tier from ONE plan, as one long table: ``ROLLUP_COLS + tier``.
 
     Raw rows are rolled up once into the finest tier; each finest-tier row
     is then exploded once per tier with its ``bucket_start`` floored to that
-    tier, and a single merge aggregate keyed on (key, tier, bucket_start)
-    builds all tiers at once. Coarser tiers still read only finest-tier
-    partials, never raw rows. Over an input hash-partitioned on ``key``
+    tier, and a single merge aggregate keyed on (conv_id, tier,
+    bucket_start) builds all tiers at once. Coarser tiers still read only
+    finest-tier partials, never raw rows. Over an input hash-partitioned on
+    ``conv_id``
     both aggregates are exchange-free, so the whole plan has no exchange
     above that one — no per-tier cache, no per-tier action.
     """
@@ -131,37 +125,25 @@ def rollup_tiers(
         ])
     )
     out = (
-        rollup_from_raw(df, tiers[0], value, key)
-        .select(key, fan, *ROLLUP_COLS[2:])
-        .groupBy(key, "tier", "bucket_start")
+        rollup_from_raw(df, tiers[0], value)
+        .select("conv_id", fan, *ROLLUP_COLS[2:])
+        .groupBy("conv_id", "tier", "bucket_start")
         .agg(*_merge_aggs())
     )
-    return _with_avg(out).select(*_cols(key), "tier")
+    return _with_avg(out).select(*ROLLUP_COLS, "tier")
 
 
-def rollup_all_tiers(
-    df: DataFrame,
-    tiers: list[str] | None = None,
-    value: Column | None = None,
-    key: str = "conv_id",
-) -> dict[str, DataFrame]:
+def rollup_all_tiers(df: DataFrame) -> dict[str, DataFrame]:
     """Build every tier: raw -> 1m, then cascade 1m -> 5m -> 1h -> 1d.
 
     Only the 1m rollup reads raw turns; each coarser tier aggregates the
     previous one (≥60x smaller input per step at scale).
     """
-    tiers = tiers or TIER_ORDER
-    assert tiers == sorted(tiers, key=lambda t: TIERS[t])
     out: dict[str, DataFrame] = {}
     prev: DataFrame | None = None
-    for t in tiers:
-        cur = rollup_from_raw(df, t, value, key) if prev is None else rollup_cascade_step(prev, t, key)
+    for t in TIER_ORDER:
+        cur = rollup_from_raw(df, t) if prev is None else rollup_cascade_step(prev, t)
         out[t] = cur
         prev = cur
     return out
 
-
-def _cols(key: str) -> list:
-    cols = list(ROLLUP_COLS)
-    cols[0] = key
-    return cols

@@ -25,6 +25,11 @@ from pyspark.sql import functions as F
 
 from ..plans.partitioning import spread_to_parallelism
 
+#: training-sample cap of ivf_train_centroids (a few hundred MB of vectors)
+IVF_MAX_SAMPLE = 262_144
+#: spherical k-means rounds of ivf_train_centroids
+IVF_ITERS = 5
+
 
 def _as_double(vec_col: str) -> Column:
     return F.transform(F.col(vec_col), lambda x: x.cast("double"))
@@ -38,21 +43,15 @@ def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def brute_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def brute_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact top-k by cosine for each query vector (query id col: `q_id`).
 
     queries is broadcast (small side); rank ties broken by corpus id —
     fully deterministic output (rank, rounded cosine)."""
-    c = corpus.select(F.col(id_col).alias("c_id"), _as_double(vec_col).alias("cv")).withColumn(
+    c = corpus.select(F.col("vec_id").alias("c_id"), _as_double("embedding").alias("cv")).withColumn(
         "cn", _norm(F.col("cv"))
     )
-    q = queries.select(F.col("q_id"), _as_double(vec_col).alias("qv")).withColumn(
+    q = queries.select(F.col("q_id"), _as_double("embedding").alias("qv")).withColumn(
         "qn", _norm(F.col("qv"))
     )
     scored = (
@@ -68,13 +67,13 @@ def brute_topk(
     )
 
 
-def brute_topk_sql(k: int, query_ids: list[int], source: str = "embeddings") -> str:
+def brute_topk_sql(k: int, query_ids: list[int]) -> str:
     ids = ", ".join(str(i) for i in query_ids)
     return f"""
 WITH v AS (
   SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v,
          sqrt(list_reduce(list_prepend(0.0, list_transform(embedding, x -> (x::DOUBLE)*(x::DOUBLE))), (a, x) -> a + x)) AS n
-  FROM {source}
+  FROM embeddings
 ),
 scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS c_id,
@@ -141,8 +140,6 @@ def ann_lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     n_planes: int = 4,
     n_tables: int = 12,
     dim: int = 64,
@@ -168,16 +165,15 @@ def ann_lsh_topk(
         [_hyperplanes_for_table(dim, n_planes, t) for t in range(n_tables)]
     )
 
-    def with_buckets(df: DataFrame, idc: str, spread: bool = False) -> DataFrame:
-        # spread=True only for the corpus side: the query set is tiny and
-        # round-robining it would add tasks, not parallelism
-        vec_field = df.schema[vec_col].dataType.simpleString()
+    def with_buckets(df: DataFrame, idc: str) -> DataFrame:
+        vec_field = df.schema["embedding"].dataType.simpleString()
+        id_field = df.schema[idc].dataType.simpleString()
 
         def bucketize(batches):
             for pdf in batches:
                 if not len(pdf):
                     continue
-                V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+                V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
                 bits = (V @ planes_all.T) > 0  # (n, n_tables*n_planes)
                 weights = (1 << np.arange(n_planes)).astype(np.int64)
                 out = []
@@ -187,7 +183,7 @@ def ann_lsh_topk(
                         pd.DataFrame(
                             {
                                 idc: pdf[idc].to_numpy(),
-                                vec_col: pdf[vec_col].to_numpy(),
+                                "embedding": pdf["embedding"].to_numpy(),
                                 "tbl": t,
                                 "bucket": b,
                             }
@@ -195,22 +191,19 @@ def ann_lsh_topk(
                     )
                 yield pd.concat(out, ignore_index=True)
 
-        src = df.select(idc, vec_col)
-        if spread:
-            src = spread_to_parallelism(src)
-        return src.mapInPandas(
-            bucketize,
-            schema=f"{idc} string, {vec_col} {vec_field}, tbl int, bucket long"
-            if df.schema[idc].dataType.simpleString() == "string"
-            else f"{idc} {df.schema[idc].dataType.simpleString()}, {vec_col} {vec_field}, tbl int, bucket long",
+        return df.select(idc, "embedding").mapInPandas(
+            bucketize, schema=f"{idc} {id_field}, embedding {vec_field}, tbl int, bucket long"
         )
 
-    # corpus side NOT spread: the per-row matmul here is trivial (one
-    # (batch x planes) product), so parallelizing the scan buys less than
-    # the extra exchange costs (measured 1.47 -> 1.66 s regression at
-    # sf0.1); the heavy work lands after the (tbl, bucket) shuffle anyway
-    cb = with_buckets(corpus, id_col).withColumnRenamed(id_col, "c_id").withColumnRenamed(vec_col, "cv_raw")
-    qb = with_buckets(queries, "q_id").withColumnRenamed(vec_col, "qv_raw")
+    # neither side is spread_to_parallelism'd: the per-row matmul here is
+    # trivial (one (batch x planes) product), so parallelizing the corpus
+    # scan buys less than the extra exchange costs (measured 1.47 -> 1.66 s
+    # regression at sf0.1); the heavy work lands after the (tbl, bucket)
+    # shuffle anyway
+    cb = with_buckets(corpus, "vec_id").withColumnRenamed("vec_id", "c_id").withColumnRenamed(
+        "embedding", "cv_raw"
+    )
+    qb = with_buckets(queries, "q_id").withColumnRenamed("embedding", "qv_raw")
     cands = (
         cb.join(qb, ["tbl", "bucket"])
         .filter(F.col("c_id") != F.col("q_id"))
@@ -223,22 +216,12 @@ def ann_lsh_topk(
 # ----------------------------------------------------------------- IVF / ANN
 
 
-def ivf_train_centroids(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    iters: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    sample_mod: int = 1,
-    max_sample: int = 262_144,
-) -> np.ndarray:
+def ivf_train_centroids(corpus: DataFrame, n_centroids: int = 16) -> np.ndarray:
     """Deterministic spherical k-means centroids for an IVF index.
 
-    Trains on a BOUNDED deterministic sample (keep id when
-    xxhash-mod-sample_mod == 0, hard-capped at max_sample rows) collected
-    to the driver in id-sorted order — the standard IVF recipe (train on a
-    sample, assign the full corpus distributed); at 100 TB pick sample_mod
-    so the sample stays ~1e5 vectors (a few hundred MB). Determinism:
+    Trains on a BOUNDED deterministic sample (the IVF_MAX_SAMPLE lowest ids)
+    collected to the driver in id-sorted order — the standard IVF recipe
+    (train on a sample, assign the full corpus distributed). Determinism:
     fixed id-sort, evenly-spaced init over the sorted sample, numpy
     float64 reductions in a single process — no RNG, no partition-order
     dependence (a distributed mean would sum floats in nondeterministic
@@ -246,16 +229,14 @@ def ivf_train_centroids(
     L2-normalized, centroid = normalized mean, similarity = dot == cosine.
     Empty clusters re-seed deterministically from the farthest points.
     """
-    s = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-    if sample_mod > 1:
-        s = s.filter(F.pmod(F.xxhash64(F.col("_id")), F.lit(sample_mod)) == 0)
-    rows = s.orderBy("_id").limit(max_sample).collect()
+    s = corpus.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"))
+    rows = s.orderBy("_id").limit(IVF_MAX_SAMPLE).collect()
     V = np.stack([np.asarray(r._v, dtype=np.float64) for r in rows])
     V = V / np.linalg.norm(V, axis=1, keepdims=True)
     n = len(V)
     k = min(n_centroids, n)
     C = V[np.linspace(0, n - 1, k).astype(np.int64)].copy()
-    for _ in range(iters):
+    for _ in range(IVF_ITERS):
         sim = V @ C.T  # (n, k)
         assign = sim.argmax(axis=1)
         for j in range(k):
@@ -271,15 +252,7 @@ def ivf_train_centroids(
 
 
 def ann_ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_centroids: int = 16,
-    nprobe: int = 6,
-    iters: int = 5,
-    sample_mod: int = 1,
+    corpus: DataFrame, queries: DataFrame, k: int = 10, n_centroids: int = 16, nprobe: int = 6
 ) -> DataFrame:
     """Approximate top-k via an inverted-file index: every corpus vector is
     assigned to its nearest centroid (one matmul per Arrow batch), each
@@ -296,21 +269,21 @@ def ann_ivf_topk(
     exact brute-force oracle."""
     import pandas as pd
 
-    C = ivf_train_centroids(corpus, n_centroids, iters, vec_col, id_col, sample_mod)
+    C = ivf_train_centroids(corpus, n_centroids)
 
     def assigner(idc: str, out_id: str, probes: int):
         def assign(batches):
             for pdf in batches:
                 if not len(pdf):
                     continue
-                V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+                V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
                 Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
                 sim = Vn @ C.T
                 if probes == 1:
                     yield pd.DataFrame(
                         {
                             out_id: pdf[idc].to_numpy(),
-                            vec_col: pdf[vec_col].to_numpy(),
+                            "embedding": pdf["embedding"].to_numpy(),
                             "cid": sim.argmax(axis=1).astype(np.int32),
                         }
                     )
@@ -320,22 +293,22 @@ def ann_ivf_topk(
                     yield pd.DataFrame(
                         {
                             out_id: pdf[idc].to_numpy()[reps],
-                            vec_col: pdf[vec_col].to_numpy()[reps],
+                            "embedding": pdf["embedding"].to_numpy()[reps],
                             "cid": top.ravel().astype(np.int32),
                         }
                     )
 
         return assign
 
-    vec_t = corpus.schema[vec_col].dataType.simpleString()
-    id_t = corpus.schema[id_col].dataType.simpleString()
-    cb = spread_to_parallelism(corpus.select(id_col, vec_col)).mapInPandas(
-        assigner(id_col, "c_id", 1), schema=f"c_id {id_t}, {vec_col} {vec_t}, cid int"
-    ).withColumnRenamed(vec_col, "cv_raw")
-    qb = queries.select("q_id", vec_col).mapInPandas(
+    vec_t = corpus.schema["embedding"].dataType.simpleString()
+    id_t = corpus.schema["vec_id"].dataType.simpleString()
+    cb = spread_to_parallelism(corpus.select("vec_id", "embedding")).mapInPandas(
+        assigner("vec_id", "c_id", 1), schema=f"c_id {id_t}, embedding {vec_t}, cid int"
+    ).withColumnRenamed("embedding", "cv_raw")
+    qb = queries.select("q_id", "embedding").mapInPandas(
         assigner("q_id", "q_id", nprobe),
-        schema=f"q_id {queries.schema['q_id'].dataType.simpleString()}, {vec_col} {vec_t}, cid int",
-    ).withColumnRenamed(vec_col, "qv_raw")
+        schema=f"q_id {queries.schema['q_id'].dataType.simpleString()}, embedding {vec_t}, cid int",
+    ).withColumnRenamed("embedding", "qv_raw")
     cands = (
         cb.join(qb, "cid")
         .filter(F.col("c_id") != F.col("q_id"))

@@ -27,12 +27,12 @@ LANG_MARKERS: dict[str, list[str]] = {
 STOPWORDS = sorted(set(w for ws in LANG_MARKERS.values() for w in ws))
 
 
-def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_stats(df: DataFrame) -> DataFrame:
     """Token count, char count, avg token length (exact-ratio double)."""
-    t = tokens(F.col(text_col))
+    t = tokens(F.col("text"))
     return df.select(
-        F.col(id_col),
-        F.length(text_col).cast("long").alias("n_chars"),
+        F.col("doc_id"),
+        F.length("text").cast("long").alias("n_chars"),
         F.size(t).cast("long").alias("n_tokens"),
         F.aggregate(t, F.lit(0).cast("long"), lambda a, x: a + F.length(x)).alias("chars_in_tokens"),
     ).withColumn(
@@ -41,7 +41,7 @@ def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def token_stats_sql(source: str = "documents") -> str:
+def token_stats_sql() -> str:
     from ..functions.textfns import tokens_sql
 
     t = tokens_sql("text")
@@ -51,25 +51,25 @@ SELECT doc_id,
        len(t)::BIGINT AS n_tokens,
        coalesce(list_sum(list_transform(t, x -> length(x))), 0)::BIGINT AS chars_in_tokens,
        CASE WHEN len(t) > 0 THEN (coalesce(list_sum(list_transform(t, x -> length(x))), 0)::BIGINT)::DOUBLE / len(t) ELSE 0.0 END AS avg_token_len
-FROM (SELECT doc_id, text, {t} AS t FROM {source})
+FROM (SELECT doc_id, text, {t} AS t FROM documents)
 """
 
 
-def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Heuristic quality features + score.
 
     punct_ratio = non-alnum-non-space chars / chars;
     stopword_ratio = stopword tokens / tokens;
     score = mix of exact-int ratios (identical doubles across engines).
     """
-    t = tokens(F.col(text_col))
-    n_chars = F.length(text_col).cast("long")
-    n_punct = (n_chars - F.length(F.regexp_replace(F.col(text_col), r"[^A-Za-z0-9\s]", ""))).cast("long")
+    t = tokens(F.col("text"))
+    n_chars = F.length("text").cast("long")
+    n_punct = (n_chars - F.length(F.regexp_replace(F.col("text"), r"[^A-Za-z0-9\s]", ""))).cast("long")
     sw = F.array(*[F.lit(w) for w in STOPWORDS])
     n_stop = F.size(F.filter(t, lambda x: F.array_contains(sw, F.lower(x)))).cast("long")
     n_tok = F.size(t).cast("long")
     out = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_chars.alias("n_chars"),
         n_tok.alias("n_tokens"),
         n_punct.alias("n_punct"),
@@ -87,7 +87,7 @@ def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     )
 
 
-def quality_score_sql(source: str = "documents") -> str:
+def quality_score_sql() -> str:
     from ..functions.textfns import tokens_sql
 
     t = tokens_sql("text")
@@ -104,15 +104,15 @@ FROM (
          len(t)::BIGINT AS n_tokens,
          (length(text) - length(regexp_replace(text, '[^A-Za-z0-9\\s]', '', 'g')))::BIGINT AS n_punct,
          len(list_filter(t, x -> list_contains([{sw}], lower(x))))::BIGINT AS n_stopwords
-  FROM (SELECT doc_id, text, {t} AS t FROM {source})
+  FROM (SELECT doc_id, text, {t} AS t FROM documents)
 )
 """
 
 
-def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """N-gram/marker-word language ID: argmax of marker hits, ties broken by
     language code order, 'und' when no markers hit."""
-    t = F.transform(tokens(F.col(text_col)), lambda x: F.lower(x))
+    t = F.transform(tokens(F.col("text")), lambda x: F.lower(x))
     hits = {}
     for lang, markers in sorted(LANG_MARKERS.items()):
         m = F.array(*[F.lit(w) for w in markers])
@@ -123,13 +123,13 @@ def lang_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     for lang in sorted(hits, reverse=True):
         pred = F.when(hits[lang] == mx, F.lit(lang)).otherwise(pred)
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.when(mx > 0, pred).otherwise(F.lit("und")).alias("lang_pred"),
         mx.alias("marker_hits"),
     )
 
 
-def lang_id_sql(source: str = "documents") -> str:
+def lang_id_sql() -> str:
     from ..functions.textfns import tokens_sql
 
     t = tokens_sql("text")
@@ -151,25 +151,25 @@ FROM (
   FROM (
     SELECT doc_id, {', '.join(hit_cols)}
     FROM (SELECT doc_id, list_transform(t0, x -> lower(x)) AS t
-          FROM (SELECT doc_id, {t} AS t0 FROM {source}))
+          FROM (SELECT doc_id, {t} AS t0 FROM documents))
   )
 )
 """
 
 
-def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Document fingerprints: md5 of raw text, md5 of normalized text
     (lower + collapsed whitespace), and a 60-bit integer fingerprint."""
-    norm = F.concat_ws(" ", tokens(F.lower(F.col(text_col))))
+    norm = F.concat_ws(" ", tokens(F.lower(F.col("text"))))
     return df.select(
-        F.col(id_col),
-        F.md5(F.col(text_col)).alias("md5_raw"),
+        F.col("doc_id"),
+        F.md5(F.col("text")).alias("md5_raw"),
         F.md5(norm).alias("md5_norm"),
         hash60(norm).alias("fp60"),
     )
 
 
-def fingerprint_sql(source: str = "documents") -> str:
+def fingerprint_sql() -> str:
     from ..functions.textfns import hash60_sql, tokens_sql
 
     t = tokens_sql("lower(text)")
@@ -178,5 +178,5 @@ SELECT doc_id,
        md5(text) AS md5_raw,
        md5(norm) AS md5_norm,
        {hash60_sql('norm')} AS fp60
-FROM (SELECT doc_id, text, array_to_string({t}, ' ') AS norm FROM {source})
+FROM (SELECT doc_id, text, array_to_string({t}, ' ') AS norm FROM documents)
 """

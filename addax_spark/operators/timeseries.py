@@ -17,105 +17,70 @@ metric pivot, sessionization.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .bucketize import bucket_start
 
 
 def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    right_value_cols: list[str] | None = None,
-    tolerance_s: int | None = None,
+    left: DataFrame, right: DataFrame, keys: list[str], right_value_cols: list[str] | None = None
 ) -> DataFrame:
     """For each left row, attach the right row's values with the greatest
     right.ts <= left.ts per key (backward as-of; equality matches).
 
     Right side should be unique per (keys, ts) — dedupe upstream for a
     deterministic match. Output: all left columns + right value columns
-    (prefixed `asof_`), null when no prior right row (or outside
-    tolerance_s)."""
-    rv = right_value_cols or [c for c in right.columns if c not in keys + [ts_col]]
-    lcols = [c for c in left.columns if c not in keys + [ts_col]]
+    (prefixed `asof_`), null when no prior right row."""
+    rv = right_value_cols or [c for c in right.columns if c not in keys + ["ts"]]
+    lcols = [c for c in left.columns if c not in keys + ["ts"]]
     l_tag = left.select(
         *keys,
-        F.col(ts_col),
+        F.col("ts"),
         F.lit(1).alias("_side"),
         *[F.col(c) for c in lcols],
         *[F.lit(None).cast(right.schema[c].dataType).alias(f"_rv_{c}") for c in rv],
-        F.lit(None).cast("timestamp").alias("_rts"),
     )
     r_tag = right.select(
         *keys,
-        F.col(ts_col),
+        F.col("ts"),
         F.lit(0).alias("_side"),
         *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols],
         *[F.col(c).alias(f"_rv_{c}") for c in rv],
-        F.col(ts_col).cast("timestamp").alias("_rts"),
     )
     u = l_tag.unionByName(r_tag)
     # right rows (side 0) sort before left rows at equal ts -> equality joins
     w = (
         Window.partitionBy(*keys)
-        .orderBy(F.col(ts_col), F.col("_side"))
+        .orderBy(F.col("ts"), F.col("_side"))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     filled = [F.last(f"_rv_{c}", ignorenulls=True).over(w).alias(f"asof_{c}") for c in rv]
-    matched_ts = F.last("_rts", ignorenulls=True).over(w)
-    out = u.select(*keys, ts_col, "_side", *lcols, *filled, matched_ts.alias("_mts")).filter(
-        F.col("_side") == 1
-    )
-    if tolerance_s is not None:
-        within = (
-            F.unix_micros(F.col(ts_col).cast("timestamp")) - F.unix_micros(F.col("_mts"))
-        ) <= tolerance_s * 1_000_000
-        out = out.select(
-            *keys, ts_col, *lcols,
-            *[F.when(within, F.col(f"asof_{c}")).alias(f"asof_{c}") for c in rv],
-        )
-    else:
-        out = out.drop("_side", "_mts")
-    return out
+    return u.select(*keys, "ts", "_side", *lcols, *filled).filter(F.col("_side") == 1).drop("_side")
 
 
-def pivot_metrics(
-    df: DataFrame,
-    tier: str,
-    pivot_col: str,
-    pivot_values: list[str],
-    value_col: str = "value",
-    key: str = "user_id",
-    ts_col: str = "ts",
-    decimal: str = "decimal(18,2)",
-) -> DataFrame:
-    """Bucketed metric pivot: one column per series/field, summed per
-    (key, bucket). DECIMAL accumulation -> exact, order-independent sums
-    (cast to double on output: exact for the magnitudes involved)."""
+def pivot_metrics(df: DataFrame, tier: str, pivot_col: str, pivot_values: list[str]) -> DataFrame:
+    """Bucketed metric pivot: one column per series/field, ``value`` summed
+    per (user_id, bucket). DECIMAL accumulation -> exact, order-independent
+    sums (cast to double on output: exact for the magnitudes involved)."""
     out = (
-        df.withColumn("bucket_start", bucket_start(ts_col, tier))
-        .groupBy(key, "bucket_start")
+        df.withColumn("bucket_start", bucket_start("ts", tier))
+        .groupBy("user_id", "bucket_start")
         .pivot(pivot_col, pivot_values)
-        .agg(F.sum(F.col(value_col).cast(decimal)))
+        .agg(F.sum(F.col("value").cast("decimal(18,2)")))
     )
     return out.select(
-        key, "bucket_start", *[F.col(v).cast("double").alias(v) for v in pivot_values]
+        "user_id", "bucket_start", *[F.col(v).cast("double").alias(v) for v in pivot_values]
     )
 
 
 def sessionize(
-    df: DataFrame,
-    gap_s: int = 1800,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    tie_col: str = "event_id",
+    df: DataFrame, gap_s: int = 1800, key: str = "user_id", tie_col: str = "event_id"
 ) -> DataFrame:
     """Inactivity-gap sessionization: a new session starts when the gap from
     the previous event exceeds gap_s. Returns per-session stats."""
-    w = Window.partitionBy(key).orderBy(ts_col, tie_col)
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    w = Window.partitionBy(key).orderBy("ts", tie_col)
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     prev = F.lag(us).over(w)
     is_new = F.when(prev.isNull() | ((us - prev) > gap_s * 1_000_000), 1).otherwise(0)
     with_id = df.withColumn(
@@ -125,28 +90,21 @@ def sessionize(
     return (
         with_id.groupBy(key, "session_idx")
         .agg(
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
             F.count(F.lit(1)).alias("n_events"),
             (
-                (F.unix_micros(F.max(ts_col).cast("timestamp"))
-                 - F.unix_micros(F.min(ts_col).cast("timestamp"))) / F.lit(1_000_000.0)
+                (F.unix_micros(F.max("ts").cast("timestamp"))
+                 - F.unix_micros(F.min("ts").cast("timestamp"))) / F.lit(1_000_000.0)
             ).alias("duration_s"),
         )
     )
 
 
-def rolling_metrics(
-    df: DataFrame,
-    window_s: int = 3600,
-    keys: list[str] = ["user_id"],
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-) -> DataFrame:
+def rolling_metrics(df: DataFrame, window_s: int = 3600) -> DataFrame:
     """Trailing moving-window aggregates per event: for every row, the
-    count / exact DECIMAL sum / exact-ratio avg / min / max of the series'
-    values in the last ``window_s`` seconds INCLUSIVE of the current row
+    count / exact DECIMAL sum / exact-ratio avg / min / max of the user_id
+    series' ``value`` in the last ``window_s`` seconds INCLUSIVE of the current row
     (window = (t - window_s, t], expressed as a RANGE frame over integer
     epoch-micros — the continuous-query staple the fixed tier buckets
     can't answer: "activity in the hour ending *now*", per event).
@@ -159,22 +117,22 @@ def rolling_metrics(
     derived sum/count — bit-identical cross-engine (CLAUDE.md parity
     rules).
     """
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     w = (
-        Window.partitionBy(*keys)
+        Window.partitionBy("user_id")
         .orderBy(us)
         .rangeBetween(-(window_s * 1_000_000 - 1), 0)
     )
-    vdec = F.col(value_col).cast("decimal(18,2)")
+    vdec = F.col("value").cast("decimal(18,2)")
     return df.select(
-        *keys,
-        F.col(ts_col).cast("timestamp").alias(ts_col),
-        F.col(id_col),
+        "user_id",
+        F.col("ts").cast("timestamp").alias("ts"),
+        F.col("event_id"),
         F.count(F.lit(1)).over(w).alias("n_win"),
         F.sum(vdec).over(w).cast("double").alias("sum_win"),
         (F.sum(vdec).over(w).cast("double") / F.count(F.lit(1)).over(w)).alias("avg_win"),
-        F.min(value_col).over(w).alias("min_win"),
-        F.max(value_col).over(w).alias("max_win"),
+        F.min("value").over(w).alias("min_win"),
+        F.max("value").over(w).alias("max_win"),
     )
 
 

@@ -24,11 +24,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def colocate_by_series(df: DataFrame, n_partitions: int, key: str = "conv_id") -> DataFrame:
-    """Hash-repartition by series key so tier rollups and chunk encodes run
+def colocate_by_series(df: DataFrame) -> DataFrame:
+    """Hash-repartition by conv_id so tier rollups and chunk encodes run
     shuffle-free downstream: HashPartitioning(conv_id) is a subset of every
     grouping key (conv_id, bucket), which is exactly the condition Catalyst
     can PROVE, so no further Exchange is planned (verified in PLANS.md §2).
+
+    Partition count: twice the scheduler's parallelism, read from the
+    session (the executors' cores on a cluster, not the driver's). Both of
+    ``job.run``'s shuffles (the tier rollup's and the chunk encode's) go
+    through here, so they share that one count.
 
     Skew note: partitioning on (conv_id, date(ts)) would also be
     semantically colocated for day-aligned buckets and would spread hot
@@ -38,7 +43,8 @@ def colocate_by_series(df: DataFrame, n_partitions: int, key: str = "conv_id") -
     MBs) while a partition targets ~128 MiB: at 10^12 turns / ~10^9
     conversations, per-partition load is governed by the law of large
     numbers, and AQE skew handling remains on as the backstop."""
-    return df.repartition(n_partitions, F.col(key))
+    n = df.sparkSession.sparkContext.defaultParallelism * 2
+    return df.repartition(n, F.col("conv_id"))
 
 
 def spread_to_parallelism(df: DataFrame) -> DataFrame:

@@ -55,20 +55,3 @@ CHUNKS = T.StructType(
         T.StructField("chunk", T.BinaryType(), False),
     ]
 )
-
-# Checkpoint/lineage manifest (north_rule: resumable per-partition checkpoints
-# with lineage + metrics). Mirrors the reference's Communication counters
-# (core/.../statistics/communication/CommunicationTool.java:30-120) as rows.
-MANIFEST = T.StructType(
-    [
-        T.StructField("job_id", T.StringType(), False),
-        T.StructField("partition_key", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),  # running|done|failed
-        T.StructField("rows_read", T.LongType(), True),
-        T.StructField("chunks_encoded", T.LongType(), True),
-        T.StructField("bytes_raw", T.LongType(), True),
-        T.StructField("bytes_compressed", T.LongType(), True),
-        T.StructField("wall_s", T.DoubleType(), True),
-        T.StructField("committed_at", T.TimestampType(), True),
-    ]
-)

@@ -38,10 +38,10 @@ def query_range(
     tier: str | None = None,
     fill: str | None = None,  # None | 'locf' | 'linear'
     now: dt.date | None = None,
-    policy: dict | None = None,
 ) -> DataFrame:
     """Rolled-up points for [t0, t1), served from the finest tier the
-    retention ladder still holds for the range (or an explicit tier).
+    DEFAULT_POLICY retention ladder still holds for the range (or an
+    explicit tier).
 
     Only the tier's date partitions inside the range are read;
     conv_id predicates push into the parquet scan. Gap-fill, when asked,
@@ -50,7 +50,7 @@ def query_range(
     if tier is None:
         start_date = dt.date.fromisoformat(t0[:10])
         tier = finest_available_tier(
-            output_root, start_date, now or dt.date.today(), policy or DEFAULT_POLICY
+            output_root, start_date, now or dt.date.today(), DEFAULT_POLICY
         )
         if tier is None:
             raise ValueError(f"no tier retains data at {t0}")

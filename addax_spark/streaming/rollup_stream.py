@@ -21,6 +21,9 @@ from pyspark.sql import functions as F
 from ..operators.bucketize import TIERS
 from ..schema import TRANSCRIPTS
 
+#: event-time lateness a streaming bucket waits for before it closes
+WATERMARK = "10 minutes"
+
 
 def read_transcript_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int = 10
@@ -32,19 +35,15 @@ def read_transcript_stream(
     )
 
 
-def stream_rollup(
-    stream: DataFrame,
-    tier: str = "1m",
-    watermark: str = "10 minutes",
-    key: str = "conv_id",
-) -> DataFrame:
-    """Windowed continuous aggregate over an unbounded transcript stream."""
+def stream_rollup(stream: DataFrame, tier: str = "1m") -> DataFrame:
+    """Windowed continuous aggregate over an unbounded transcript stream;
+    late turns count while within WATERMARK of the latest event time."""
     v = F.length("text").cast("long")
     step = TIERS[tier]
     last = F.max(F.struct(F.col("ts"), F.col("turn_idx"), F.col("text"))).alias("_last")
     out = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(key, F.window("ts", f"{step} seconds").alias("w"))
+        stream.withWatermark("ts", WATERMARK)
+        .groupBy("conv_id", F.window("ts", f"{step} seconds").alias("w"))
         .agg(
             F.count(F.lit(1)).alias("turn_count"),
             F.sum(v).alias("sum_len"),
@@ -54,7 +53,7 @@ def stream_rollup(
         )
     )
     return out.select(
-        key,
+        "conv_id",
         F.col("w.start").alias("bucket_start"),
         "turn_count",
         "sum_len",
@@ -98,12 +97,11 @@ def run_to_parquet(
     src_path: str,
     out_path: str,
     checkpoint_path: str,
-    tier: str = "1m",
-    watermark: str = "10 minutes",
     max_files_per_trigger: int = 10,
     await_seconds: float | None = None,
 ):
-    """The production sink path: append-mode parquet with a checkpoint.
+    """The production sink path: the 1m tier, append-mode parquet with a
+    checkpoint.
     Executors write finalized buckets straight to files — nothing
     accumulates driver-side (the memory-sink harness is a driver bottleneck
     at scale), and the checkpoint makes the stream resumable exactly-once:
@@ -117,16 +115,14 @@ def run_to_parquet(
     watermark at end-of-input stay in state until more data (or a restart
     with later data) advances the watermark; a drain-style caller that
     needs the tail flushed appends one sentinel row past
-    max(ts) + watermark (the test does exactly that). On a real cluster
+    max(ts) + WATERMARK (the test does exactly that). On a real cluster
     the same code writes to an Iceberg table via toTable().
 
     Returns the StreamingQuery; awaits termination (fully with
     availableNow semantics when ``await_seconds`` is None, else at most
     that many seconds — the kill-mid-drain hook)."""
     q = (
-        stream_rollup(
-            read_transcript_stream(spark, src_path, max_files_per_trigger), tier, watermark
-        )
+        stream_rollup(read_transcript_stream(spark, src_path, max_files_per_trigger))
         .writeStream.format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint_path)

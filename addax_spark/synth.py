@@ -41,7 +41,6 @@ def transcripts(
     n_convs: int = 100,
     avg_turns: int = 40,
     seed: int = 42,
-    with_edge_cases: bool = True,
     partitions: int | None = None,
 ) -> DataFrame:
     """Generate a deterministic transcripts DataFrame.
@@ -50,7 +49,8 @@ def transcripts(
     avg_turns; cold convs get avg_turns/2 + hash % avg_turns (mean ~avg).
     Timestamps: per-conv start in the first day of 2025 + cumulative
     deterministic inter-turn gaps of 1..300s, with injected multi-minute
-    holes on every 7th turn of every 5th conversation.
+    holes on every 7th turn of every 5th conversation. The fixed edge-case
+    rows of :func:`_edge_cases` are always appended.
     """
     s = F.lit(seed)
     n_hot = max(1, n_convs // 100) if n_convs >= 100 else 0
@@ -123,10 +123,7 @@ def transcripts(
         )
         .select("conv_id", "turn_idx", "role", "text", "tool", "ts")
     )
-
-    if with_edge_cases:
-        df = df.unionByName(_edge_cases(spark))
-    return df
+    return df.unionByName(_edge_cases(spark))
 
 
 def _edge_cases(spark: SparkSession) -> DataFrame:
@@ -151,49 +148,4 @@ def _edge_cases(spark: SparkSession) -> DataFrame:
     )
     return df.select(
         "conv_id", "turn_idx", "role", "text", "tool", F.to_timestamp("ts_s").alias("ts")
-    )
-
-
-def planted_embeddings(
-    spark: SparkSession,
-    n_clusters: int = 8,
-    per_cluster: int = 100,
-    dim: int = 32,
-    noise: float = 0.12,
-) -> DataFrame:
-    """Deterministic CLUSTERED embedding corpus — the planted-neighbor
-    fixture for characterizing approximate-ANN recall at a realistic
-    geometry (VERDICT r4 item 3). The driver's embeddings table is
-    near-uniform on the sphere (top-1 cosine ~0.37) — IVF's documented
-    worst case — so approximate operating points need a corpus where true
-    neighbors are *planted*: md5-seeded unit cluster centers, each vector =
-    normalize(center + noise * md5-seeded gaussian). At the default
-    noise=0.12 (per-dim sigma; vector-norm noise ~0.12*sqrt(dim)) the
-    intra-cluster cosine is ~0.69 and cross-cluster ~0.03, so every
-    vector's true top-k live in its own cluster by construction — the
-    geometry of a real paraphrase/near-dup embedding cluster.
-
-    Pure driver-side numpy (no RNG state, reproducible anywhere) — a test
-    fixture and tuning aid, not a data path; scale corpora come from real
-    tables.
-    """
-    import hashlib
-
-    import numpy as np
-
-    def seeded(tag: str, shape):
-        seed = int.from_bytes(hashlib.md5(tag.encode()).digest()[:8], "big")
-        return np.random.RandomState(seed % (2**32)).standard_normal(shape)
-
-    centers = seeded("planted:centers", (n_clusters, dim))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    rows = []
-    for c in range(n_clusters):
-        noise_mat = seeded(f"planted:noise:{c}", (per_cluster, dim))
-        V = centers[c][None, :] + noise * noise_mat
-        V /= np.linalg.norm(V, axis=1, keepdims=True)
-        for i in range(per_cluster):
-            rows.append((c * per_cluster + i, c, [float(x) for x in V[i]]))
-    return spark.createDataFrame(
-        rows, "vec_id long, cluster int, embedding array<float>"
     )

@@ -46,7 +46,6 @@ def main() -> None:
     ap.add_argument("--suffix", default="", help="suffix for plan files (_before/_after)")
     ap.add_argument("--pipeline", type=int, default=0,
                     help="time run_job at ~N synthetic turns instead of queries")
-    ap.add_argument("--salted", action="store_true", help="pipeline: salted_writes=True")
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
@@ -73,15 +72,13 @@ def main() -> None:
         run_job(spark, RollupJobSpec(f"{work}/warm.parquet", f"{work}/warm_out", job_id="warm"))
         walls = []
         for i in range(args.repeats):
-            sc.setJobDescription(f"pipeline rep{i} salted={args.salted}")
+            sc.setJobDescription(f"pipeline rep{i}")
             t0 = time.time()
-            s = run_job(spark, RollupJobSpec(
-                raw, f"{work}/out{i}", job_id=f"bx{i}", salted_writes=args.salted))
+            s = run_job(spark, RollupJobSpec(raw, f"{work}/out{i}", job_id=f"bx{i}"))
             walls.append(round(time.time() - t0, 3))
             print(json.dumps({"rep": i, "wall": walls[-1], "phases": s.get("phases")}),
                   flush=True)
-        print(json.dumps({"pipeline_walls": walls, "min": min(walls),
-                          "salted": args.salted, "turns": args.pipeline}))
+        print(json.dumps({"pipeline_walls": walls, "min": min(walls), "turns": args.pipeline}))
         import shutil
 
         shutil.rmtree(work, ignore_errors=True)

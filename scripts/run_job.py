@@ -4,8 +4,7 @@
     zip -r rollup.zip addax_spark
     spark-submit --master <cluster> --py-files rollup.zip \
         scripts/run_job.py --input <transcripts> --output <root> \
-        [--job-id my-job] [--tiers 1m,5m,1h,1d] [--chunk-tier 1d] \
-        [--partitions N]
+        [--job-id my-job] [--tiers 1m,5m,1h,1d] [--chunk-tier 1d]
 
 Prints the job's metrics summary as one JSON line.
 
@@ -28,7 +27,6 @@ def main() -> None:
     ap.add_argument("--job-id", default="")
     ap.add_argument("--tiers", default="1m,5m,1h,1d")
     ap.add_argument("--chunk-tier", default="1d")
-    ap.add_argument("--partitions", type=int, default=None)
     args = ap.parse_args()
 
     from addax_spark.job import RollupJobSpec, run
@@ -41,7 +39,6 @@ def main() -> None:
         tiers=args.tiers.split(","),
         chunk_tier=args.chunk_tier,
         job_id=args.job_id,
-        n_partitions=args.partitions,
     )
     summary = run(spark, spec)
     print(json.dumps(summary))

@@ -66,6 +66,51 @@ def test_every_module_has_a_non_test_caller():
     assert not orphans, orphans
 
 
+def _options() -> dict[tuple[str, str, str], int | None]:
+    """Every option of the package: a defaulted parameter (positional or
+    keyword-only) of a module-level function without a leading ``_``,
+    keyed (module, function, parameter), valued by its position (None for
+    keyword-only)."""
+    out = {}
+    for path in PKG.rglob("*.py"):
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+                continue
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            for i in range(len(pos) - len(a.defaults), len(pos)):
+                out[(_module_name(path), fn.name, pos[i].arg)] = i
+            for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+                if default is not None:
+                    out[(_module_name(path), fn.name, arg.arg)] = None
+    return out
+
+
+def test_every_public_option_is_set_by_a_caller():
+    """An option no call passes, by position or keyword, from the package,
+    the scripts, the benchmarks, the driver entry or the tests only ever
+    takes its default: it is a constant. Calls are matched by function
+    name; a call with ``*args`` or ``**kwargs`` counts as passing all."""
+    passed: set[tuple[str, str]] = set()
+    for path in [*CALLERS, ROOT / "bench_extra.py", *(ROOT / "tests").glob("*.py")]:
+        for call in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(call, ast.Call):
+                continue
+            name = getattr(call.func, "id", getattr(call.func, "attr", None))
+            if any(isinstance(x, ast.Starred) for x in call.args) or any(
+                k.arg is None for k in call.keywords
+            ):
+                passed.add((name, "*"))
+            passed |= {(name, k.arg) for k in call.keywords}
+            passed |= {(name, i) for i in range(len(call.args))}
+    unset = sorted(
+        f"{mod}.{fn}({arg})"
+        for (mod, fn, arg), i in _options().items()
+        if not {(fn, "*"), (fn, arg), (fn, i)} & passed
+    )
+    assert not unset, f"{len(unset)} options no caller sets: {unset}"
+
+
 def test_run_job_script_matches_job_run(spark, tmp_path, monkeypatch, capsys):
     """scripts/run_job.py, run as spark-submit would, prints job.run's
     summary; the removed --config mode is an argparse usage error."""

@@ -157,6 +157,26 @@ def test_property_roundtrip(gaps, rnd):
     roundtrip(t, v)
 
 
+@pytest.mark.parametrize(
+    "offsets, n_values",
+    [
+        ([0, 4, 8], 10),  # stops short of the points
+        ([0, 4, 12], 10),  # runs past them
+        ([2, 4, 10], 10),  # does not start at 0
+        ([0, 6, 4, 10], 10),  # decreasing
+        ([], 10),  # no offsets at all
+        ([0, 4, 10], 9),  # values shorter than timestamps
+    ],
+    ids=["short", "past_end", "nonzero_start", "decreasing", "empty", "short_values"],
+)
+def test_encode_many_rejects_offsets_not_spanning_input(offsets, n_values):
+    """Offsets that do not rise from 0 to the point count are refused with
+    an error naming ``offsets``, not a numpy failure deep in the encoder."""
+    ts = np.arange(10, dtype=np.int64) * 1_000_000
+    with pytest.raises(ValueError, match="offsets"):
+        encode_many(ts, np.ones(n_values), np.asarray(offsets, dtype=np.int64))
+
+
 def test_spark_chunk_roundtrip(spark):
     from addax_spark import synth
     from pyspark.sql import functions as F
@@ -212,3 +232,43 @@ def test_encode_chunks_large_chunks_use_encode_many(spark, monkeypatch):
     assert back.exceptAll(orig).count() == 0
     assert orig.exceptAll(back).count() == 0
     chunks.unpersist()
+
+
+def test_encode_chunks_groups_spanning_arrow_batches(spark):
+    """With 7-row Arrow batches most (conv_id, chunk) groups span several
+    batches; the chunk table is the one the default batch size gives."""
+    from addax_spark import synth
+    from addax_spark.schema import CHUNKS
+    from pyspark.sql import functions as F
+
+    df = synth.transcripts(spark, n_convs=20, avg_turns=25).withColumn(
+        "value", F.length("text").cast("double")
+    )
+
+    def chunks():
+        return encode_chunks(df, order_cols=["ts", "turn_idx"]).localCheckpoint()
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = chunks()
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        small = chunks()
+    finally:
+        spark.conf.set(key, old)
+    assert small.filter(F.col("n_points") > 7).count() > 0
+    assert small.columns == default.columns == CHUNKS.fieldNames()
+    assert small.exceptAll(default).count() == 0
+    assert default.exceptAll(small).count() == 0
+
+
+def test_encode_chunks_partitions_follow_scheduler_parallelism(spark):
+    """The encode's conv_id shuffle has the tier shuffle's partition count,
+    2x the scheduler's parallelism (16 in the local[8] test session), not
+    spark.sql.shuffle.partitions (8 there)."""
+    from addax_spark import synth
+
+    df = synth.transcripts(spark, n_convs=8, avg_turns=10).withColumnRenamed("turn_idx", "value")
+    n = spark.sparkContext.defaultParallelism * 2
+    assert n != int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert encode_chunks(df).rdd.getNumPartitions() == n

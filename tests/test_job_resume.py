@@ -111,14 +111,19 @@ def test_failed_write_marks_units_failed_and_resumes(spark, raw_path, tmp_path_f
     assert res["rows_read"] == spark.read.parquet(raw_path).count()
 
 
-def test_salted_writes_knob_identical_output(spark, raw_path, tmp_path_factory):
-    """salted_writes=True (pre-r5 bounded-fan-in topology) and the default
-    shuffle-free write produce identical tier tables, and the salted layout
+def test_salted_writes_knob_identical_output(spark, raw_path, tmp_path_factory, monkeypatch):
+    """Salted writes (the bounded-fan-in topology job.run picks at
+    scheduler parallelism >= _SALTED_MIN_CORES, selected here by lowering
+    that threshold to 1) and the shuffle-free write this local[8] session
+    gets otherwise produce identical tier tables, and the salted layout
     honors the files-per-directory bound."""
+    from addax_spark import job
+
     out_u = str(tmp_path_factory.mktemp("job_unsalted"))
     out_s = str(tmp_path_factory.mktemp("job_salted"))
     run(spark, RollupJobSpec(raw_path, out_u, job_id="u"))
-    run(spark, RollupJobSpec(raw_path, out_s, job_id="s", salted_writes=True))
+    monkeypatch.setattr(job, "_SALTED_MIN_CORES", 1)
+    run(spark, RollupJobSpec(raw_path, out_s, job_id="s"))
     for tier in ["1m", "1d"]:
         a, b = _table(spark, out_u, tier), _table(spark, out_s, tier)
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, tier
@@ -325,7 +330,7 @@ def test_conservation_break_in_tiers_or_days_fails_batch(spark, raw_path, tmp_pa
     if stage == "tiers":
         colocate = job.colocate_by_series
         monkeypatch.setattr(job, "colocate_by_series",
-                            lambda df, n: colocate(df.filter(F.col("conv_id") != "edge-single"), n))
+                            lambda df: colocate(df.filter(F.col("conv_id") != "edge-single")))
     else:
         first = spark.read.parquet(raw_path).select(F.min(F.to_date("ts"))).first()[0]
         shift = F.when(F.to_date("ts") == F.lit(first), F.col("ts") + F.expr("INTERVAL 1 DAY"))

@@ -5,6 +5,7 @@ dupes."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from addax_spark.operators import dedup, similarity, transforms as tf
@@ -282,6 +283,51 @@ def test_stratified_sample_deterministic(spark):
     assert c != {r.doc_id for r in a}
 
 
+def planted_embeddings(
+    spark: SparkSession,
+    n_clusters: int = 8,
+    per_cluster: int = 100,
+    dim: int = 32,
+    noise: float = 0.12,
+) -> DataFrame:
+    """Deterministic CLUSTERED embedding corpus — the planted-neighbor
+    fixture for characterizing approximate-ANN recall at a realistic
+    geometry (VERDICT r4 item 3). The driver's embeddings table is
+    near-uniform on the sphere (top-1 cosine ~0.37) — IVF's documented
+    worst case — so approximate operating points need a corpus where true
+    neighbors are *planted*: md5-seeded unit cluster centers, each vector =
+    normalize(center + noise * md5-seeded gaussian). At the default
+    noise=0.12 (per-dim sigma; vector-norm noise ~0.12*sqrt(dim)) the
+    intra-cluster cosine is ~0.69 and cross-cluster ~0.03, so every
+    vector's true top-k live in its own cluster by construction — the
+    geometry of a real paraphrase/near-dup embedding cluster.
+
+    Pure driver-side numpy (no RNG state, reproducible anywhere) — a test
+    fixture and tuning aid, not a data path; scale corpora come from real
+    tables.
+    """
+    import hashlib
+
+    import numpy as np
+
+    def seeded(tag: str, shape):
+        seed = int.from_bytes(hashlib.md5(tag.encode()).digest()[:8], "big")
+        return np.random.RandomState(seed % (2**32)).standard_normal(shape)
+
+    centers = seeded("planted:centers", (n_clusters, dim))
+    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+    rows = []
+    for c in range(n_clusters):
+        noise_mat = seeded(f"planted:noise:{c}", (per_cluster, dim))
+        V = centers[c][None, :] + noise * noise_mat
+        V /= np.linalg.norm(V, axis=1, keepdims=True)
+        for i in range(per_cluster):
+            rows.append((c * per_cluster + i, c, [float(x) for x in V[i]]))
+    return spark.createDataFrame(
+        rows, "vec_id long, cluster int, embedding array<float>"
+    )
+
+
 def test_ann_recall_on_planted_neighbors(spark):
     """Approximate-ANN recall at a REALISTIC clustered geometry (VERDICT r4
     item 3): the driver's embeddings table is near-uniform on the sphere —
@@ -298,7 +344,6 @@ def test_ann_recall_on_planted_neighbors(spark):
     - IVF nc=16 nprobe=2 — over-partitioned clusters, 2 probes: == 1.0.
     - LSH 4 planes x 12 tables: >= 0.95 (measured 0.9917)."""
     from addax_spark.operators import similarity as sim
-    from addax_spark.synth import planted_embeddings
 
     corpus = planted_embeddings(spark, n_clusters=8, per_cluster=100, dim=32)
     queries = corpus.filter(F.col("vec_id") % 100 < 3).select(
