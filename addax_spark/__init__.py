@@ -16,16 +16,18 @@ Core input shape (BASELINE.json input_hint):
 Modules
 -------
 - session        SparkSession factory with scale-tuned defaults
-- schema         canonical StructTypes for transcripts / tier / chunk / manifest
+- schema         canonical StructTypes for transcripts / tier / chunk tables
 - synth          deterministic (seeded, hash-based) transcript generator
 - operators/     bucketize, rollup (tier cascade), gapfill (LOCF/linear),
                  gorilla (delta-of-delta + XOR codec), dedup, similarity,
                  text analysis, record transformers
-- plans/         partitioning policy (hash(conv_id) x bucket), splits
+- plans/         partitioning policy: hash(conv_id) series colocation,
+                 spreading under-partitioned scans
 - streaming/     Structured Streaming rollup + stateful per-conversation state
 - fs             the one filesystem layer for output paths (Hadoop FS API)
 - manifest       per-partition checkpoint + lineage/metrics table, resume
 - retention      tier aging / partition rewrite / compaction
+- serving        range queries from the finest tier on disk, chunk point reads
 - job            RollupJobSpec driver: the one pipeline, ``job.run``
                  (spark-submit entry: scripts/run_job.py)
 """

@@ -241,7 +241,7 @@ def _gorilla_chunks_build(spark: SparkSession, sf_dir: str) -> str:
             F.col("value"),
         )
         _gorilla.encode_chunks(
-            pts, value="value", chunk_tier="1d", order_cols=["ts", "turn_idx"]
+            pts, value="value", order_cols=["ts", "turn_idx"]
         ).write.parquet(f"{scratch}/chunks")
 
     return f"{_build_once('chunks', sf_dir, build)}/chunks"
@@ -1044,7 +1044,7 @@ def streaming_rollup_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
     # files — each batch re-sorts/re-aggregates ALL state in complete mode,
     # so batch count is a quadratic-ish term (r6; was default 10 -> 7
     # batches at sf0.1)
-    run_to_memory(spark, raw, name=name, tier="1m", max_files_per_trigger=32)
+    run_to_memory(spark, raw, name=name, max_files_per_trigger=32)
     return spark.table(name)
 
 
@@ -1244,8 +1244,9 @@ def retention_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retention + ladder serving, driver-checked: expire() drops written 1m
     partitions past their 30-day horizon (idempotent, fixed `now`), then
     query_range with tier=None must route the pre-horizon window to the 5m
-    tier — the oracle recomputes those 5m buckets from raw, so the ladder
-    pick AND the surviving tier's content are both verified. Runs against a
+    tier, the finest one still holding it on disk — the oracle recomputes
+    those 5m buckets from raw, so the ladder pick AND the surviving tier's
+    content are both verified. Runs against a
     private snapshot of the serving build: expire() deletes partitions, and
     mutating the shared build would make other entries' results depend on
     entry execution order."""
@@ -1258,7 +1259,7 @@ def retention_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     now = _dt.date.fromisoformat(RETENTION_NOW)
     expire(out, now)
     lo, hi = RETENTION_WINDOW
-    return query_range(spark, out, lo, hi, tier=None, now=now)
+    return query_range(spark, out, lo, hi, tier=None)
 
 
 def oracle_retention_ladder_sql() -> str:

@@ -5,8 +5,8 @@ sync: the Spark expression and the SQL fragment compute identical values, so
 driver oracles and engine queries can share definitions. Hashing is
 md5-based (both engines agree on md5 hex) — a 60-bit integer is taken from
 the first 15 hex chars. xxhash64 would be faster Spark-side but has no
-DuckDB twin; at cluster scale swap PORTABLE_HASH=False paths in (documented
-trade-off, not a semantic change).
+DuckDB twin, so md5 is the one hash (a documented trade-off: portability to
+the oracle over raw hashing speed).
 """
 
 from __future__ import annotations

@@ -33,7 +33,7 @@ import time
 import uuid
 from collections import defaultdict
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -44,7 +44,7 @@ from . import fs
 from .manifest import Manifest, UnitMetrics
 from .operators.bucketize import TIER_ORDER
 from .operators.gorilla import encode_chunks
-from .operators.rollup import rollup_tiers
+from .operators.rollup import VALUE_EXPR, rollup_tiers
 from .plans.partitioning import colocate_by_series
 from .schema import ROLLUP
 
@@ -55,8 +55,6 @@ _WRITE_SALT = 8
 #: (warm mins 45.0 vs 40.1 s: one file per writer task x date of small-file
 #: churn dominates)
 _SALTED_MIN_CORES = 16
-#: the series value every tier aggregates and the chunk codec encodes
-_VALUE_EXPR = "length(text)"
 #: the total order of points within one series
 _ORDER_COLS = ["ts", "turn_idx"]
 
@@ -65,8 +63,6 @@ _ORDER_COLS = ["ts", "turn_idx"]
 class RollupJobSpec:
     input_path: str
     output_root: str
-    tiers: list[str] = field(default_factory=lambda: list(TIER_ORDER))
-    chunk_tier: str = "1d"
     job_id: str = ""
     max_units: int | None = None  # for tests: stop after N units (resume later)
     # days per checkpoint batch: one dynamic-partition-overwrite write set
@@ -213,10 +209,9 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
         try:
             # chunk pipeline: the Python-worker encode streams straight into
             # its writer
-            pts = sl.select("conv_id", *_ORDER_COLS, F.expr(_VALUE_EXPR).cast("double").alias("value"))
+            pts = sl.select("conv_id", *_ORDER_COLS, F.expr(VALUE_EXPR).cast("double").alias("value"))
             chunks = encode_chunks(
                 _observe_checksum(pts, o_rows, weights, "ts", "rows", F.lit(1)),
-                chunk_tier=spec.chunk_tier,
                 order_cols=_ORDER_COLS,
             )
             # exact per-day sums only over the chunks (one row per series-day)
@@ -229,13 +224,13 @@ def run(spark: SparkSession, spec: RollupJobSpec) -> dict:
             # 1m aggregate and the all-tier merge are exchange-free above it
             # (plan-asserted in tests/test_rollup_parity.py), and coarser
             # tiers merge 1m partials, never raw rows
-            tiers = rollup_tiers(colocate_by_series(sl), spec.tiers, value=F.expr(_VALUE_EXPR))
+            tiers = rollup_tiers(colocate_by_series(sl))
             # schema.ROLLUP is the on-disk contract serving reads with; the
             # casts are no-ops (optimized away) for TRANSCRIPTS-typed input
             tiers = tiers.select(
                 *[F.col(f.name).cast(f.dataType).alias(f.name) for f in ROLLUP.fields], "tier"
             )
-            finest = F.when(F.col("tier") == spec.tiers[0], F.col("turn_count"))
+            finest = F.when(F.col("tier") == TIER_ORDER[0], F.col("turn_count"))
             tiers = _observe_checksum(tiers, o_tiers, weights, "bucket_start", "turns", finest)
             # the two write actions run on writer threads so each one's
             # serial segments (driver planning, output commit, straggler

@@ -29,8 +29,6 @@ K_HASHES = 64
 BANDS = 32  # r = K/BANDS = 2 rows per band
 #: hash-partitioned blocks of the exact embedding pair grid
 N_BLOCKS = 16
-#: width of the embedding column the LSH hyperplanes are drawn for
-EMBEDDING_DIM = 64
 #: min-label propagation rounds before dedup_clusters gives up: near-dup
 #: clusters are shallow, their diameter is far below this
 MAX_ITERS = 20
@@ -627,20 +625,16 @@ def embedding_lsh_pairs(
     fold now runs only on the O(dup) survivors. Measured 12.4 -> ~1 s at
     sf0.1.)
 
-    Hyperplanes are md5-seeded (similarity._hyperplanes_for_table) —
-    deterministic across runs/executors, so recall on a given corpus is a
+    Hyperplanes are md5-seeded (similarity.lsh_buckets) — deterministic
+    across runs/executors, so recall on a given corpus is a
     fixed, testable number (asserted against the exact path in tests).
     """
     import numpy as np
     import pandas as pd
 
-    from .similarity import _hyperplanes_for_table
+    from .similarity import lsh_buckets
 
     margin = threshold - 1e-6
-    planes_all = np.concatenate(
-        [_hyperplanes_for_table(EMBEDDING_DIM, n_planes, t) for t in range(n_tables)]
-    )
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
     id_t = df.schema["vec_id"].dataType.simpleString()
 
     def bucketize(batches):
@@ -649,7 +643,7 @@ def embedding_lsh_pairs(
                 continue
             V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            bits = (V @ planes_all.T) > 0
+            b = lsh_buckets(V, n_planes, n_tables)
             ids = pdf["vec_id"].to_numpy()
             out = []
             for t in range(n_tables):
@@ -659,7 +653,7 @@ def embedding_lsh_pairs(
                             "vec_id": ids,
                             "nv": list(Vn),
                             "tbl": t,
-                            "bucket": bits[:, t * n_planes : (t + 1) * n_planes] @ weights,
+                            "bucket": b[:, t],
                         }
                     )
                 )

@@ -424,11 +424,12 @@ def decode(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
 def encode_chunks(
     df: DataFrame,
     value: Column | str = "value",
-    chunk_tier: str = "1d",
     order_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Compress a point series into one Gorilla blob per (conv_id, chunk
-    bucket), its points ordered by ``order_cols`` (default ``ts``).
+    """Compress a point series into one Gorilla blob per (conv_id, day),
+    its points ordered by ``order_cols`` (default ``ts``). A chunk is one
+    day: the unit ``job.run`` splits on and ``serving.read_points`` prunes
+    on.
 
     One shuffle on conv_id (:func:`colocate_by_series`); the encode itself
     is a vectorized Arrow ``mapInPandas`` (numpy bit-packing — analog of the
@@ -438,12 +439,12 @@ def encode_chunks(
 
     At 100 TB the group count is (series x days) — massively parallel; hot
     conversations stay bounded because a chunk never exceeds one (conv_id,
-    tier bucket) group.
+    day) group.
     """
     vcol = F.col(value) if isinstance(value, str) else value
     pts = df.select(
         F.col("conv_id"),
-        bucket_start("ts", chunk_tier).alias("chunk_start"),
+        bucket_start("ts", "1d").alias("chunk_start"),
         F.unix_micros(F.col("ts").cast("timestamp")).alias("_t"),
         vcol.cast("double").alias("_v"),
         *[F.col(c).alias(f"_o{i}") for i, c in enumerate(order_cols or []) if c != "ts"],

@@ -32,21 +32,23 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import ROLLUP
-from .bucketize import TIER_ORDER, TIERS, bucket_start
+from .bucketize import TIER_ORDER, bucket_start
 
 #: columns of a tier table
 ROLLUP_COLS = ROLLUP.fieldNames()
+#: the series value every tier aggregates and the chunk codec encodes
+VALUE_EXPR = "length(text)"
 
 
-def rollup_from_raw(df: DataFrame, tier: str, value: Column | None = None) -> DataFrame:
+def rollup_from_raw(df: DataFrame, tier: str) -> DataFrame:
     """Aggregate raw transcripts into one tier directly.
 
-    ``value`` defaults to ``length(text)`` (int64 — keeps sum/avg exact).
+    The value is :data:`VALUE_EXPR` as int64 (keeps sum/avg exact).
     One shuffle on (conv_id, bucket); partial aggregation is map-side so the
     shuffle carries one row per (conv_id, bucket, map-partition), not raw
     turns.
     """
-    v = (value if value is not None else F.length("text")).cast("long")
+    v = F.expr(VALUE_EXPR).cast("long")
     ord_key = F.struct(F.col("ts"), F.col("turn_idx"))
     out = (
         df.withColumn("bucket_start", bucket_start("ts", tier))
@@ -99,10 +101,9 @@ def rollup_cascade_step(lower: DataFrame, tier: str) -> DataFrame:
     return _with_avg(out).select(*ROLLUP_COLS)
 
 
-def rollup_tiers(
-    df: DataFrame, tiers: list[str] | None = None, value: Column | None = None
-) -> DataFrame:
-    """Every tier from ONE plan, as one long table: ``ROLLUP_COLS + tier``.
+def rollup_tiers(df: DataFrame) -> DataFrame:
+    """Every tier of ``TIER_ORDER`` from ONE plan, as one long table:
+    ``ROLLUP_COLS + tier``.
 
     Raw rows are rolled up once into the finest tier; each finest-tier row
     is then exploded once per tier with its ``bucket_start`` floored to that
@@ -113,19 +114,14 @@ def rollup_tiers(
     both aggregates are exchange-free, so the whole plan has no exchange
     above that one — no per-tier cache, no per-tier action.
     """
-    tiers = tiers or TIER_ORDER
-    widths = [TIERS[t] for t in tiers]
-    assert all(b > a and b % a == 0 for a, b in zip(widths, widths[1:])), (
-        f"tiers must go finest-first, each width dividing the next: {tiers}"
-    )
     fan = F.inline(
         F.array(*[
             F.struct(F.lit(t).alias("tier"), bucket_start("bucket_start", t).alias("bucket_start"))
-            for t in tiers
+            for t in TIER_ORDER
         ])
     )
     out = (
-        rollup_from_raw(df, tiers[0], value)
+        rollup_from_raw(df, TIER_ORDER[0])
         .select("conv_id", fan, *ROLLUP_COLS[2:])
         .groupBy("conv_id", "tier", "bucket_start")
         .agg(*_merge_aggs())

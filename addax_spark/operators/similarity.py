@@ -19,6 +19,9 @@ deterministic, matching the oracle's list_reduce fold order.
 
 from __future__ import annotations
 
+import functools
+import hashlib
+
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -108,32 +111,28 @@ def _exact_rerank(cands: DataFrame, k: int) -> DataFrame:
 # ----------------------------------------------------------------- LSH / ANN
 
 
-def _hyperplanes_for_table(dim: int, n_planes: int, table: int) -> np.ndarray:
-    """Deterministic pseudo-random hyperplanes: md5-seeded standard normals
-    (no global RNG; same planes on every executor/run/table)."""
-    import hashlib
-
-    out = np.empty((n_planes, dim))
-    for p in range(n_planes):
-        seed = int.from_bytes(hashlib.md5(f"t{table}:plane:{p}".encode()).digest()[:8], "big")
-        rng = np.random.RandomState(seed % (2**32))
-        out[p] = rng.standard_normal(dim)
+@functools.lru_cache(maxsize=8)
+def _hyperplanes(dim: int, n_planes: int, n_tables: int) -> np.ndarray:
+    """Deterministic pseudo-random hyperplanes, table-major as one
+    (n_tables * n_planes, dim) matrix: md5-seeded standard normals (no global
+    RNG; same planes on every executor/run). A width-d plane is the first d
+    normals of its seed, so narrower corpora get prefixes of wider planes."""
+    out = np.empty((n_tables * n_planes, dim))
+    for t in range(n_tables):
+        for p in range(n_planes):
+            seed = int.from_bytes(hashlib.md5(f"t{t}:plane:{p}".encode()).digest()[:8], "big")
+            out[t * n_planes + p] = np.random.RandomState(seed % (2**32)).standard_normal(dim)
+    out.flags.writeable = False  # cached: every caller gets this one array
     return out
 
 
-def lsh_bucket(vec_col: str, planes: np.ndarray) -> Column:
-    """Sign-pattern bucket id: bit p = (v . plane_p) > 0. Pure column
-    expression — the dot products are literal-weighted sums (codegen)."""
-    v = _as_double(vec_col)
-    bucket = F.lit(0).cast("long")
-    for p, plane in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(v, F.array(*[F.lit(float(x)) for x in plane]), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(dot > 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0))
-    return bucket
+def lsh_buckets(V: np.ndarray, n_planes: int, n_tables: int) -> np.ndarray:
+    """(rows, n_tables) sign-pattern bucket ids of the rows of ``V``: bit p of
+    table t's id is (v . plane_p) > 0, over planes as wide as ``V``. Every
+    table's bits come from ONE matmul: a codegen'd literal-array fold per
+    plane spent ~9s in codegen/planning alone at 12 tables."""
+    bits = (V @ _hyperplanes(V.shape[1], n_planes, n_tables).T) > 0
+    return bits.reshape(len(V), n_tables, n_planes) @ (1 << np.arange(n_planes, dtype=np.int64))
 
 
 def ann_lsh_topk(
@@ -142,7 +141,6 @@ def ann_lsh_topk(
     k: int = 10,
     n_planes: int = 4,
     n_tables: int = 12,
-    dim: int = 64,
 ) -> DataFrame:
     """Approximate top-k: candidates = corpus vectors sharing an LSH bucket
     with the query in ANY of n_tables hash tables; exact cosine re-rank.
@@ -156,15 +154,6 @@ def ann_lsh_topk(
     planes (smaller buckets) at the same recall."""
     import pandas as pd
 
-    # all tables' hyperplanes as one (n_tables*n_planes, dim) matrix: bucket
-    # bits for every table come from ONE numpy matmul per Arrow batch —
-    # replaces n_tables x n_planes codegen'd literal-array folds (the
-    # column-expression variant spent ~9s in codegen/planning alone at 12
-    # tables; lsh_bucket() remains for few-plane uses)
-    planes_all = np.concatenate(
-        [_hyperplanes_for_table(dim, n_planes, t) for t in range(n_tables)]
-    )
-
     def with_buckets(df: DataFrame, idc: str) -> DataFrame:
         vec_field = df.schema["embedding"].dataType.simpleString()
         id_field = df.schema[idc].dataType.simpleString()
@@ -174,18 +163,16 @@ def ann_lsh_topk(
                 if not len(pdf):
                     continue
                 V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-                bits = (V @ planes_all.T) > 0  # (n, n_tables*n_planes)
-                weights = (1 << np.arange(n_planes)).astype(np.int64)
+                b = lsh_buckets(V, n_planes, n_tables)
                 out = []
                 for t in range(n_tables):
-                    b = bits[:, t * n_planes : (t + 1) * n_planes] @ weights
                     out.append(
                         pd.DataFrame(
                             {
                                 idc: pdf[idc].to_numpy(),
                                 "embedding": pdf["embedding"].to_numpy(),
                                 "tbl": t,
-                                "bucket": b,
+                                "bucket": b[:, t],
                             }
                         )
                     )

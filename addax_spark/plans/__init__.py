@@ -1,4 +1,3 @@
-"""Physical planning helpers: partitioning policy and split math —
-the Spark-native replacement for the reference's channel planner
-(core/.../job/JobContainer.java:385-433) and range-split utilities
-(core/.../util/RangeSplitUtil.java)."""
+"""Physical planning helpers: the partitioning policy (series colocation,
+spreading under-partitioned scans) — the Spark-native replacement for the
+reference's channel planner (core/.../job/JobContainer.java:385-433)."""

@@ -15,9 +15,10 @@ pre/post SQL) — coarse, whole-table. Here retention is partition-surgical:
   (Iceberg rewrite_data_files analog): coalesce to ceil(bytes/target) files
   per partition via a per-partition overwrite.
 
-A query over a time range then reads the finest tier still inside its
-horizon — the standard continuous-aggregate retention ladder (e.g. raw 7d,
-1m 30d, 5m 90d, 1h 1y, 1d forever).
+A query over a time range then reads the finest tier that still holds it
+(``serving.query_range`` reads that from the partitions left on disk) — the
+standard continuous-aggregate retention ladder (e.g. raw 7d, 1m 30d, 5m
+90d, 1h 1y, 1d forever).
 """
 
 from __future__ import annotations
@@ -29,10 +30,10 @@ from pyspark.sql import functions as F
 
 from . import fs
 from .job import read_dates
-from .operators.bucketize import TIER_ORDER
 from .schema import ROLLUP
 
-#: tier -> days retained (None = keep forever); raw handled by ingest side
+#: expire()'s default: tier -> days retained (None = keep forever); raw
+#: handled by ingest side
 DEFAULT_POLICY: dict[str, int | None] = {"1m": 30, "5m": 90, "1h": 365, "1d": None}
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024
@@ -164,14 +165,3 @@ def compact(
     fs.delete(staged)
     return swapped
 
-
-def finest_available_tier(
-    output_root: str, query_date: dt.date, now: dt.date, policy: dict[str, int | None] | None = None
-) -> str | None:
-    """Which tier serves a date under the retention ladder (finest surviving)."""
-    policy = policy or DEFAULT_POLICY
-    for tier in TIER_ORDER:
-        days = policy.get(tier)
-        if days is None or query_date >= now - dt.timedelta(days=days):
-            return tier
-    return None

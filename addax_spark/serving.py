@@ -1,5 +1,5 @@
-"""Query-time serving over the rollup outputs: tier selection via the
-retention ladder, range reads of exactly the date partitions a query
+"""Query-time serving over the rollup outputs: tier selection from the
+tiers still on disk, range reads of exactly the date partitions a query
 covers (pinned schema, no inference job), optional gap-fill, and chunk
 decode for raw-resolution reads.
 
@@ -14,10 +14,12 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import fs
 from .job import read_dates
+from .operators.bucketize import TIER_ORDER, TIERS
 from .operators.gapfill import gapfill
 from .operators.gorilla import decode_chunks
-from .retention import DEFAULT_POLICY, finest_available_tier, tier_root
+from .retention import tier_root
 from .schema import CHUNKS, ROLLUP
 
 
@@ -37,23 +39,24 @@ def query_range(
     conv_ids: list[str] | None = None,
     tier: str | None = None,
     fill: str | None = None,  # None | 'locf' | 'linear'
-    now: dt.date | None = None,
 ) -> DataFrame:
-    """Rolled-up points for [t0, t1), served from the finest tier the
-    DEFAULT_POLICY retention ladder still holds for the range (or an
-    explicit tier).
+    """Rolled-up points for [t0, t1), served from an explicit tier or, with
+    ``tier=None``, from the finest tier still holding the range's start.
+
+    Coarser tiers age in as finer ones expire, so the ladder is read from
+    disk: the first tier of ``TIER_ORDER`` whose oldest ``date=`` is on or
+    before t0's date (or before the oldest date any tier holds, when t0
+    precedes them all). With no tier on disk it is ``TIER_ORDER[0]``, which
+    serves an empty frame.
 
     Only the tier's date partitions inside the range are read;
     conv_id predicates push into the parquet scan. Gap-fill, when asked,
     densifies exactly the requested window (aligned output across convs).
     """
     if tier is None:
-        start_date = dt.date.fromisoformat(t0[:10])
-        tier = finest_available_tier(
-            output_root, start_date, now or dt.date.today(), DEFAULT_POLICY
-        )
-        if tier is None:
-            raise ValueError(f"no tier retains data at {t0}")
+        oldest = {t: ds[0] for t in TIER_ORDER if (ds := fs.list_dates(tier_root(output_root, t)))}
+        start = max(t0[:10], min(oldest.values(), default=""))
+        tier = next((t for t, d in oldest.items() if d <= start), TIER_ORDER[0])
     df = read_dates(
         spark, tier_root(output_root, tier), ROLLUP, t0[:10], t1[:10]
     ).filter((F.col("bucket_start") >= t0) & (F.col("bucket_start") < t1))
@@ -66,8 +69,6 @@ def query_range(
         # when the ladder picked 1d) would otherwise miss every stored
         # bucket_start and return all-gap rows. Last spine bucket = the
         # bucket containing t1 - 1us (bucket_start strictly < t1).
-        from .operators.bucketize import TIERS
-
         step = TIERS[tier]
         df = gapfill(
             df,

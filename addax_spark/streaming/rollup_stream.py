@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.bucketize import TIERS
+from ..operators.rollup import VALUE_EXPR
 from ..schema import TRANSCRIPTS
 
 #: event-time lateness a streaming bucket waits for before it closes
@@ -35,11 +36,12 @@ def read_transcript_stream(
     )
 
 
-def stream_rollup(stream: DataFrame, tier: str = "1m") -> DataFrame:
-    """Windowed continuous aggregate over an unbounded transcript stream;
-    late turns count while within WATERMARK of the latest event time."""
-    v = F.length("text").cast("long")
-    step = TIERS[tier]
+def stream_rollup(stream: DataFrame) -> DataFrame:
+    """The 1m tier as a windowed continuous aggregate over an unbounded
+    transcript stream; late turns count while within WATERMARK of the
+    latest event time."""
+    v = F.expr(VALUE_EXPR).cast("long")
+    step = TIERS["1m"]
     last = F.max(F.struct(F.col("ts"), F.col("turn_idx"), F.col("text"))).alias("_last")
     out = (
         stream.withWatermark("ts", WATERMARK)
@@ -70,7 +72,6 @@ def run_to_memory(
     spark: SparkSession,
     src_path: str,
     name: str = "stream_rollup",
-    tier: str = "1m",
     max_files_per_trigger: int = 10,
 ) -> None:
     """Drain the source with availableNow and materialize into an in-memory
@@ -82,7 +83,7 @@ def run_to_memory(
     many-file source should batch coarsely unless the test needs fine
     batch boundaries."""
     q = (
-        stream_rollup(read_transcript_stream(spark, src_path, max_files_per_trigger), tier)
+        stream_rollup(read_transcript_stream(spark, src_path, max_files_per_trigger))
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")

@@ -50,7 +50,7 @@ def main() -> None:
         F.col("value"),
     )
     cap("gorilla_encode", _gorilla.encode_chunks(
-        pts, value="value", chunk_tier="1d", order_cols=["ts", "turn_idx"]))
+        pts, value="value", order_cols=["ts", "turn_idx"]))
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cap("embedding_lsh_pairs", _dedup.embedding_lsh_pairs(

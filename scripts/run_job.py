@@ -4,9 +4,10 @@
     zip -r rollup.zip addax_spark
     spark-submit --master <cluster> --py-files rollup.zip \
         scripts/run_job.py --input <transcripts> --output <root> \
-        [--job-id my-job] [--tiers 1m,5m,1h,1d] [--chunk-tier 1d]
+        [--job-id my-job]
 
-Prints the job's metrics summary as one JSON line.
+Writes every tier (1m/5m/1h/1d) and the one-day Gorilla chunks, and prints
+the job's metrics summary as one JSON line.
 
 The session builder only sets SQL conf when a master is supplied externally
 (SPARK_GRAFT_EXTERNAL_MASTER=1 or spark-submit), so the same script runs
@@ -25,8 +26,6 @@ def main() -> None:
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--job-id", default="")
-    ap.add_argument("--tiers", default="1m,5m,1h,1d")
-    ap.add_argument("--chunk-tier", default="1d")
     args = ap.parse_args()
 
     from addax_spark.job import RollupJobSpec, run
@@ -36,8 +35,6 @@ def main() -> None:
     spec = RollupJobSpec(
         input_path=args.input,
         output_root=args.output,
-        tiers=args.tiers.split(","),
-        chunk_tier=args.chunk_tier,
         job_id=args.job_id,
     )
     summary = run(spark, spec)

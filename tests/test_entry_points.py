@@ -70,10 +70,19 @@ def _options() -> dict[tuple[str, str, str], int | None]:
     """Every option of the package: a defaulted parameter (positional or
     keyword-only) of a module-level function without a leading ``_``,
     keyed (module, function, parameter), valued by its position (None for
-    keyword-only)."""
+    keyword-only); and a defaulted field of a module-level ``@dataclass``
+    without a leading ``_`` (e.g. ``RollupJobSpec``), keyed (module, class,
+    field), valued by its position in the generated constructor."""
     out = {}
     for path in PKG.rglob("*.py"):
         for fn in ast.parse(path.read_text()).body:
+            if isinstance(fn, ast.ClassDef) and not fn.name.startswith("_") and any(
+                getattr(d, "id", None) == "dataclass" for d in fn.decorator_list
+            ):
+                fields = [f for f in fn.body if isinstance(f, ast.AnnAssign)]
+                for i, f in enumerate(fields):
+                    if f.value is not None:
+                        out[(_module_name(path), fn.name, f.target.id)] = i
             if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
                 continue
             a = fn.args
@@ -89,8 +98,9 @@ def _options() -> dict[tuple[str, str, str], int | None]:
 def test_every_public_option_is_set_by_a_caller():
     """An option no call passes, by position or keyword, from the package,
     the scripts, the benchmarks, the driver entry or the tests only ever
-    takes its default: it is a constant. Calls are matched by function
-    name; a call with ``*args`` or ``**kwargs`` counts as passing all."""
+    takes its default: it is a constant. Calls are matched by function (or
+    dataclass) name; a call with ``*args`` or ``**kwargs`` counts as passing
+    all."""
     passed: set[tuple[str, str]] = set()
     for path in [*CALLERS, ROOT / "bench_extra.py", *(ROOT / "tests").glob("*.py")]:
         for call in ast.walk(ast.parse(path.read_text())):

@@ -184,7 +184,7 @@ def test_spark_chunk_roundtrip(spark):
     df = synth.transcripts(spark, n_convs=20, avg_turns=25).withColumn(
         "value", F.length("text").cast("double")
     )
-    chunks = encode_chunks(df, value="value", chunk_tier="1d", order_cols=["ts", "turn_idx"]).cache()
+    chunks = encode_chunks(df, value="value", order_cols=["ts", "turn_idx"]).cache()
     m = chunks.agg(
         F.sum("n_points").alias("pts"), F.sum("bytes_raw").alias("raw"), F.sum("bytes_enc").alias("enc")
     ).collect()[0]

@@ -76,23 +76,6 @@ def test_job_tiers_match_direct_rollup(spark, raw_path, tmp_path_factory):
         assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0, tier
 
 
-def test_job_tier_subset(spark, raw_path, tmp_path_factory):
-    """A job over a subset of tiers writes exactly those tiers, each equal
-    to the direct rollup."""
-    from addax_spark.operators.rollup import rollup_all_tiers
-
-    out = str(tmp_path_factory.mktemp("job_subset"))
-    run(spark, RollupJobSpec(raw_path, out, job_id="subset", tiers=["1m", "1h"]))
-    assert sorted(d for d in os.listdir(f"{out}/tiers") if d.startswith("tier=")) == [
-        "tier=1h", "tier=1m"
-    ]
-    direct = rollup_all_tiers(spark.read.parquet(raw_path))
-    for tier in ["1m", "1h"]:
-        got = _table(spark, out, tier)
-        exp = direct[tier]
-        assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0, tier
-
-
 def test_failed_write_marks_units_failed_and_resumes(spark, raw_path, tmp_path_factory):
     """A write that fails mid-batch raises after the other writer has
     finished, marks the batch's units failed (none done), and a rerun with
@@ -148,9 +131,12 @@ def test_retention_expire_and_compact(spark, raw_path, tmp_path_factory):
     assert fs.list_dates(retention.tier_root(out, "1m")) == dates[1:]
     assert fs.list_dates(retention.tier_root(out, "1d")) != []  # untouched
 
-    # the ladder: expired date served by a coarser tier
-    assert retention.finest_available_tier(out, dt.date.fromisoformat(dates[0]), now,
-                                           {"1m": 30, "5m": None, "1h": None, "1d": None}) == "5m"
+    # the ladder: the expired date is served by the next tier still holding it
+    t0, t1 = f"{dates[0]} 00:00:00", f"{dates[1]} 00:00:00"
+    got = serving.query_range(spark, out, t0, t1)
+    exp = serving.query_range(spark, out, t0, t1, tier="5m")
+    assert got.count() == exp.count() > 0
+    assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
 
     # compaction: same rows, fewer files
     root = retention.tier_root(out, "1h")

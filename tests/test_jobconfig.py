@@ -93,7 +93,7 @@ def test_parquet_reader_keeps_native_types(spark, tmp_path):
     raw = str(tmp_path / "typed_in.parquet")
     synth.transcripts(spark, n_convs=4, avg_turns=5).write.parquet(raw)
     out = str(tmp_path / "typed_out")
-    run(spark, RollupJobSpec(raw, out, job_id="typed", tiers=["1m"]))
+    run(spark, RollupJobSpec(raw, out, job_id="typed"))
     expected = {f.name: f.dataType.simpleString() for f in ROLLUP.fields}
     expected["date"] = "date"
     got = read_dates(spark, tier_root(out, "1m"), ROLLUP)

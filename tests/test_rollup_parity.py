@@ -123,14 +123,6 @@ def test_rollup_tiers_one_plan_single_exchange(spark, fixture_data):
         assert direct[tier].exceptAll(got).count() == 0, tier
 
 
-@pytest.mark.parametrize("tiers", [["5m", "1m"], ["1m", "1m"], ["1d", "1h", "5m"]])
-def test_rollup_tiers_rejects_bad_order(fixture_data, tiers):
-    from addax_spark.operators.rollup import rollup_tiers
-
-    with pytest.raises(AssertionError, match="finest-first"):
-        rollup_tiers(fixture_data, tiers)
-
-
 def test_entry_cascade_single_exchange(spark):
     """The driver-entry path (api.rollup_tier over events) plans ONE exchange
     for the full 4-tier cascade: transcripts_view windows by conv_id (an

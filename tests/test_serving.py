@@ -4,10 +4,13 @@ text-equality transport invariant."""
 
 from __future__ import annotations
 
+import datetime as dt
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
-from addax_spark import serving, synth
+from addax_spark import fs, retention, serving, synth
 from addax_spark.job import RollupJobSpec, run
 from addax_spark.operators.rollup import rollup_from_raw
 
@@ -34,19 +37,67 @@ def test_query_range_matches_direct_rollup(spark, served):
     assert got.exceptAll(exp).count() == 0
 
 
-def test_query_range_ladder_picks_coarser_tier(spark, served):
-    import datetime as dt
+def _same(a, b) -> bool:
+    return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
+
+def test_query_range_ladder_picks_coarser_tier(spark, served, tmp_path):
     raw, out = served
-    # "now" far in the future: 1m/5m/1h horizons all passed -> 1d serves
-    got = serving.query_range(
-        spark, out, "2025-01-01 00:00:00", "2025-01-03 00:00:00",
-        now=dt.date(2030, 1, 1),
-    )
+    # "now" far in the future: the default policy expires 1m/5m/1h -> 1d serves
+    copy = str(tmp_path / "expired")
+    shutil.copytree(out, copy)
+    retention.expire(copy, dt.date(2030, 1, 1))
+    got = serving.query_range(spark, copy, "2025-01-01 00:00:00", "2025-01-03 00:00:00")
     exp = rollup_from_raw(spark.read.parquet(raw), "1d").filter(
         F.col("bucket_start") < "2025-01-03"
     )
     assert got.count() == exp.count() > 0
+    assert _same(got, exp)
+
+
+def test_query_range_ladder_serves_5m_where_1m_expired(spark, served, tmp_path):
+    """Once expire() drops a day from 1m, tier=None serves that day from
+    5m, whatever today's date is."""
+    _, out = served
+    copy = str(tmp_path / "expired")
+    shutil.copytree(out, copy)
+    dates = fs.list_dates(retention.tier_root(copy, "1m"))
+    assert len(dates) > 1
+    # keep only the newest 1m day
+    dropped = retention.expire(copy, dt.date.fromisoformat(dates[-1]) + dt.timedelta(days=2),
+                               {"1m": 2})
+    assert dropped["1m"] == dates[:-1]
+    t0, t1 = f"{dates[0]} 00:00:00", f"{dates[1]} 00:00:00"
+    got = serving.query_range(spark, copy, t0, t1)
+    exp = serving.query_range(spark, copy, t0, t1, tier="5m")
+    assert got.count() == exp.count() > 0
+    assert _same(got, exp)
+
+
+def test_query_range_ladder_serves_finest_tier_on_disk(spark, served, tmp_path):
+    """A root holding only the 1h and 1d tiers serves tier=None from 1h."""
+    _, out = served
+    copy = str(tmp_path / "coarse")
+    shutil.copytree(out, copy)
+    for tier in ("1m", "5m"):
+        fs.delete(retention.tier_root(copy, tier))
+    t0, t1 = "2025-01-01 00:00:00", "2025-01-02 00:00:00"
+    got = serving.query_range(spark, copy, t0, t1)
+    exp = serving.query_range(spark, copy, t0, t1, tier="1h")
+    assert got.count() == exp.count() > 0
+    assert _same(got, exp)
+
+
+def test_query_range_ladder_nothing_expired_serves_1m(spark, served):
+    """With every tier holding every day, tier=None on an old day (and on a
+    range starting before the data) is the 1m tier, not 1d."""
+    _, out = served
+    for t0 in ("2025-01-01 00:00:00", "2024-12-01 00:00:00"):
+        t1 = "2025-01-02 00:00:00"
+        got = serving.query_range(spark, out, t0, t1)
+        exp = serving.query_range(spark, out, t0, t1, tier="1m")
+        assert got.count() == exp.count() > 0
+        assert _same(got, exp)
 
 
 def test_query_range_gapfill_alignment(spark, served):
@@ -164,11 +215,6 @@ def test_query_range_absent_partitions_serve_empty(spark, served, tmp_path, fill
     """A range whose tier partitions are gone (expired 1m day) or were never
     written (no tiers/ at all) is an empty answer with the served columns,
     not an error."""
-    import datetime as dt
-    import shutil
-
-    from addax_spark import retention
-
     _, out = served
     t0, t1 = "2025-01-01 10:00:00", "2025-01-01 12:00:00"
     cols = serving.query_range(spark, out, t0, t1, tier="1m", fill=fill).columns

@@ -22,7 +22,7 @@ def test_streaming_rollup_matches_batch(spark, tmp_path):
     a.coalesce(1).write.mode("append").parquet(src)
     b.coalesce(1).write.mode("append").parquet(src)
 
-    run_to_memory(spark, src, name="sr_test", tier="1m")
+    run_to_memory(spark, src, name="sr_test")
     got = spark.table("sr_test")
     exp = rollup_from_raw(df, "1m")
     assert got.count() == exp.count()

@@ -191,6 +191,17 @@ def test_embedding_lsh_recall_equals_exact(spark):
         assert lsh == exact, f"LSH recall < 1.0 on {d}"
 
 
+def test_embedding_lsh_pairs_width_from_corpus(spark):
+    """The LSH hyperplanes are as wide as the corpus vectors: a 32-dim corpus
+    gets its exact pair set too, not a matmul shape error."""
+    emb = planted_embeddings(spark, n_clusters=4, per_cluster=25, dim=32)
+    exact = {(r.id_a, r.id_b) for r in
+             dedup.embedding_cosine_pairs(emb, threshold=0.6).collect()}
+    lsh = {(r.id_a, r.id_b) for r in
+           dedup.embedding_lsh_pairs(emb, threshold=0.6, n_planes=3, n_tables=20).collect()}
+    assert exact and lsh == exact
+
+
 def test_dedup_clusters_multi_hop(spark):
     """Label propagation must close transitive chains: a-b, b-c, c-d is ONE
     component labeled by its min id, even though a and d share no pair."""
@@ -360,5 +371,5 @@ def test_ann_recall_on_planted_neighbors(spark):
     assert r_sub == 1.0, f"IVF sub-quadratic recall {r_sub}"
     r_2 = recall(sim.ann_ivf_topk(corpus, queries, k=10, n_centroids=16, nprobe=2))
     assert r_2 == 1.0, f"IVF nc=16 nprobe=2 recall {r_2}"
-    r_lsh = recall(sim.ann_lsh_topk(corpus, queries, k=10, n_planes=4, n_tables=12, dim=32))
+    r_lsh = recall(sim.ann_lsh_topk(corpus, queries, k=10, n_planes=4, n_tables=12))
     assert r_lsh >= 0.95, f"LSH recall {r_lsh}"
